@@ -202,7 +202,55 @@ object Versioned {
     * "this version folded batch N" with no window where the data and
     * the marker disagree. Returns the committed version number. */
   def commit(df: DataFrame, table: String, mode: String = "overwrite",
+      meta: Map[String, String] = Map.empty): Long =
+    commitRows(df, table, mode, meta, None)
+
+  /** [[commit]] with a bucketed physical layout: rows are split by
+    * `pmod(hash(bucketCol), numBuckets)` (Spark's Murmur3 `hash`, the
+    * same function [[graft.sources.GraftCatalog]] exposes as the V2
+    * `bucket` function) and each bucket lands in its own `gb-<id>`
+    * subdir of the fresh segment. The manifest declares the layout via
+    * [[BucketKey]] meta, and the catalog scan then reports
+    * KeyGroupedPartitioning — two tables committed with the SAME
+    * (column-name-modulo, numBuckets) spec join on that key with no
+    * exchange on either side. Appends must keep the base version's
+    * spec (checked); use plain [[commit]] to intentionally de-bucket.
+    *
+    * At 100 TB this is the difference between re-shuffling both sides
+    * of every fact-fact join and reading co-located buckets: the
+    * shuffle is paid ONCE at write time, then amortized over every
+    * subsequent join, like Hive/Spark `bucketBy` but on an open lake
+    * format with time travel (Iceberg's bucket partition transform is
+    * the public precedent). */
+  def commitBucketed(df: DataFrame, table: String, bucketCol: String,
+      numBuckets: Int, mode: String = "overwrite",
       meta: Map[String, String] = Map.empty): Long = {
+    require(numBuckets > 0 && numBuckets <= 100000,
+      s"numBuckets out of range: $numBuckets")
+    require(df.columns.map(_.toLowerCase(java.util.Locale.ROOT))
+      .contains(bucketCol.toLowerCase(java.util.Locale.ROOT)),
+      s"bucket column $bucketCol not in ${df.columns.mkString(",")}")
+    require(!bucketCol.contains('/') && !bucketCol.contains('=') &&
+      !bucketCol.contains('\n'), s"unencodable bucket column: $bucketCol")
+    // the V2 `bucket` function (GraftCatalog) must reproduce this
+    // layout's hash exactly; both sides support precisely these types
+    locally {
+      import org.apache.spark.sql.types._
+      val kt = df.schema.fields
+        .find(_.name.equalsIgnoreCase(bucketCol)).get.dataType
+      require(Seq(IntegerType, LongType, StringType, DateType,
+        TimestampType).contains(kt),
+        s"bucket column type ${kt.catalogString} not supported " +
+          "(int/bigint/string/date/timestamp)")
+    }
+    commitRows(df, table, mode, meta, Some((bucketCol, numBuckets)))
+  }
+
+  /** The body of [[commit]] and [[commitBucketed]] (`bucket` names the
+    * LOGICAL bucket column): enforce the append's schema against the
+    * latest version, stage the rows once, land them under [[Retry]]. */
+  private def commitRows(df: DataFrame, table: String, mode: String,
+      meta: Map[String, String], bucket: Option[(String, Int)]): Long = {
     require(mode == "overwrite" || mode == "append" || mode == "create",
       s"bad mode: $mode")
     require(meta.forall { case (k, v) =>
@@ -233,6 +281,17 @@ object Versioned {
         ColumnMapping.fromMeta(meta)
       else if (mode == "append") columnMapping(spark, table, baseV)
       else ColumnMapping.empty
+    // the bucket column is translated to its physical name (the
+    // declared layout is keyed in the physical space — rename of a
+    // bucket column is refused, so the two normally coincide)
+    val spec = bucket.map { case (c, n) => (mapping.physicalOf(c), n) }
+    for (v <- baseV if mode == "append"; (physCol, n) <- spec) {
+      val declared = parseBucketMeta(readMeta(spark, table, v))
+      require(declared.exists(d =>
+        d._1.equalsIgnoreCase(physCol) && d._2 == n),
+        s"append spec ($physCol/$n) does not match base " +
+          s"version $v bucket layout ${declared.getOrElse("<none>")}")
+    }
     val (physDf, carrier, union) = baseV match {
       case Some(v) if mode == "append" =>
         enforceAppend(spark, table, v, mapping.applyWrite(df))
@@ -241,8 +300,7 @@ object Versioned {
     // appends inherit the bloom-index declaration (like the carrier);
     // an overwrite is a fresh snapshot — redeclare to keep indexing
     val bloomMeta = baseV.filter(_ => mode == "append")
-      .map(v => readMeta(spark, table, v)
-        .view.filterKeys(_ == BloomIndex.MetaKey).toMap)
+      .map(metaKeys(spark, table, _, BloomIndex.MetaKey))
       .getOrElse(Map.empty)
     // invariants are DUTIES, not layout: they survive overwrite too
     // (drop one explicitly via dropInvariant), and every incoming row
@@ -250,30 +308,14 @@ object Versioned {
     // commit refuses before the manifest ever references them
     val invMeta = baseV
       .filter(_ => !meta.contains(Invariants.MetaKey))
-      .map(v => readMeta(spark, table, v)
-        .view.filterKeys(_ == Invariants.MetaKey).toMap)
+      .map(metaKeys(spark, table, _, Invariants.MetaKey))
       .getOrElse(Map.empty)
     commitTestHook()
-    val newLines = writeSegmentLines(spark, fs, root, physDf)
-    enforceStaged(spark, fs, root, newLines,
-      Invariants.decode(meta ++ invMeta), s"$mode commit", mapping)
-    val committed =
-      try commitRowsWithContract(spark, fs, root, table,
-        meta ++ mapping.toMeta ++ bloomMeta ++ invMeta ++ carrier,
-        baseV, mode, newLines, mapping, { base =>
-          if (mode == "create" && base.isDefined)
-            throw new CreateConflict(table) // lost the create race
-          val prevLines =
-            if (mode == "append")
-              base.toSeq.flatMap(v => readFileLines(fs, root, v))
-            else Nil
-          prevLines ++ newLines
-        })
-      catch {
-        case e: CreateConflict =>
-          deleteAbandonedSegment(fs, root, newLines)
-          throw e
-      }
+    val staged = stage(spark, fs, root, physDf, mapping,
+      Invariants.decode(meta ++ invMeta), s"$mode commit", spec)
+    val committed = transact(spark, fs, root, table, staged,
+      meta ++ bloomMeta ++ invMeta ++ carrier, Retry(mode, baseV),
+      if (mode == "append") Some(_ ++ staged.lines) else None).get
     baseV.foreach(advanceSchemaCache(table, _, committed, union))
     // an interleaved commit may have introduced columns this commit's
     // carrier (computed pre-race) doesn't know — repair it
@@ -282,182 +324,6 @@ object Versioned {
     committed
   }
 
-  /** The row-adding commit loop [[commit]] and [[commitBucketed]]
-    * share: [[commitManifest]] with contract-key inheritance (appends
-    * re-merge the full contract from the landed base; an overwrite is
-    * a fresh snapshot, so only the invariant DUTIES re-merge), and
-    * the [[InvariantsChanged]] handshake — a constraint that landed
-    * mid-commit re-validates the STAGED rows (no lineage recompute,
-    * no re-write) before retrying with the merged declaration. */
-  private def commitRowsWithContract(spark: SparkSession, fs: FileSystem,
-      root: Path, table: String, fullMeta: Map[String, String],
-      baseV: Option[Long], mode: String, newLines: Seq[String],
-      mapping: ColumnMapping,
-      filesFor: Option[Long] => Seq[String]): Long = {
-    val inheritKeys =
-      if (mode == "append") ContractKeys else Set(Invariants.MetaKey)
-    // the set of rules the STAGED rows have been checked against grows
-    // across retries, SEPARATELY from the commit's meta: folding the
-    // merged rule string into the meta would make it look like this
-    // commit's EXPLICIT intent in the next attempt's three-way merge —
-    // resurrecting a constraint a concurrent DROP removed in between
-    // (our != exp with land = the explicit empty drop); and advancing
-    // the contract base instead would skip the re-merge and silently
-    // drop an interleaved bloom/rename/carrier. Meta and base both
-    // stay put; only the validated set advances.
-    var validated: Set[Invariants.Rule] = Invariants.decode(fullMeta).toSet
-    var committed = -1L
-    var races = 0
-    while (committed < 0) {
-      try committed = commitManifest(fs, root, fullMeta, filesFor,
-        baseV, inheritKeys, revalidateInv = true,
-        validatedInv = Some(validated))
-      catch {
-        case ic: InvariantsChanged =>
-          races += 1
-          if (races > 5) throw new IllegalStateException(
-            s"commit on $table kept racing invariant declarations " +
-              s"($races attempts) — retry when the DDL storm subsides")
-          val fresh = Invariants.decode(Map(Invariants.MetaKey -> ic.inv))
-          enforceStaged(spark, fs, root, newLines, fresh,
-            s"$mode commit (constraint added concurrently)", mapping)
-          validated ++= fresh
-          commitTestHook() // the re-validation → retry window
-      }
-    }
-    committed
-  }
-
-  /** [[commit]] with a bucketed physical layout: rows are split by
-    * `pmod(hash(bucketCol), numBuckets)` (Spark's Murmur3 `hash`, the
-    * same function [[graft.sources.GraftCatalog]] exposes as the V2
-    * `bucket` function) and each bucket lands in its own `gb-<id>`
-    * subdir of the fresh segment. The manifest declares the layout via
-    * [[BucketKey]] meta, and the catalog scan then reports
-    * KeyGroupedPartitioning — two tables committed with the SAME
-    * (column-name-modulo, numBuckets) spec join on that key with no
-    * exchange on either side. Appends must keep the base version's
-    * spec (checked); use plain [[commit]] to intentionally de-bucket.
-    *
-    * At 100 TB this is the difference between re-shuffling both sides
-    * of every fact-fact join and reading co-located buckets: the
-    * shuffle is paid ONCE at write time, then amortized over every
-    * subsequent join, like Hive/Spark `bucketBy` but on an open lake
-    * format with time travel (Iceberg's bucket partition transform is
-    * the public precedent). */
-  def commitBucketed(df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int, mode: String = "overwrite",
-      meta: Map[String, String] = Map.empty): Long = {
-    require(mode == "overwrite" || mode == "append" || mode == "create",
-      s"bad mode: $mode")
-    require(numBuckets > 0 && numBuckets <= 100000,
-      s"numBuckets out of range: $numBuckets")
-    require(df.columns.map(_.toLowerCase(java.util.Locale.ROOT))
-      .contains(bucketCol.toLowerCase(java.util.Locale.ROOT)),
-      s"bucket column $bucketCol not in ${df.columns.mkString(",")}")
-    require(!bucketCol.contains('/') && !bucketCol.contains('=') &&
-      !bucketCol.contains('\n'), s"unencodable bucket column: $bucketCol")
-    // the V2 `bucket` function (GraftCatalog) must reproduce this
-    // layout's hash exactly; both sides support precisely these types
-    locally {
-      import org.apache.spark.sql.types._
-      val kt = df.schema.fields
-        .find(_.name.equalsIgnoreCase(bucketCol)).get.dataType
-      require(Seq(IntegerType, LongType, StringType, DateType,
-        TimestampType).contains(kt),
-        s"bucket column type ${kt.catalogString} not supported " +
-          "(int/bigint/string/date/timestamp)")
-    }
-    val spark = df.sparkSession
-    val root = new Path(table)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val baseV = latestVersion(fs, root)
-    if (mode == "create" && baseV.isDefined) throw new CreateConflict(table)
-    baseV.foreach(b => checkWriter(root, b, manifestHeaders(fs, root, b)))
-    // mapping inheritance mirrors [[commit]] (meta-supplied mapping
-    // wins — the DDL paths construct it explicitly; read at exactly
-    // baseV, the version the contract merge compares against); the
-    // bucket column is translated to its physical name (the declared
-    // layout is keyed in the physical space — rename of a bucket
-    // column is refused, so the two normally coincide)
-    val mapping =
-      if (meta.contains(ColumnMapping.ColMapKey) ||
-          meta.contains(ColumnMapping.ColDropKey))
-        ColumnMapping.fromMeta(meta)
-      else if (mode == "append") columnMapping(spark, table, baseV)
-      else ColumnMapping.empty
-    val physCol = mapping.physicalOf(bucketCol)
-    val spec = Some((physCol, numBuckets))
-    if (mode == "append") baseV.foreach { v =>
-      val declared = parseBucketMeta(readMeta(spark, table, v))
-      require(declared.exists(d =>
-        d._1.equalsIgnoreCase(physCol) && d._2 == numBuckets),
-        s"append spec ($physCol/$numBuckets) does not match base " +
-          s"version $v bucket layout ${declared.getOrElse("<none>")}")
-    }
-    // same write-time schema enforcement as [[commit]]
-    val (physDf, carrier, union) = baseV match {
-      case Some(v) if mode == "append" =>
-        enforceAppend(spark, table, v, mapping.applyWrite(df))
-      case _ => (mapping.applyWrite(df), None, None)
-    }
-    val bloomMeta = baseV.filter(_ => mode == "append")
-      .map(v => readMeta(spark, table, v)
-        .view.filterKeys(_ == BloomIndex.MetaKey).toMap)
-      .getOrElse(Map.empty)
-    val invMeta = baseV
-      .filter(_ => !meta.contains(Invariants.MetaKey))
-      .map(v => readMeta(spark, table, v)
-        .view.filterKeys(_ == Invariants.MetaKey).toMap)
-      .getOrElse(Map.empty)
-    commitTestHook()
-    val newLines = writeSegmentLines(spark, fs, root, physDf, spec)
-    enforceStaged(spark, fs, root, newLines,
-      Invariants.decode(meta ++ invMeta), s"$mode commit", mapping)
-    val committed =
-      try commitRowsWithContract(spark, fs, root, table,
-        meta ++ mapping.toMeta ++ bloomMeta ++ invMeta ++ carrier +
-          (BucketKey -> s"$physCol/$numBuckets"),
-        baseV, mode, newLines, mapping, { base =>
-          if (mode == "create" && base.isDefined)
-            throw new CreateConflict(table)
-          // the spec-matches-base check above ran at baseV; if the
-          // base MOVED before this attempt, re-check the LANDED
-          // base's declared layout — an interleaved REBUCKET would
-          // otherwise rebase old-count gb-* files under a new-count
-          // declaration (BucketKey is deliberately not a merged
-          // contract key: layouts don't three-way-merge)
-          if (mode == "append" && base != baseV) {
-            val landed = base.flatMap(v =>
-              parseBucketMeta(readMeta(spark, table, v)))
-            if (!landed.exists(d => d._1.equalsIgnoreCase(physCol) &&
-                d._2 == numBuckets))
-              throw new BucketLayoutChanged(table,
-                s"$physCol/$numBuckets",
-                landed.map(d => s"${d._1}/${d._2}").getOrElse("<none>"))
-          }
-          val prevLines =
-            if (mode == "append")
-              base.toSeq.flatMap(v => readFileLines(fs, root, v))
-            else Nil
-          prevLines ++ newLines
-        })
-      catch {
-        case e @ (_: CreateConflict | _: BucketLayoutChanged) =>
-          deleteAbandonedSegment(fs, root, newLines)
-          throw e
-      }
-    baseV.foreach(advanceSchemaCache(table, _, committed, union))
-    if (carrier.isDefined && baseV.exists(committed != _ + 1))
-      repairCarrier(spark, table, committed)
-    committed
-  }
-
-  /** The bucket layout of a version (default latest): (column, n) when
-    * the manifest declares one AND every data file sits in a `gb-<id>`
-    * dir — a half-bucketed version (foreign append, hand-edited
-    * manifest) reports None, so readers can never claim a partitioning
-    * the files don't deliver. */
   /** Total LIVE data bytes of a version (default latest), summed from
     * the manifest's `bytes=` stats — zero data reads; one filesystem
     * probe only per legacy line written before stats existed (an
@@ -480,6 +346,11 @@ object Versioned {
     }
   }
 
+  /** The bucket layout of a version (default latest): (column, n) when
+    * the manifest declares one AND every data file sits in a `gb-<id>`
+    * dir — a half-bucketed version (foreign append, hand-edited
+    * manifest) reports None, so readers can never claim a partitioning
+    * the files don't deliver. */
   def bucketSpec(spark: SparkSession, table: String,
       version: Option[Long] = None): Option[(String, Int)] = {
     val root = new Path(table)
@@ -539,30 +410,15 @@ object Versioned {
     val mapping =
       if (mode == "append") columnMapping(spark, table, Some(expectedBase))
       else ColumnMapping.empty
-    // a MERGE snapshot's rows are incoming like any commit: the
-    // expected base's invariants gate them (on the STAGED bytes) and
-    // ride the new version
-    val invMeta = readMeta(spark, table, expectedBase)
-      .view.filterKeys(_ == Invariants.MetaKey).toMap
-    val newLines = writeSegmentLines(spark, fs, root,
-      mapping.applyWrite(df), bucket, sortWithinBuckets)
-    enforceStaged(spark, fs, root, newLines,
-      Invariants.decode(meta ++ invMeta),
-      "conditional snapshot commit", mapping)
-    val fullMeta = meta ++ mapping.toMeta ++ invMeta ++
-      bucket.map { case (c, n) => BucketKey -> s"$c/$n" }
-    try Some(commitManifest(fs, root, fullMeta, { base =>
-      if (base != Some(expectedBase)) throw new RewriteConflict
-      val prevLines =
-        if (mode == "append") base.toSeq.flatMap(v => readFileLines(fs, root, v))
-        else Nil
-      prevLines ++ newLines
-    }))
-    catch {
-      case _: RewriteConflict =>
-        deleteAbandonedSegment(fs, root, newLines)
-        None
-    }
+    // the expected base's invariants gate the incoming rows and ride
+    // the new version
+    val invMeta = metaKeys(spark, table, expectedBase, Invariants.MetaKey)
+    val staged = stage(spark, fs, root, mapping.applyWrite(df), mapping,
+      Invariants.decode(meta ++ invMeta), "conditional snapshot commit",
+      bucket, sortWithinBuckets)
+    transact(spark, fs, root, table, staged, meta ++ invMeta,
+      Expect(expectedBase),
+      if (mode == "append") Some(_ ++ staged.lines) else None)
   }
 
   /** [[commitIf]] (append mode) for CAS-RETRY loops: the segment is
@@ -594,56 +450,18 @@ object Versioned {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mapping = columnMapping(spark, table, Some(expectedBase))
-    val invMeta = readMeta(spark, table, expectedBase)
-      .view.filterKeys(_ == Invariants.MetaKey).toMap
-    val newLines = writeSegmentLines(spark, fs, root,
-      mapping.applyWrite(df), bucket)
-    enforceStaged(spark, fs, root, newLines,
-      Invariants.decode(meta ++ invMeta),
-      "conditional snapshot commit", mapping)
-    val bucketMeta = bucket.map { case (c, n) => BucketKey -> s"$c/$n" }
-    var expected = expectedBase
-    var curMeta = meta
-    var attempts = 0
-    while (attempts < 50) { // backstop far above any real storm
-      attempts += 1
-      try return Some(commitManifest(fs, root,
-        curMeta ++ mapping.toMeta ++ invMeta ++ bucketMeta, { base =>
-          if (base != Some(expected)) throw new RewriteConflict
-          base.toSeq.flatMap(v => readFileLines(fs, root, v)) ++ newLines
-        }))
-      catch {
-        case _: RewriteConflict =>
-          // an adjudication that THROWS must not leak the staged
-          // segment (it is invisible to VACUUM) — delete, then rethrow
-          val next =
-            try adjudicate().filter { case (b, _) =>
-              readMeta(spark, table, b).get(Invariants.MetaKey) ==
-                invMeta.get(Invariants.MetaKey) &&
-                columnMapping(spark, table, Some(b)) == mapping
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                deleteAbandonedSegment(fs, root, newLines)
-                throw e
-            }
-          next match {
-            case Some((b, m)) =>
-              expected = b; curMeta = m
-              // jittered linear backoff: in-JVM storms serialize on
-              // the commit lock, but CROSS-PROCESS writers racing the
-              // same table would otherwise spin the manifest CAS hot;
-              // bounded at 200 ms so a converging storm stays fast
-              if (attempts > 1) Thread.sleep(
-                math.min(200L, 10L * attempts) +
-                  scala.util.Random.nextInt(10))
-            case None =>
-              deleteAbandonedSegment(fs, root, newLines)
-              return None
-          }
-      }
-    }
-    deleteAbandonedSegment(fs, root, newLines)
-    None
+    val invMeta = metaKeys(spark, table, expectedBase, Invariants.MetaKey)
+    val staged = stage(spark, fs, root, mapping.applyWrite(df), mapping,
+      Invariants.decode(meta ++ invMeta), "conditional snapshot commit",
+      bucket)
+    transact(spark, fs, root, table, staged, meta ++ invMeta,
+      Adjudicate(expectedBase, () => adjudicate().collect {
+        case (b, m) if readMeta(spark, table, b).get(Invariants.MetaKey) ==
+            invMeta.get(Invariants.MetaKey) &&
+            columnMapping(spark, table, Some(b)) == mapping =>
+          (b, m ++ invMeta)
+      }),
+      Some(_ ++ staged.lines))
   }
 
   /** Test-only seam: invoked by [[commitIfAppendRebase]] between
@@ -674,48 +492,178 @@ object Versioned {
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // same invariant gate as [[commitIf]]: the MERGE snapshot's rows
-    // must satisfy the base's declared rules, which ride the commit
-    val invMeta = readMeta(spark, table, expectedBase)
-      .view.filterKeys(_ == Invariants.MetaKey).toMap
-    val newLines = writeSegmentLines(spark, fs, root, df, bucket)
-    enforceStaged(spark, fs, root, newLines,
-      Invariants.decode(meta ++ invMeta), "merge snapshot commit",
-      ColumnMapping.empty)
+    // must satisfy the base's declared rules, which ride the commit.
+    // The snapshot is written under LOGICAL names (the empty mapping):
+    // a mapped table's carried appended lines keep physical names, so
+    // a rebase onto a mapped base would mix two name spaces — refused
+    val invMeta = metaKeys(spark, table, expectedBase, Invariants.MetaKey)
+    val staged = stage(spark, fs, root, df, ColumnMapping.empty,
+      Invariants.decode(meta ++ invMeta), "merge snapshot commit", bucket)
     val baseLines = readFileLines(fs, root, expectedBase)
-    val fullMeta = meta ++ invMeta ++
-      bucket.map { case (c, n) => BucketKey -> s"$c/$n" }
     rebaseTestHook()
     // the guard may cost Spark jobs (source key-bound aggregates) —
     // evaluate it LAZILY, only when a conflict actually materializes;
     // the no-conflict hot path must stay jobless
     lazy val guardFilters = guard()
-    try Some(commitManifest(fs, root, fullMeta, { base =>
-      if (base == Some(expectedBase)) newLines
-      else {
-        if (!rebase) throw new RewriteConflict
-        // enforce the documented contract HERE, not in callers: a
-        // mapped table's snapshot carries logical names while carried
-        // appended lines keep physical names — rebasing would mix the
-        // two name spaces in one version, so always refuse
-        if (!columnMapping(spark, table, base).isEmpty)
-          throw new RewriteConflict
-        val latestLines = base.toSeq.flatMap(readFileLines(fs, root, _))
-        val baseSet = baseLines.toSet
-        if (!baseSet.subsetOf(latestLines.toSet))
-          throw new RewriteConflict // a base line changed: stale read
-        if (interleavedMayMatch(latestLines, baseLines, guardFilters))
-          throw new RewriteConflict // appended rows may be in scope
-        newLines ++ latestLines.filterNot(baseSet)
-      }
-    }, Some(expectedBase), ContractKeys, revalidateInv = true))
-    catch {
-      // InvariantsChanged = a constraint landed mid-merge: same
-      // resolution as any conflict — the caller re-runs against the
-      // new latest, whose declaration then gates the re-run
-      case _: RewriteConflict | _: InvariantsChanged =>
-        deleteAbandonedSegment(fs, root, newLines)
-        None
+    val baseSet = baseLines.toSet
+    transact(spark, fs, root, table, staged, meta ++ invMeta,
+      if (rebase) Rebase(expectedBase, baseLines, baseLines, () => guardFilters)
+      else Expect(expectedBase),
+      Some(ls => staged.lines ++ ls.filterNot(baseSet)))
+  }
+
+  /** A fresh segment staged for ONE commit: its manifest lines, plus
+    * the column mapping its bytes were written under and the bucket
+    * layout they were hashed under (both ride the commit's meta). The
+    * lines are empty when the commit only rewrites manifest lines (a
+    * DML that matched nothing, a DV delete). */
+  private final case class Staged(lines: Seq[String],
+      mapping: ColumnMapping, bucket: Option[(String, Int)])
+
+  /** What [[transact]] does when the version it lands on is not
+    * `from`, the base the commit was computed against. */
+  private sealed abstract class OnConflict(val from: Option[Long])
+
+  /** Always land ([[commit]]): re-merge the landed base, re-validate
+    * the STAGED rows against an invariant that landed meanwhile. */
+  private final case class Retry(mode: String, base: Option[Long])
+      extends OnConflict(base)
+
+  /** Land only on `base`; any interleave abandons. */
+  private final case class Expect(base: Long) extends OnConflict(Some(base))
+
+  /** Land on `base`; after each conflict `next` names the (base, meta)
+    * to retry on, or None to abandon. */
+  private final case class Adjudicate(base: Long,
+      next: () => Option[(Long, Map[String, String])])
+      extends OnConflict(Some(base))
+
+  /** Land on `base`, or REBASE onto an interleave that kept every
+    * `mustSurvive` line; `read` = the lines the operation read, `guard`
+    * = its stats-expressible predicate. Any other conflict abandons. */
+  private final case class Rebase(base: Long, read: Seq[String],
+      mustSurvive: Seq[String],
+      guard: () => Seq[org.apache.spark.sql.sources.Filter])
+      extends OnConflict(Some(base))
+
+  /** The one staged-row commit (Delta's OptimisticTransaction shape):
+    * land `staged` through [[commitManifest]] with `meta` plus the
+    * staged mapping and bucket layout, and as file lines `files`
+    * applied to the lines of the base it lands on (None: the staged
+    * lines alone — an overwrite). `policy` resolves conflicts. Returns
+    * the committed version, or None when the policy abandons; every
+    * abandoned or refused attempt deletes the staged segment first. */
+  private def transact(spark: SparkSession, fs: FileSystem, root: Path,
+      table: String, staged: Staged, meta: Map[String, String],
+      policy: OnConflict,
+      files: Option[Seq[String] => Seq[String]]): Option[Long] = {
+    def linesOf(b: Option[Long]) = b.toSeq.flatMap(readFileLines(fs, root, _))
+    def compose(base: => Seq[String]) = files.fold(staged.lines)(_(base))
+    def abandon(): Unit = deleteAbandonedSegment(fs, root, staged.lines)
+    val bucketMeta = staged.bucket.map { case (c, n) => BucketKey -> s"$c/$n" }
+    var expected = policy.from
+    // an overwrite is a fresh snapshot: only the invariant DUTIES
+    // re-merge from the landed base
+    val inheritKeys = policy match {
+      case Retry(mode, _) if mode != "append" => Set(Invariants.MetaKey)
+      case _ => ContractKeys
     }
+    var curMeta = meta
+    // the set of rules the STAGED rows have been checked against grows
+    // across retries, SEPARATELY from the commit's meta: folding the
+    // merged rule string into the meta would make it look like this
+    // commit's EXPLICIT intent in the next attempt's three-way merge —
+    // resurrecting a constraint a concurrent DROP removed in between
+    // (our != exp with land = the explicit empty drop); and advancing
+    // the contract base instead would skip the re-merge and silently
+    // drop an interleaved bloom/rename/carrier. Meta and base both
+    // stay put; only the validated set advances.
+    var validated: Set[Invariants.Rule] = Invariants.decode(meta).toSet
+    val filesFor: Option[Long] => Seq[String] = landed => policy match {
+      case Retry(mode, _) =>
+        if (mode == "create" && landed.isDefined)
+          throw new CreateConflict(table) // lost the create race
+        // the append's layout check ran at the base its segment was
+        // hashed under; if the base MOVED, re-check the LANDED base's
+        // declared layout — an interleaved REBUCKET would otherwise
+        // rebase old-count gb-* files under a new-count declaration
+        // (BucketKey is deliberately not a merged contract key:
+        // layouts don't three-way-merge)
+        if (mode == "append" && landed != expected)
+          staged.bucket.foreach { case (c, n) =>
+            val land = landed.flatMap(v =>
+              parseBucketMeta(readMetaRaw(fs, root, v)))
+            if (!land.exists(d => d._1.equalsIgnoreCase(c) && d._2 == n))
+              throw new BucketLayoutChanged(table, s"$c/$n",
+                land.map(d => s"${d._1}/${d._2}").getOrElse("<none>"))
+          }
+        compose(linesOf(landed))
+      case Rebase(_, read, mustSurvive, guard) if landed != expected =>
+        val latest = linesOf(landed)
+        if (!mustSurvive.toSet.subsetOf(latest.toSet) || // stale read
+            // an interleaved RENAME/DROP (metadata-only — changes no
+            // line) must not be silently overwritten by our meta
+            columnMapping(spark, table, landed) != staged.mapping ||
+            // write-skew: an interleaved append whose file MAY hold
+            // predicate-matching rows must force a recompute — a
+            // rebase would carry those rows past the operation
+            interleavedMayMatch(latest, read, guard()))
+          throw new RewriteConflict
+        compose(latest)
+      case Rebase(_, read, _, _) => compose(read)
+      case _ =>
+        if (landed != expected) throw new RewriteConflict
+        compose(linesOf(landed))
+    }
+    var attempts = 0
+    while (true) {
+      attempts += 1
+      try return Some(commitManifest(fs, root,
+        curMeta ++ staged.mapping.toMeta ++ bucketMeta, filesFor,
+        expected, inheritKeys, Some(validated)))
+      catch {
+        case ic: InvariantsChanged => policy match {
+          case Retry(mode, _) if attempts <= 5 =>
+            val fresh = Invariants.decode(Map(Invariants.MetaKey -> ic.inv))
+            enforceStaged(spark, fs, root, staged.lines, fresh,
+              s"$mode commit (constraint added concurrently)", staged.mapping)
+            validated ++= fresh
+            commitTestHook() // the re-validation → retry window
+          case Retry(_, _) =>
+            abandon()
+            throw new IllegalStateException(
+              s"commit on $table kept racing invariant declarations " +
+                s"($attempts attempts) — retry when the DDL storm subsides")
+          // a constraint landed mid-rewrite: abandon like any conflict —
+          // the re-run validates against the new latest's declaration
+          case _ => abandon(); return None
+        }
+        case _: RewriteConflict =>
+          // an adjudication that THROWS must not leak the staged
+          // segment (it is invisible to VACUUM) — delete, then rethrow
+          val next = policy match {
+            case Adjudicate(_, next) if attempts < 50 => // storm backstop
+              try next()
+              catch { case scala.util.control.NonFatal(e) => abandon(); throw e }
+            case _ => None
+          }
+          next match {
+            case Some((b, m)) =>
+              expected = Some(b); curMeta = m
+              // jittered linear backoff: in-JVM storms serialize on
+              // the commit lock, but CROSS-PROCESS writers racing the
+              // same table would otherwise spin the manifest CAS hot;
+              // bounded at 200 ms so a converging storm stays fast
+              if (attempts > 1) Thread.sleep(
+                math.min(200L, 10L * attempts) +
+                  scala.util.Random.nextInt(10))
+            case None => abandon(); return None
+          }
+        case e @ (_: CreateConflict | _: BucketLayoutChanged) =>
+          abandon(); throw e
+      }
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Validate freshly STAGED segment files against `rules` — the
@@ -741,9 +689,9 @@ object Versioned {
     }
   }
 
-  /** Best-effort removal of a conflict-abandoned attempt's fresh
-    * segment dir (shared by [[commitIf]] and [[rewrite]]); a crash
-    * before this runs leaves the dir invisible for VACUUM. */
+  /** Best-effort removal of an abandoned attempt's fresh segment dir
+    * (by [[transact]] and [[enforceStaged]]); a crash before this runs
+    * leaves the dir invisible for VACUUM. */
   private def deleteAbandonedSegment(fs: FileSystem, root: Path,
       newLines: Seq[String]): Unit =
     newLines.headOption.foreach { l =>
@@ -754,17 +702,18 @@ object Versioned {
         catch { case scala.util.control.NonFatal(_) => () }
     }
 
-  /** Write one fresh uuid segment and return its manifest file lines
-    * (stats-suffixed). Shared by [[commit]] and [[rewrite]]. */
-  /** `sortWithinBuckets` names TEMPORARY columns of `df` (bucketed
+  /** Write `df` (already in its physical write form, `mapping`) as one
+    * fresh uuid segment with stats-suffixed manifest lines, and
+    * validate the staged bytes against `rules` ([[enforceStaged]]).
+    * `sortWithinBuckets` names TEMPORARY columns of `df` (bucketed
     * form only): rows are sorted by them within each bucket task and
     * the columns are DROPPED before the write — the within-bucket
     * clustering hook OPTIMIZE ZORDER uses on bucketed tables (the
     * projection after the sort is narrow, so file order survives). */
-  private def writeSegmentLines(spark: SparkSession, fs: FileSystem,
-      root: Path, df: DataFrame,
-      bucket: Option[(String, Int)] = None,
-      sortWithinBuckets: Seq[String] = Nil): Seq[String] = {
+  private def stage(spark: SparkSession, fs: FileSystem, root: Path,
+      df: DataFrame, mapping: ColumnMapping, rules: Seq[Invariants.Rule],
+      what: String, bucket: Option[(String, Int)] = None,
+      sortWithinBuckets: Seq[String] = Nil): Staged = {
     val uuid = java.util.UUID.randomUUID().toString
     val segDir = new Path(root, s"data/$uuid")
     // Segments are written TIMESTAMP_MICROS: Spark's INT96 default
@@ -848,7 +797,7 @@ object Versioned {
     // files only (one pass over bytes just written) and ride the
     // sidecar ref on each line — consultation is ref-driven, so a
     // carried line keeps its older sidecar verbatim
-    latestVersion(fs, root)
+    val lines = latestVersion(fs, root)
       .flatMap(v => BloomIndex.declared(readMeta(spark, root.toString, v)))
       .flatMap { case (cols, fpp) =>
         val rowsByRel = statLines.flatMap { l =>
@@ -861,6 +810,8 @@ object Versioned {
       case Some(sidecarRel) => statLines.map(l => s"$l\tbloom=$sidecarRel")
       case None => statLines
     }
+    enforceStaged(spark, fs, root, lines, rules, what, mapping)
+    Staged(lines, mapping, bucket)
   }
 
   /** Copy-on-write DML core (the scoping Delta's DELETE/UPDATE get
@@ -891,31 +842,19 @@ object Versioned {
     // The read-compute-commit cycle runs OUTSIDE the commit lock (the
     // transform may be long); a commit landing in between (a streaming
     // append, another DML) would be silently dropped if we committed
-    // our stale line set over it. So the commit asserts the base
-    // version is still the one the rewrite read — on conflict the
-    // whole cycle recomputes against the new latest (Delta's
-    // optimistic-concurrency discipline for DML). The abandoned
-    // attempt's segment is deleted; a crash leaves it invisible for
-    // VACUUM like any other uncommitted segment.
-    var attempt = 0
-    var attemptBase = -1L
-    while (true) {
-      try {
-      val v = latestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-      attemptBase = v
+    // our stale line set over it. So the commit REBASES: it keeps the
+    // latest's lines (appends and carried-line changes, e.g. a DV
+    // delete tagging a carried file, included) and swaps only the
+    // touched ones — a streaming sink appending every few seconds never
+    // forces a DML to recompute, which at 100 TB is the difference
+    // between DML converging and starving. A conflict it cannot rebase
+    // recomputes against the new latest (Delta's discipline for DML).
+    raceLoop(fs, root, table, s"rewrite of $table") { v =>
       val lines = readFileLines(fs, root, v)
       val mapping = columnMapping(spark, table, Some(v))
       val physSchema = readPhysical(spark, table, Some(v)).schema
-      val (touched, carried) = lines.partition { line =>
-        (parseLine(line)._2.flatMap(SegmentStats.parse) match {
-          // stats are keyed by PHYSICAL column names; the caller's
-          // scope predicate speaks the logical schema — translate so a
-          // rename can never blind (or worse, mis-aim) the scoping
-          case Some(st) => mayTouch(mapping.statsToLogical(st))
-          case None => true // no stats: always in scope
-        }) && linePrune(line) // bloom point-lookup scoping, if any
-      }
+      val (touched, carried) =
+        lines.partition(inScope(mapping, mayTouch, linePrune))
       val touchedFiles = touched
         .map(l => new Path(root, parseLine(l)._1).toString)
       // DV overlay on the touched subset: rows a deletion vector
@@ -939,23 +878,14 @@ object Versioned {
       // manifest — otherwise one UPDATE silently discards the layout a
       // table paid a write-time shuffle for.
       val spec = bucketSpec(spark, table, Some(v))
-      val newLines =
-        if (matched == 0L) Nil
-        else {
-          val out = transform(logicalSubset)
-          val staged =
-            writeSegmentLines(spark, fs, root, mapping.applyWrite(out), spec)
-          // an UPDATE's post-images must satisfy the table invariants
-          // like any other incoming rows — validated on the STAGED
-          // bytes; a violating SET refuses before anything commits
-          enforceStaged(spark, fs, root, staged,
-            Invariants.decode(readMeta(spark, table, v)),
-            "rewrite (COW DML) output", mapping)
-          staged
-        }
-      val fullMeta = meta ++ mapping.toMeta ++
-        spec.map { case (c, n) => BucketKey -> s"$c/$n" } ++
-        carrierMetaOf(spark, table, v) // narrow files stay carried
+      val staged =
+        if (matched == 0L) Staged(Nil, mapping, spec)
+        // an UPDATE's post-images are incoming rows: the table's
+        // invariants gate them, so a violating SET refuses
+        else stage(spark, fs, root,
+          mapping.applyWrite(transform(logicalSubset)), mapping,
+          Invariants.decode(readMeta(spark, table, v)),
+          "rewrite (COW DML) output", spec)
       // under a column mapping the guard's pushed-filter names may sit
       // in either name space — conservatively conflict on ANY
       // interleave instead (mapped tables are the rare state). LAZY:
@@ -963,78 +893,68 @@ object Versioned {
       lazy val guard =
         if (mapping.isEmpty) rebaseGuard(spark, physSchema, touchedFiles, cond)
         else Nil
-      val committed =
-        try {
-          commitManifest(fs, root, fullMeta, { base =>
-            // Conflict resolution (Delta's logical-conflict check, not
-            // a blind retry): a commit landed mid-cycle. If every
-            // TOUCHED line is still byte-identical in the new latest,
-            // the interleaved commits did not modify anything this
-            // rewrite read-modified — they appended files, or changed
-            // CARRIED lines (e.g. a DV delete tagging a carried file)
-            // — so the rewrite REBASES: keep the latest's lines
-            // (appends and carried-line changes included), swap only
-            // the touched ones for their replacements. A touched line
-            // that changed or vanished means the content this rewrite
-            // transformed is stale → full recompute. A streaming sink
-            // appending every few seconds thus never forces a DML to
-            // recompute, which at 100 TB is the difference between
-            // DML converging and starving.
-            if (base == Some(v)) {
-              if (matched == 0L) lines else carried ++ newLines
-            } else {
-              val latestLines = base.toSeq.flatMap(readFileLines(fs, root, _))
-              val touchedSet = touched.toSet
-              if (!touchedSet.subsetOf(latestLines.toSet))
-                throw new RewriteConflict
-              // an interleaved RENAME/DROP (metadata-only — changes no
-              // line) must not be silently overwritten by our meta
-              if (base.exists(b =>
-                  columnMapping(spark, table, Some(b)) != mapping))
-                throw new RewriteConflict
-              // write-skew: an interleaved append whose file MAY hold
-              // predicate-matching rows must force a recompute — a
-              // rebase would carry those rows past the DML untouched
-              if (interleavedMayMatch(latestLines, lines, guard))
-                throw new RewriteConflict
-              if (matched == 0L) latestLines
-              else latestLines.filterNot(touchedSet) ++ newLines
-            }
-          }, Some(v), ContractKeys, revalidateInv = true)
-          true
-        } catch {
-          // InvariantsChanged (a constraint landed mid-DML) resolves
-          // like a conflict: the next attempt re-reads the latest's
-          // declaration and validates its output against it
-          case _: RewriteConflict | _: InvariantsChanged if attempt >= 4 =>
-            throw new CommitRaceExhausted(s"rewrite of $table", attempt + 1)
-          case _: RewriteConflict | _: InvariantsChanged =>
-            attempt += 1
-            deleteAbandonedSegment(fs, root, newLines)
-            false
+      val touchedSet = touched.toSet
+      transact(spark, fs, root, table, staged,
+        meta ++ carrierMetaOf(spark, table, v), // narrow files stay carried
+        Rebase(v, lines, touched, () => guard),
+        Some(ls => if (matched == 0L) ls
+          else ls.filterNot(touchedSet) ++ staged.lines))
+        .map(_ =>
+          if (matched == 0L) (0L, 0L, lines.size.toLong)
+          else (matched, touched.size.toLong, carried.size.toLong))
+    }
+  }
+
+  /** The bounded read-compute-commit loop of the rewrite-shaped
+    * operations ([[rewrite]], [[mergeOnRead]], [[compactSmall]]) and
+    * the validated DDL ([[alterColumns]], [[addInvariants]]): each
+    * attempt reads the latest version, computes against it and
+    * commits; None means the commit lost the race (its staged files
+    * already deleted) and the whole cycle recomputes against the new
+    * latest — at most 5 attempts, then [[CommitRaceExhausted]]. A
+    * concurrent VACUUM under the attempt ([[isVacuumRace]],
+    * [[tableMovedPast]]) resolves the same way; its staged debris falls
+    * to the orphan-grace sweep. */
+  private def raceLoop[A](fs: FileSystem, root: Path, table: String,
+      what: String)(attempt: Long => Option[A]): A = {
+    var attempts = 0
+    var base = -1L
+    while (true) {
+      attempts += 1
+      try {
+        base = latestVersion(fs, root).getOrElse(throw
+          new IllegalArgumentException(s"no committed version in $table"))
+        attempt(base) match {
+          case Some(a) => return a
+          case None if attempts >= 5 =>
+            throw new CommitRaceExhausted(what, attempts)
+          case None => ()
         }
-      if (committed) {
-        return if (matched == 0L) (0L, 0L, lines.size.toLong)
-        else (matched, touched.size.toLong, carried.size.toLong)
-      }
       } catch {
-        // a concurrent VACUUM invalidated this attempt's base version
-        // mid-cycle: same resolution as a commit conflict — recompute
-        // against the new latest (the abandoned segment, if staged,
-        // falls to the orphan-grace sweep). Only classified as a race
-        // when the table actually moved past the attempt's base — a
-        // FileNotFound with the base still latest is a genuine fault.
         case e: Throwable if isVacuumRace(e) &&
-            tableMovedPast(fs, root, attemptBase) =>
-          if (attempt >= 4) throw new IllegalStateException(
-            s"rewrite of $table kept racing a concurrent VACUUM " +
-              s"(${attempt + 1} attempts) — retry when retention and " +
-              "the writer storm subside", e)
-          attempt += 1
+            tableMovedPast(fs, root, base) =>
+          if (attempts >= 5) throw new IllegalStateException(
+            s"$what kept racing a concurrent VACUUM ($attempts " +
+              "attempts) — retry when retention and the writer storm " +
+              "subside", e)
       }
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** Whether a DML's scope may include a manifest line: its stats say
+    * it MAY hold matching rows, and `linePrune` (bloom point-lookup
+    * scoping, if any) keeps it. */
+  private def inScope(mapping: ColumnMapping,
+      mayTouch: SegmentStats.FileStats => Boolean,
+      linePrune: String => Boolean)(line: String): Boolean =
+    (parseLine(line)._2.flatMap(SegmentStats.parse) match {
+      // stats are keyed by PHYSICAL column names; the caller's scope
+      // predicate speaks the logical schema — translate so a rename
+      // can never blind (or worse, mis-aim) the scoping
+      case Some(st) => mayTouch(mapping.statsToLogical(st))
+      case None => true // no stats: always in scope
+    }) && linePrune(line)
 
   /** A mid-cycle FileNotFound anywhere in a DML attempt means a
     * concurrent VACUUM dropped the attempt's base version (or swept
@@ -1111,11 +1031,14 @@ object Versioned {
   /** Per-table commit mutex. Hadoop's LOCAL filesystem maps rename to
     * POSIX renameTo, which silently OVERWRITES an existing target —
     * two racing committers can both "win" the same version and one
-    * commit is lost (caught by VersionedSpec's race test). Within a
-    * JVM (the local[*] driver, where all commits originate) the mutex
-    * closes that window; on HDFS/object stores, rename-without-
-    * overwrite is atomic server-side and the retry loop below gives
-    * true multi-process optimistic concurrency. */
+    * commit is lost (caught by VersionedSpec's race test). The mutex
+    * closes that window only WITHIN one JVM: on `file://`, committers
+    * in different processes can still both claim one version — such
+    * cross-process double claims have been reproduced, and the
+    * `!exists && rename` guard in [[commitManifest]] does not prevent
+    * them. HDFS rename-without-overwrite is atomic server-side; S3
+    * rename is a non-atomic copy + delete, so concurrent writers there
+    * need an external coordinator. */
   private val commitLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -1222,26 +1145,27 @@ object Versioned {
     }
   }
 
-  /** The atomic manifest-commit loop shared by [[commit]] and
-    * [[restore]]: compute the file list against the CURRENT latest
-    * version, write a temp manifest, rename into place. A concurrent
-    * winner makes the rename fail → recompute against the new latest
-    * and retry one version higher.
+  /** The atomic manifest-commit loop under every commit — the
+    * staged-row commits through [[transact]], and the metadata-only
+    * [[restore]], [[convert]], [[shallowClone]], [[commitMetadataOnly]]
+    * and [[declareBloomIndex]]: compute the file list against the
+    * CURRENT latest version, write a temp manifest, rename into place.
+    * A concurrent winner makes the rename fail → recompute against the
+    * new latest and retry one version higher.
     *
     * `contractBase` is the version the caller computed its inherited
     * meta against; when the attempt lands on a DIFFERENT base, the
     * keys in `inheritKeys` are re-merged from the actual base so an
     * interleaved contract change is never silently dropped. With
-    * `revalidateInv`, an attempt whose merged invariant set demands
-    * rules the caller never validated throws [[InvariantsChanged]]
-    * (outside any segment write — staged data stays reusable) instead
-    * of committing unvalidated rows. */
+    * `validatedInv` (the rules the staged rows were checked against),
+    * an attempt whose merged invariant set demands rules beyond it
+    * throws [[InvariantsChanged]] (outside any segment write — staged
+    * data stays reusable) instead of committing unvalidated rows. */
   private def commitManifest(fs: FileSystem, root: Path,
       meta: Map[String, String],
       filesFor: Option[Long] => Seq[String],
       contractBase: Option[Long] = None,
       inheritKeys: Set[String] = Set.empty,
-      revalidateInv: Boolean = false,
       validatedInv: Option[Set[Invariants.Rule]] = None): Long = {
     val lock = commitLocks.computeIfAbsent(
       root.toUri.toString, _ => new Object)
@@ -1258,16 +1182,9 @@ object Versioned {
         if (inheritKeys.isEmpty || base == contractBase) meta
         else mergedContractMeta(fs, root, meta, contractBase, base,
           inheritKeys)
-      if (revalidateInv &&
-          effMeta.get(Invariants.MetaKey) != meta.get(Invariants.MetaKey)) {
-        // the rows of this commit were validated against the caller's
-        // ACCUMULATED rule set (grown by prior InvariantsChanged
-        // handshakes — tracked apart from the meta, see
-        // commitRowsWithContract); if the merge demands rules beyond
-        // it, hand the decision back before anything lands
-        val validated =
-          validatedInv.getOrElse(Invariants.decode(meta).toSet)
-        if (!Invariants.decode(effMeta).forall(validated.contains))
+      validatedInv.foreach { validated =>
+        if (effMeta.get(Invariants.MetaKey) != meta.get(Invariants.MetaKey) &&
+            !Invariants.decode(effMeta).forall(validated.contains))
           throw new InvariantsChanged(effMeta(Invariants.MetaKey))
       }
       // Delta-or-checkpoint decision: store only this commit's ACTIONS
@@ -1599,9 +1516,13 @@ object Versioned {
     * would silently stop indexing future commits). */
   private def carrierMetaOf(spark: SparkSession, table: String,
       v: Long): Map[String, String] =
-    readMeta(spark, table, v).view.filterKeys(k =>
-      k == SchemaEnforce.SchemaKey || k == BloomIndex.MetaKey ||
-        k == Invariants.MetaKey).toMap
+    metaKeys(spark, table, v, SchemaEnforce.SchemaKey, BloomIndex.MetaKey,
+      Invariants.MetaKey)
+
+  /** The entries of version `v`'s meta under `keys`. */
+  private def metaKeys(spark: SparkSession, table: String, v: Long,
+      keys: String*): Map[String, String] =
+    readMeta(spark, table, v).view.filterKeys(keys.contains).toMap
 
   /** (version -> physical union schema) per table, so a steady
     * append stream pays mergeSchema footer inference ONCE and then
@@ -1613,9 +1534,6 @@ object Versioned {
     * rate, and entries are one StructType each). */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, StructType)]()
-
-  private[graft] def invalidateSchemaCache(table: String): Unit =
-    schemaCache.remove(new Path(table).toUri.toString)
 
   /** Write-time schema enforcement for an append onto version `v`:
     * refuse type conflicts before any segment lands, upcast losslessly
@@ -1713,10 +1631,10 @@ object Versioned {
     }
 
   /** Test-only seam: invoked by [[commit]]/[[commitBucketed]] between
-    * schema enforcement and the commit attempt, and by
-    * [[commitMetadataOnly]] between its caller's validation and the
-    * commit — the windows a concurrent commit lands in. Production
-    * value is a no-op. */
+    * schema enforcement and staging (and again between an invariant
+    * re-validation and the retry), and by [[commitMetadataOnly]]
+    * between its caller's validation and the commit — the windows a
+    * concurrent commit lands in. Production value is a no-op. */
   private[graft] var commitTestHook: () => Unit = () => ()
 
   /** Widening-aware schema fold for [[repairCarrier]]: same-name
@@ -1818,10 +1736,7 @@ object Versioned {
     }
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
+    raceLoop(fs, root, table, s"ALTER COLUMNS on $table") { v =>
       var mapping = columnMapping(spark, table, Some(v))
       var logical = read(spark, table, Some(v)).schema.fieldNames.toSeq
       val spec = bucketSpec(spark, table, Some(v))
@@ -1867,27 +1782,21 @@ object Versioned {
             applied += s"-$name"
           }
       }
-      if (applied.isEmpty) return v // all-ifExists no-op: nothing lands
-      val opMeta = changes match {
-        case Seq(RenameCol(f, t)) =>
-          Map("operation" -> "rename_column", "rename" -> s"$f->$t")
-        case Seq(DropCol(n, _)) =>
-          Map("operation" -> "drop_column", "drop" -> n)
-        case _ => Map("operation" -> "alter_columns",
-          "changes" -> applied.mkString(","))
-      }
-      try return commitMetadataOnly(fs, root, spark, table, v,
-        opMeta ++ mapping.toMeta, mustBase = true)
-      catch {
-        case _: RewriteConflict if attempt < 4 => attempt += 1
-        case _: RewriteConflict =>
-          throw new IllegalStateException(
-            s"ALTER COLUMNS on $table kept losing to interleaved " +
-              s"commits (${attempt + 1} attempts) — retry when the " +
-              "writer storm subsides")
+      if (applied.isEmpty) Some(v) // all-ifExists no-op: nothing lands
+      else {
+        val opMeta = changes match {
+          case Seq(RenameCol(f, t)) =>
+            Map("operation" -> "rename_column", "rename" -> s"$f->$t")
+          case Seq(DropCol(n, _)) =>
+            Map("operation" -> "drop_column", "drop" -> n)
+          case _ => Map("operation" -> "alter_columns",
+            "changes" -> applied.mkString(","))
+        }
+        try Some(commitMetadataOnly(fs, root, spark, table, v,
+          opMeta ++ mapping.toMeta, mustBase = true))
+        catch { case _: RewriteConflict => None }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** ALTER TABLE … DROP COLUMN as a METADATA-ONLY commit: the physical
@@ -2536,13 +2445,6 @@ object Versioned {
   private def readFileLines(fs: FileSystem, root: Path, v: Long): Seq[String] =
     resolveWithDepth(fs, root, v)._1
 
-  /** Resolve a version's file lines plus its delta-chain depth (0 for
-    * a full/checkpoint manifest, else the number of delta manifests
-    * between it and its checkpoint, itself included). The walk is
-    * bounded by [[CheckpointInterval]] by construction; replay is a
-    * rel-keyed ordered fold, so resolution order is deterministic:
-    * checkpoint order first, adds appended, in-place line replacements
-    * (a file gaining a dv= ref) keep their position. */
   /** Refuse manifests stamped with a reader protocol above what this
     * code understands — the forward-compat gate for the line grammar. */
   private def checkReader(root: Path, v: Long, lines: Seq[String]): Unit =
@@ -2555,6 +2457,13 @@ object Versioned {
           s"understands up to $ReaderProtocol — upgrade before reading " +
           "(refusing beats silently misreading a newer line grammar)"))
 
+  /** Resolve a version's file lines plus its delta-chain depth (0 for
+    * a full/checkpoint manifest, else the number of delta manifests
+    * between it and its checkpoint, itself included). The walk is
+    * bounded by [[CheckpointInterval]] by construction; replay is a
+    * rel-keyed ordered fold, so resolution order is deterministic:
+    * checkpoint order first, adds appended, in-place line replacements
+    * (a file gaining a dv= ref) keep their position. */
   private def resolveWithDepth(fs: FileSystem, root: Path,
       v: Long): (Seq[String], Int) = {
     // The walk below reads OLDER manifests; a concurrent VACUUM may
@@ -2699,15 +2608,6 @@ object Versioned {
       rel: String): String =
     fs.makeQualified(new Path(root, rel)).toUri.getPath
 
-  /** Overlay a version's deletion vectors on a scan of its files:
-    * anti-join on (normalized file path, parquet row index) against
-    * the union of the lines' referenced DV sidecars. A version with
-    * no `dv=` fields returns `base` untouched — the DV-free hot path
-    * keeps its exact plan. Sidecar entries for files whose line no
-    * longer references the sidecar (rewritten since) drop out via the
-    * rel-path restriction. Cost tracks the DELETED rows, not the
-    * table: the sidecar read is O(deleted), and AQE broadcasts the
-    * small side of the anti-join. */
   /** The (normalized path, row index) pairs the given lines' DV refs
     * delete — None when no line carries a ref. Entries for files
     * outside `lines` (rewritten since their sidecar was written) drop
@@ -2728,19 +2628,34 @@ object Versioned {
       .select(col("__graft_p"), col(DvIdxCol).as("__graft_i")))
   }
 
+  /** Overlay a version's deletion vectors on a scan of its files:
+    * anti-join on (normalized file path, parquet row index) against
+    * the union of the lines' referenced DV sidecars. A version with
+    * no `dv=` fields returns `base` untouched — the DV-free hot path
+    * keeps its exact plan. Sidecar entries for files whose line no
+    * longer references the sidecar (rewritten since) drop out via the
+    * rel-path restriction. Cost tracks the DELETED rows, not the
+    * table: the sidecar read is O(deleted), and AQE broadcasts the
+    * small side of the anti-join. */
   private def applyDv(spark: SparkSession, root: Path,
       lines: Seq[String], base: DataFrame): DataFrame =
-    dvPairs(spark, root, lines) match {
-      case None => base
-      case Some(deleted) =>
-        import org.apache.spark.sql.functions.{col, regexp_replace}
-        base
-          .withColumn("__graft_p", regexp_replace(
-            col("_metadata.file_path"), SchemeAuthorityRegex, ""))
-          .withColumn("__graft_i", col("_metadata.row_index"))
-          .join(deleted, Seq("__graft_p", "__graft_i"), "left_anti")
-          .drop("__graft_p", "__graft_i")
-    }
+    if (!lines.exists(parseLine(_)._3.nonEmpty)) base
+    else liveWithRowIds(spark, root, lines, base)
+      .drop("__graft_p", "__graft_i")
+
+  /** `base` (a scan of `lines`' files) with each row's normalized file
+    * path and parquet row index as `__graft_p`/`__graft_i`, minus the
+    * rows the lines' deletion vectors delete. */
+  private def liveWithRowIds(spark: SparkSession, root: Path,
+      lines: Seq[String], base: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, regexp_replace}
+    val withIds = base
+      .withColumn("__graft_p", regexp_replace(
+        col("_metadata.file_path"), SchemeAuthorityRegex, ""))
+      .withColumn("__graft_i", col("_metadata.row_index"))
+    dvPairs(spark, root, lines).fold(withIds)(
+      withIds.join(_, Seq("__graft_p", "__graft_i"), "left_anti"))
+  }
 
   /** Merge-on-read DELETE (Delta/Iceberg deletion vectors): rows of
     * the latest version matching `cond` are recorded in a parquet
@@ -2766,6 +2681,11 @@ object Versioned {
       (schema, files) => rebaseGuard(spark, schema, files, cond), None,
       linePrune)
 
+  /** Test-only seam: invoked by [[compactSmall]] between staging the
+    * compacted segment and its commit attempt — the window a concurrent
+    * commit lands in. Production value is a no-op. */
+  private[graft] var compactTestHook: () => Unit = () => ()
+
   /** Size-thresholded partial compaction (Delta's OPTIMIZE bin-pack
     * discipline): only data files SMALLER than `minBytes` are read
     * (DV-filtered — compaction folds their deletion vectors) and
@@ -2789,10 +2709,8 @@ object Versioned {
     require(minBytes > 0, s"minBytes must be positive: $minBytes")
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < 5) {
-      val v = latestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
+    // an attempt answers Some(None) when there is nothing to compact
+    raceLoop(fs, root, table, s"compactSmall on $table") { v =>
       val spec = bucketSpec(spark, table, Some(v))
       val lines = readFileLines(fs, root, v)
       // file length from the manifest's bytes= stat where present —
@@ -2805,42 +2723,33 @@ object Versioned {
             catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
           }
       val (small, carried) = lines.partition(lenOf(_) < minBytes)
-      if (small.size < 2) return None
-      val smallBytes = small.map(lenOf).sum
-      val nOut = math.max(1L, (smallBytes + minBytes - 1) / minBytes).toInt
-      // compaction reads and writes the PHYSICAL space verbatim —
-      // renamed columns keep their on-disk names, tombstoned columns'
-      // data survives for time travel; the mapping meta rides along
-      val mapping = columnMapping(spark, table, Some(v))
-      val schema = readPhysical(spark, table, Some(v)).schema
-      val packedRows = applyDv(spark, root, small,
-        spark.read.schema(schema).parquet(
-          small.map(l => new Path(root, parseLine(l)._1).toString): _*))
-      // unbucketed: bin-pack into nOut files; bucketed: the declared
-      // spec routes rows (one file per bucket in the fresh segment),
-      // re-shuffling only the SMALL rows
-      val newLines = spec match {
-        case None =>
-          writeSegmentLines(spark, fs, root, packedRows.coalesce(nOut))
-        case some => writeSegmentLines(spark, fs, root, packedRows, some)
-      }
-      val fullMeta = Map("operation" -> "optimize") ++ mapping.toMeta ++
-        spec.map { case (c, n) => BucketKey -> s"$c/$n" } ++
-        carrierMetaOf(spark, table, v) // carried files may stay narrow
-      try {
-        val nv = commitManifest(fs, root, fullMeta,
-          { base =>
-            if (base != Some(v)) throw new RewriteConflict
-            carried ++ newLines
-          })
-        return Some((nv, small.size.toLong, carried.size.toLong))
-      } catch {
-        case _: RewriteConflict =>
-          attempt += 1
-          deleteAbandonedSegment(fs, root, newLines)
+      if (small.size < 2) Some(None)
+      else {
+        val smallBytes = small.map(lenOf).sum
+        val nOut = math.max(1L, (smallBytes + minBytes - 1) / minBytes).toInt
+        // compaction reads and writes the PHYSICAL space verbatim —
+        // renamed columns keep their on-disk names, tombstoned columns'
+        // data survives for time travel; the mapping meta rides along
+        val mapping = columnMapping(spark, table, Some(v))
+        val schema = readPhysical(spark, table, Some(v)).schema
+        val packedRows = applyDv(spark, root, small,
+          spark.read.schema(schema).parquet(
+            small.map(l => new Path(root, parseLine(l)._1).toString): _*))
+        // unbucketed: bin-pack into nOut files; bucketed: the declared
+        // spec routes rows (one file per bucket in the fresh segment),
+        // re-shuffling only the SMALL rows
+        val staged = stage(spark, fs, root,
+          if (spec.isEmpty) packedRows.coalesce(nOut) else packedRows,
+          mapping, Nil, "compaction", spec)
+        compactTestHook()
+        val smallSet = small.toSet
+        transact(spark, fs, root, table, staged,
+          Map("operation" -> "optimize") ++
+            carrierMetaOf(spark, table, v), // carried files may stay narrow
+          Expect(v), Some(_.filterNot(smallSet) ++ staged.lines))
+          .map(nv => Some((nv, small.size.toLong, carried.size.toLong)))
       }
     }
-    throw new CommitRaceExhausted(s"compactSmall on $table", attempt)
   }
 
   /** Merge-on-read UPDATE (the DV-update shape Delta ships as
@@ -2903,163 +2812,87 @@ object Versioned {
         Seq[org.apache.spark.sql.sources.Filter],
       post: Option[DataFrame => DataFrame],
       linePrune: String => Boolean = _ => true): Long = {
-    import org.apache.spark.sql.functions.{col, regexp_replace}
+    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var attemptBase = -1L
-    while (true) {
-      try {
-      val v = latestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
-      attemptBase = v
+    val opName = if (post.isDefined) "update" else "delete"
+    raceLoop(fs, root, table, s"DV $opName on $table") { v =>
       val lines = readFileLines(fs, root, v)
       val mapping = columnMapping(spark, table, Some(v))
       val physSchema = readPhysical(spark, table, Some(v)).schema
-      val touched = lines.filter { line =>
-        (parseLine(line)._2.flatMap(SegmentStats.parse) match {
-          case Some(st) => mayTouch(mapping.statsToLogical(st))
-          case None => true
-        }) && linePrune(line) // bloom point-lookup scoping, if any
-      }
-      if (touched.isEmpty) return 0L
-      val touchedFiles = touched
-        .map(l => new Path(root, parseLine(l)._1).toString)
-      val annotated = spark.read.schema(physSchema)
-        .parquet(touchedFiles: _*)
-        .withColumn("__graft_p", regexp_replace(
-          col("_metadata.file_path"), SchemeAuthorityRegex, ""))
-        .withColumn("__graft_i", col("_metadata.row_index"))
-      val live = dvPairs(spark, root, touched) match {
-        case Some(d) =>
-          annotated.join(d, Seq("__graft_p", "__graft_i"), "left_anti")
-        case None => annotated
-      }
-      val relDf = touched.map(parseLine).map { case (rel, _, _) =>
-        (qualifiedRelPath(fs, root, rel), rel) }
-        .toDF("__graft_p", DvFileCol)
-      val dvRel = s"dv/${java.util.UUID.randomUUID()}"
-      val dvDir = new Path(root, dvRel)
-      // matcher and transform speak the LOGICAL schema; the __graft
-      // scratch columns ride through the projection untouched
-      val matchedRows = matcher(mapping.applyRead(live))
-      matchedRows
-        .select(col("__graft_p"), col("__graft_i").as(DvIdxCol))
-        .join(relDf, "__graft_p")
-        .select(col(DvFileCol), col(DvIdxCol))
-        .write.parquet(dvDir.toString)
-      // counts from the written sidecar itself — the committed refs
-      // must describe exactly the bytes on disk, not a recompute
-      val counts = readDvEntries(spark, root, Seq(dvRel))
-        .groupBy(DvFileCol).count().as[(String, Long)].collect().toMap
-      val matched = counts.values.sum
-      dvTestHook() // test seam: lets specs interleave a commit here
-      def cleanup(extra: Seq[String]): Unit = {
-        try fs.delete(dvDir, true)
-        catch { case scala.util.control.NonFatal(_) => () }
-        deleteAbandonedSegment(fs, root, extra)
-      }
-      if (matched == 0L) { cleanup(Nil); return 0L }
-      val spec = bucketSpec(spark, table, Some(v))
-      // post-images: the updated matched rows, appended as one fresh
-      // segment (bucket-routed on bucketed tables — an update of the
-      // bucket column itself re-routes rows to their correct bucket)
-      val logicalNames = physSchema.fieldNames.toSeq
-        .filterNot(mapping.isDropped).map(mapping.logicalOf)
-      val postLines = post match {
-        case None => Nil
-        case Some(t) =>
-          val updated = t(matchedRows.drop("__graft_p", "__graft_i"))
-          require(updated.columns.map(_.toLowerCase(java.util.Locale.ROOT))
-            .sorted.sameElements(logicalNames
-              .map(_.toLowerCase(java.util.Locale.ROOT)).sorted),
-            "updateWithDv transform must preserve the table's columns")
-          // DV-update post-images are incoming rows like any append:
-          // refuse a violating SET (validated on the STAGED bytes)
-          // before the sidecar+segment commit
-          val staged =
-            writeSegmentLines(spark, fs, root, mapping.applyWrite(updated), spec)
-          try enforceStaged(spark, fs, root, staged,
-            Invariants.decode(readMeta(spark, table, v)),
-            "merge-on-read update post-images", mapping)
-          catch {
-            case e: InvariantViolation =>
-              try fs.delete(dvDir, true)
-              catch { case scala.util.control.NonFatal(_) => () }
-              throw e
+      val touched = lines.filter(inScope(mapping, mayTouch, linePrune))
+      if (touched.isEmpty) Some(0L)
+      else {
+        val touchedFiles = touched
+          .map(l => new Path(root, parseLine(l)._1).toString)
+        val live = liveWithRowIds(spark, root, touched,
+          spark.read.schema(physSchema).parquet(touchedFiles: _*))
+        val relDf = touched.map(parseLine).map { case (rel, _, _) =>
+          (qualifiedRelPath(fs, root, rel), rel) }
+          .toDF("__graft_p", DvFileCol)
+        val dvRel = s"dv/${java.util.UUID.randomUUID()}"
+        val dvDir = new Path(root, dvRel)
+        // matcher and transform speak the LOGICAL schema; the __graft
+        // scratch columns ride through the projection untouched
+        val matchedRows = matcher(mapping.applyRead(live))
+        matchedRows
+          .select(col("__graft_p"), col("__graft_i").as(DvIdxCol))
+          .join(relDf, "__graft_p")
+          .select(col(DvFileCol), col(DvIdxCol))
+          .write.parquet(dvDir.toString)
+        // counts from the written sidecar itself — the committed refs
+        // must describe exactly the bytes on disk, not a recompute
+        val counts = readDvEntries(spark, root, Seq(dvRel))
+          .groupBy(DvFileCol).count().as[(String, Long)].collect().toMap
+        val matched = counts.values.sum
+        dvTestHook() // test seam: lets specs interleave a commit here
+        def dropSidecar(): Unit =
+          try fs.delete(dvDir, true)
+          catch { case scala.util.control.NonFatal(_) => () }
+        if (matched == 0L) { dropSidecar(); Some(0L) }
+        else {
+          val spec = bucketSpec(spark, table, Some(v))
+          // post-images: the updated matched rows, appended as one fresh
+          // segment bucket-routed like [[rewrite]]'s replacement
+          val logicalNames = physSchema.fieldNames.toSeq
+            .filterNot(mapping.isDropped).map(mapping.logicalOf)
+          val staged = post match {
+            case None => Staged(Nil, mapping, spec)
+            case Some(t) =>
+              val updated = t(matchedRows.drop("__graft_p", "__graft_i"))
+              require(updated.columns.map(_.toLowerCase(java.util.Locale.ROOT))
+                .sorted.sameElements(logicalNames
+                  .map(_.toLowerCase(java.util.Locale.ROOT)).sorted),
+                "updateWithDv transform must preserve the table's columns")
+              // post-images are incoming rows: a violating SET refuses
+              try stage(spark, fs, root, mapping.applyWrite(updated), mapping,
+                Invariants.decode(readMeta(spark, table, v)),
+                "merge-on-read update post-images", spec)
+              catch { case e: InvariantViolation => dropSidecar(); throw e }
           }
-          staged
-      }
-      // the lines whose sidecar entries were computed — rebase safety
-      // hinges on exactly these staying byte-identical in the latest
-      val taggedLines = lines.filter(l => counts.contains(parseLine(l)._1))
-      lazy val guard = // lazy: evaluated only on an actual conflict
-        if (mapping.isEmpty) guardOf(physSchema, touchedFiles)
-        else Nil // name-space mismatch: conservatively conflict
-      val opName = if (post.isDefined) "update" else "delete"
-      val meta = Map("operation" -> opName, s"${opName}_mode" -> "dv") ++
-        mapping.toMeta ++
-        spec.map { case (c, n) => BucketKey -> s"$c/$n" } ++
-        carrierMetaOf(spark, table, v) // untouched files stay narrow
-      try {
-        commitManifest(fs, root, meta, { base =>
-          val baseLines =
-            if (base == Some(v)) lines
-            else {
-              // same rebase rule as [[rewrite]]: interleaved commits
-              // that left every TAGGED line byte-identical (appends,
-              // changes to untagged lines) are compatible — the
-              // sidecar's (file, row-index) pairs still describe the
-              // exact bytes on disk. A tagged line that changed (a
-              // concurrent rewrite or DV of the same file) invalidates
-              // the row indexes → full recompute.
-              val latest = base.toSeq.flatMap(readFileLines(fs, root, _))
-              if (!taggedLines.toSet.subsetOf(latest.toSet))
-                throw new RewriteConflict
-              // interleaved RENAME/DROP: recompute under the new meta
-              if (base.exists(b =>
-                  columnMapping(spark, table, Some(b)) != mapping))
-                throw new RewriteConflict
-              // same write-skew guard as [[rewrite]]: appended rows
-              // the predicate matches must not slip past the DV DML
-              if (interleavedMayMatch(latest, lines, guard))
-                throw new RewriteConflict
-              latest
-            }
-          baseLines.map { line =>
-            val rel = parseLine(line)._1
-            counts.get(rel).map(c => s"$line\tdv=$dvRel:$c").getOrElse(line)
-          } ++ postLines
-        }, Some(v), ContractKeys, revalidateInv = true)
-        return matched
-      } catch {
-        // InvariantsChanged resolves like a conflict: the next attempt
-        // re-reads the latest's declaration and validates against it
-        case _: RewriteConflict | _: InvariantsChanged if attempt >= 4 =>
-          throw new CommitRaceExhausted(s"DV $opName on $table",
-            attempt + 1)
-        case _: RewriteConflict | _: InvariantsChanged =>
-          attempt += 1
-          cleanup(postLines)
-      }
-      } catch {
-        // a concurrent VACUUM invalidated this attempt's base version
-        // mid-cycle: same resolution as a commit conflict — recompute
-        // against the new latest (staged sidecar/segment debris falls
-        // to the orphan-grace sweep). Same narrowing as [[rewrite]]:
-        // a FileNotFound with the base still latest is a genuine
-        // fault, not a race — surface it.
-        case e: Throwable if isVacuumRace(e) &&
-            tableMovedPast(fs, root, attemptBase) =>
-          if (attempt >= 4) throw new IllegalStateException(
-            s"DV merge-on-read on $table kept racing a concurrent " +
-              s"VACUUM (${attempt + 1} attempts) — retry when " +
-              "retention and the writer storm subside", e)
-          attempt += 1
+          // the lines whose sidecar entries were computed — rebase safety
+          // hinges on exactly these staying byte-identical in the latest:
+          // the sidecar's (file, row-index) pairs then still describe the
+          // exact bytes on disk, while a tagged line that changed (a
+          // concurrent rewrite or DV of the same file) invalidates them
+          val taggedLines = lines.filter(l => counts.contains(parseLine(l)._1))
+          lazy val guard = // lazy: evaluated only on an actual conflict
+            if (mapping.isEmpty) guardOf(physSchema, touchedFiles)
+            else Nil // name-space mismatch: conservatively conflict
+          val landed = transact(spark, fs, root, table, staged,
+            Map("operation" -> opName, s"${opName}_mode" -> "dv") ++
+              carrierMetaOf(spark, table, v), // untouched files stay narrow
+            Rebase(v, lines, taggedLines, () => guard),
+            Some(_.map { line =>
+              val rel = parseLine(line)._1
+              counts.get(rel).map(c => s"$line\tdv=$dvRel:$c").getOrElse(line)
+            } ++ staged.lines))
+          if (landed.isEmpty) dropSidecar()
+          landed.map(_ => matched)
+        }
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Whether any line of version `v` carries a deletion vector. */
@@ -3147,10 +2980,7 @@ object Versioned {
     require(rules.nonEmpty, "addInvariants needs at least one rule")
     val root = new Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (true) {
-      val v = latestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(s"no committed version in $table"))
+    raceLoop(fs, root, table, s"ADD CONSTRAINT on $table") { v =>
       checkWriter(root, v, manifestHeaders(fs, root, v))
       val existing = invariants(spark, table, Some(v))
       val names = existing.map(_.name).toSet
@@ -3162,19 +2992,11 @@ object Versioned {
       // and this metadata commit carries rows the new rules never
       // saw — refuse and re-validate against the new latest instead
       // of declaring an invariant over unchecked data
-      try return commitMetadataOnly(fs, root, spark, table, v,
+      try Some(commitMetadataOnly(fs, root, spark, table, v,
         Map("operation" -> "add_invariant") ++
-          Invariants.encode(existing ++ fresh), mustBase = true)
-      catch {
-        case _: RewriteConflict if attempt < 4 => attempt += 1
-        case _: RewriteConflict =>
-          throw new IllegalStateException(
-            s"ADD CONSTRAINT on $table kept losing to interleaved " +
-              s"commits (${attempt + 1} attempts) — retry when the " +
-              "writer storm subsides")
-      }
+          Invariants.encode(existing ++ fresh), mustBase = true))
+      catch { case _: RewriteConflict => None }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Drop a declared invariant by its `name` (e.g. `not_null(k)` or a

@@ -208,6 +208,10 @@ object NearDedup {
         sum((!col("dup_of_corpus") && !col("dup_in_chunk")).cast("long"))
           .as("srv"))
       .write.mode("overwrite").parquet(s"$outPath/flags/batch=$batchId")
+    // read-after-write: this lists and reads the flag files the write
+    // above just committed, so the flag path must live on a store
+    // whose new files and listings are immediately visible — a stale
+    // listing would silently drop survivors
     val flags = spark.read.parquet(s"$outPath/flags/batch=$batchId")
     val survivors = chunk.join(
       flags.where(!col("dup_of_corpus") && !col("dup_in_chunk"))
