@@ -4,12 +4,11 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Tiny sidecar files (flat one-object JSON or a bare value) next to
-  * persisted indexes: the content-addressed IVF codebook
-  * (`_ivf_codebook-<fp>.txt`), the legacy plain-dir LSH plane family
-  * (`_lsh_planes.json`), the streaming batch mirrors
-  * (`_neardedup_batch`, `_annbatch`). One read/write/parse
-  * implementation so the call sites cannot drift — and so a
-  * TRUNCATED sidecar (a crash between create and write leaves a
+  * persisted indexes: the content-addressed IVF codebook and product
+  * books (`_ivf_codebook-<fp>.txt`, `_ivf_pqbooks-<fp>.txt`), the
+  * streaming batch mirrors (`_neardedup_batch`, `_annbatch`). One
+  * read/write/parse implementation so the call sites cannot drift —
+  * and so a TRUNCATED sidecar (a crash between create and write leaves a
   * zero-byte file) fails with a named, actionable error instead of a
   * bare MatchError. */
 private[graft] object Sidecars {

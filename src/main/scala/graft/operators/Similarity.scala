@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    buckets/2^h of the corpus. This is the 100 TB path: the probe
   *    is a partition-pruned read, not a full scan.
   */
-object Similarity {
+object Similarity extends org.apache.spark.internal.Logging {
 
   def bruteForceTopK(df: DataFrame, embedding: String, id: String,
       query: Array[Float], k: Int): DataFrame = {
@@ -37,10 +37,8 @@ object Similarity {
       hyperplaneBucket(col(embedding), makePlanes(numPlanes, dim)))
 
   /** Manifest meta key carrying an LSH index's plane family as
-    * `<numPlanes>/<dim>` — the snapshot-layout successor of the
-    * `_lsh_planes.json` sidecar: it commits ATOMICALLY with the rows
-    * it describes (the r15 sidecar could be erased by the very write
-    * it guarded), and every append re-emits it so the newest
+    * `<numPlanes>/<dim>`: it commits ATOMICALLY with the rows it
+    * describes, and every append re-emits it so the newest
     * descriptor-carrying version always answers. */
   private[graft] val LshPlanesKey = "lsh_planes"
 
@@ -73,14 +71,32 @@ object Similarity {
         (latest, s.substring(0, cut).toInt, s.substring(cut + 1).toInt)
     }
 
-  /** The recorded plane family of a persisted LSH index — commit-meta
-    * descriptor for snapshot indexes, the legacy `_lsh_planes.json`
-    * sidecar for plain dirs; None for a bare pre-guard dir. */
+  /** [[lshState]] or a refusal naming `what` — every persisted LSH
+    * entry point's guard. A path without a descriptor (a plain parquet
+    * dir, or a snapshot table no LSH build committed) is rebuilt, not
+    * read on the caller's word. */
+  private def requireLshState(spark: org.apache.spark.sql.SparkSession,
+      path: String, what: String): (Long, Int, Int) =
+    lshState(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"$what: $path is not a snapshot LSH index (no committed version " +
+        "carries a plane-family descriptor) — rebuild it with " +
+        "writePersistedIndex"))
+
+  /** Refuse a caller's (numPlanes, dim) that disagrees with the
+    * index's recorded family: rows would land in (or be sought in)
+    * buckets hashed under other planes — recall loss with no error. */
+  private def requireFamily(what: String, path: String, numPlanes: Int,
+      dim: Int, np: Int, d: Int): Unit =
+    require(np == numPlanes && d == dim,
+      s"$what with plane family ($numPlanes, $dim) against $path " +
+        s"built under ($np, $d) — the wrong buckets would be used; use " +
+        "the recorded family or rebuild with writePersistedIndex")
+
+  /** The recorded plane family of a persisted LSH index (its
+    * commit-meta descriptor); None when the path holds none. */
   def planeFamilyOf(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[(Int, Int)] =
-    if (SnapshotScan.isSnapshot(spark, path))
-      lshState(spark, path).map { case (_, np, d) => (np, d) }
-    else readPlaneSidecar(spark, path)
+    lshState(spark, path).map { case (_, np, d) => (np, d) }
 
   /** Persist the index as a snapshot table BUCKETED by the sign
     * pattern — the on-disk shape the 100 TB story needs: a probe
@@ -97,77 +113,11 @@ object Similarity {
     ()
   }
 
-  /** Migrate a LEGACY plain-dir LSH index (`bucket=` partition dirs)
-    * into the snapshot layout IN PLACE — the rebucketBandIndex shape:
-    * the legacy dir has no commit log, so there is no CAS to race and
-    * the migration is inherently single-writer; the committed RESULT
-    * is a snapshot table, so every later append/probe takes the
-    * guarded paths. The loose legacy files are left in place — outside
-    * the manifest, invisible to readers, but not VACUUM-tracked;
-    * delete them once the new version is verified. The family comes
-    * from the legacy sidecar when present (checked against the
-    * caller's), else the caller's word — the heal-on-migrate
-    * counterpart of the old heal-on-append. */
-  def migratePersistedIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, numPlanes: Int, dim: Int): Unit = {
-    require(!SnapshotScan.isSnapshot(spark, path),
-      s"$path is already a snapshot LSH index")
-    requirePlaneFamily(spark, path, numPlanes, dim, "migrate")
-    val rows = spark.read.parquet(path)
-    // partition-dir inference types `bucket=` values as INT; the
-    // layout hash and the probes' ball literals are LONG — unify
-    val typed = rows.withColumn("bucket", col("bucket").cast("long"))
-    Versioned.commitBucketed(typed, path, "bucket",
-      lshBuckets(numPlanes), mode = "overwrite",
-      meta = lshMeta(numPlanes, dim))
-    ()
-  }
-
-  /** The `_lsh_planes.json` sidecar: the (numPlanes, dim) family an
-    * index's buckets were hashed under. Appends and probes with a
-    * DIFFERENT family would silently place/look for vectors in the
-    * wrong `bucket=` dirs (recall loss with no error), so both verify
-    * against it — the LSH analogue of the IVF paths' frozen-codebook
-    * guard. */
-  private def planesPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_lsh_planes.json")
-
-  /** LEGACY plane family sidecar of a plain-dir LSH index; None for
-    * pre-sidecar dirs. A truncated/corrupt sidecar fails with a named
-    * error, never a silent pass-through. (Snapshot indexes carry the
-    * family in commit meta — [[planeFamilyOf]].) */
-  def readPlaneSidecar(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[(Int, Int)] = {
-    val p = planesPath(path)
-    Sidecars.read(spark, p).map { raw =>
-      val m = Sidecars.parseFlatJson(raw, p)
-      (m("num_planes").toInt, m("dim").toInt)
-    }
-  }
-
-  /** Refuse when a caller's (numPlanes, dim) disagree with the index's
-    * recorded family; pre-sidecar dirs (no record) pass through with
-    * the caller's word — the legacy behavior. */
-  private def requirePlaneFamily(spark: org.apache.spark.sql.SparkSession,
-      path: String, numPlanes: Int, dim: Int, what: String): Unit =
-    readPlaneSidecar(spark, path).foreach { case (np, d) =>
-      require(np == numPlanes && d == dim,
-        s"$what with plane family ($numPlanes, $dim) against $path " +
-          s"built under ($np, $d) — vectors would land in (or be " +
-          "sought in) the wrong bucket= dirs; use the recorded family " +
-          "or rebuild with writePersistedIndex")
-    }
-
-  /** Top-k probe against a persisted index. The Hamming-radius predicate
-    * is a deterministic function of the PARTITION column, so Catalyst
-    * evaluates it against the directory values at planning time — only
-    * matching `bucket=` dirs are listed and read. */
   /** Driver-side bucket of a query vector: sign-pack of plane dot
     * products. ONE definition shared by both probe paths — it must
     * stay bit-for-bit in sync with the executor-side
     * HyperplaneBucket semantics (> 0 test, min-length zip), or a
-    * probe would aim at the wrong `bucket=` directory and return
-    * empty results. */
+    * probe would aim at the wrong bucket and return empty results. */
   private def queryBucket(planes: Seq[Array[Double]],
       query: Array[Float]): Long =
     planes.zipWithIndex.map { case (p, i) =>
@@ -189,24 +139,10 @@ object Similarity {
   def appendToPersistedIndex(df: DataFrame, embedding: String,
       numPlanes: Int, dim: Int, path: String): Unit = {
     val spark = df.sparkSession
-    if (!SnapshotScan.isSnapshot(spark, path))
-      throw new IllegalArgumentException(
-        s"$path is not a snapshot LSH index (no commit log) — migrate " +
-          "the legacy plain-dir index first with migratePersistedIndex")
-    def state(): (Long, Int, Int) = lshState(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"append: $path carries no plane-family descriptor — " +
-          "rebuild it with writePersistedIndex"))
-    def requireFamily(np: Int, d: Int): Unit =
-      require(np == numPlanes && d == dim,
-        s"append with plane family ($numPlanes, $dim) against $path " +
-          s"built under ($np, $d) — vectors would land in the wrong " +
-          "buckets; use the recorded family or rebuild with " +
-          "writePersistedIndex")
     def layoutOf(v: Long): Option[Int] =
       Versioned.bucketSpec(spark, path, Some(v)).map(_._2)
-    val (v0, np0, d0) = state()
-    requireFamily(np0, d0)
+    val (v0, np0, d0) = requireLshState(spark, path, "append")
+    requireFamily("append", path, numPlanes, dim, np0, d0)
     val n0 = layoutOf(v0).getOrElse(throw new IllegalStateException(
       s"$path latest version declares no bucket layout — rebuild " +
         "with writePersistedIndex"))
@@ -231,8 +167,8 @@ object Similarity {
       // diagnose the ACTUAL refusal cause — "retry the storm" advice
       // on a persistent family/layout problem would send the operator
       // in circles
-      val (v2, np2, d2) = state()
-      requireFamily(np2, d2)
+      val (v2, np2, d2) = requireLshState(spark, path, "append")
+      requireFamily("append", path, numPlanes, dim, np2, d2)
       val n2 = layoutOf(v2)
       if (!n2.contains(n0)) throw new IllegalStateException(
         s"$path bucket layout changed mid-append " +
@@ -270,62 +206,37 @@ object Similarity {
         flip.foldLeft(center)((a, b) => a ^ (1L << b))).toSeq))
   }
 
+  /** Top-k probe against a persisted snapshot LSH index. The plane
+    * family and the data resolve off ONE pinned version; the Hamming
+    * ball around the query's bucket is enumerated driver-side, and its
+    * `isin` on the bucket column bucket-prunes the scan at PLAN time
+    * (a bit_count expression cannot — it is not an equality/IN
+    * constraint the layout hash can evaluate). A ball over
+    * [[MaxProbeBall]] literals falls back to the bit_count filter:
+    * correct, just unpruned. */
   def probePersistedIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, embedding: String, id: String, query: Array[Float],
       numPlanes: Int, k: Int, probeHamming: Int = 1): DataFrame = {
-    val planes = makePlanes(numPlanes, query.length)
-    val qBucket = queryBucket(planes, query)
-    val q = lit(query.map(_.toDouble))
-    val rows =
-      if (SnapshotScan.isSnapshot(spark, path)) {
-        val (v, np, d) = lshState(spark, path).getOrElse(
-          throw new IllegalArgumentException(
-            s"probe: $path carries no plane-family descriptor — " +
-              "rebuild it with writePersistedIndex"))
-        require(np == numPlanes && d == query.length,
-          s"probe with plane family ($numPlanes, ${query.length}) " +
-            s"against $path built under ($np, $d) — the wrong buckets " +
-            "would be searched; use the recorded family")
-        val frame = SnapshotScan.frameAt(spark, path, v)
-        // the Hamming ball, enumerated driver-side: the isin on the
-        // bucket column is what BUCKET-PRUNES the snapshot scan (a
-        // bit_count expression cannot — it is not an equality/IN
-        // constraint the layout hash can evaluate at plan time)
-        hammingBall(qBucket, numPlanes, probeHamming) match {
-          case Some(ball) => frame.where(col("bucket").isin(ball: _*))
-          case None => frame.where(
-            bit_count(col("bucket").bitwiseXOR(lit(qBucket)))
-              <= probeHamming)
-        }
-      } else {
-        // legacy plain dir: the bit_count predicate on the PARTITION
-        // column prunes bucket= dirs at planning time, as before
-        requirePlaneFamily(spark, path, numPlanes, query.length, "probe")
-        spark.read.parquet(path)
-          .where(bit_count(col("bucket").bitwiseXOR(lit(qBucket)))
-            <= probeHamming)
-      }
-    rows
-      .withColumn("score", CosineSimilarity(col(embedding), q))
-      .select(col(id), round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col(id).asc)
-      .limit(k)
+    val (v, np, d) = requireLshState(spark, path, "probe")
+    requireFamily("probe", path, numPlanes, query.length, np, d)
+    val qBucket = queryBucket(makePlanes(numPlanes, query.length), query)
+    val frame = SnapshotScan.frameAt(spark, path, v)
+    val rows = hammingBall(qBucket, numPlanes, probeHamming) match {
+      case Some(ball) => frame.where(col("bucket").isin(ball: _*))
+      case None => frame.where(
+        bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
+    }
+    bruteForceTopK(rows, embedding, id, query, k)
   }
 
   def lshTopK(indexed: DataFrame, embedding: String, id: String,
       query: Array[Float], numPlanes: Int, k: Int,
       probeHamming: Int = 1): DataFrame = {
-    val dim = query.length
-    val planes = makePlanes(numPlanes, dim)
     // query bucket computed driver-side (same plane family)
-    val qBucket = queryBucket(planes, query)
-    val q = lit(query.map(_.toDouble))
-    indexed
-      .where(bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming)
-      .withColumn("score", CosineSimilarity(col(embedding), q))
-      .select(col(id), round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col(id).asc)
-      .limit(k)
+    val qBucket = queryBucket(makePlanes(numPlanes, query.length), query)
+    bruteForceTopK(indexed.where(
+      bit_count(col("bucket").bitwiseXOR(lit(qBucket))) <= probeHamming),
+      embedding, id, query, k)
   }
 
   /** IVF codebook: (list_id, centroid) entries. Built deterministically
@@ -480,12 +391,8 @@ object Similarity {
       query: Array[Float], codebook: IvfCodebook, nprobe: Int,
       k: Int): DataFrame = {
     val probeLists = probeCells(codebook, query, nprobe)
-    val q = lit(query.map(_.toDouble))
-    indexed.where(col("list_id").isin(probeLists.toSeq: _*))
-      .withColumn("score", CosineSimilarity(col(embedding), q))
-      .select(col(id), round(col("score"), 4).as("score"))
-      .orderBy(col("score").desc, col(id).asc)
-      .limit(k)
+    bruteForceTopK(indexed.where(col("list_id").isin(probeLists.toSeq: _*)),
+      embedding, id, query, k)
   }
 
   /** Assignment quality of one cohort of vectors: how many, and their
@@ -565,9 +472,7 @@ object Similarity {
   // Reading (version, meta, codebook, data) all off ONE pinned version
   // makes retrain-in-place legal: the overwrite commit IS the swap,
   // and a live probe either resolved the old version (reads old cells,
-  // old codebook — consistent) or the new one. The plain-dir layout
-  // this replaces (r15) could not retrain in place for exactly that
-  // reason.
+  // old codebook — consistent) or the new one.
 
   private[graft] val IvfCodebookKey = "ivf_codebook"
   private[graft] val IvfPqKey = "ivf_pq"
@@ -630,58 +535,115 @@ object Similarity {
 
   private def codebookFileOf(fp: String) = s"_ivf_codebook-$fp.txt"
 
-  /** Write the codebook sidecar (content-addressed: the name carries
-    * the fingerprint of the bytes, so when the file already exists it
-    * is byte-identical by construction and the write is SKIPPED —
+  /** Write a build's sidecars — the codebook and, for a product code,
+    * its books — BEFORE the commit that references them: a crash in
+    * between leaves an orphan file, never a referenced-but-missing
+    * sidecar. Both are content-addressed (the name carries the
+    * fingerprint of the bytes, so when the file already exists it is
+    * byte-identical by construction and the write is SKIPPED —
     * `Sidecars.write`'s rename-overwrite is delete-then-rename on
     * local FS and non-atomic on object stores, so even an
     * identical-bytes rewrite would open a reader-visible missing-file
     * window; a retrain storm converging on the same seed codebook hit
-    * exactly that in the r17 IVF-storm run) and return its file name
-    * for the commit meta. */
-  private def writeCodebookSidecar(spark: org.apache.spark.sql.SparkSession,
-      path: String, cb: IvfCodebook, fp: String): String = {
-    val name = codebookFileOf(fp)
-    Sidecars.write(spark,
-      new org.apache.hadoop.fs.Path(path, name), encodeCodebook(cb),
-      contentAddressed = true)
-    name
+    * exactly that in the r17 IVF-storm run). */
+  private def writeSidecars(spark: org.apache.spark.sql.SparkSession,
+      path: String, b: IvfBuild): Unit = {
+    def put(name: String, content: String): Unit =
+      Sidecars.write(spark, new org.apache.hadoop.fs.Path(path, name),
+        content, contentAddressed = true)
+    put(codebookFileOf(b.fp), encodeCodebook(b.codebook))
+    b.code match {
+      case p: IvfCode.Product => put(p.file, ProductQuant.encodeBooks(p.books))
+      case _ => ()
+    }
   }
 
   private def pqBooksFileOf(fp: String) = s"_ivf_pqbooks-$fp.txt"
 
-  /** Write the product-codebooks sidecar — content-addressed like the
-    * IVF codebook's ([[writeCodebookSidecar]]): the fingerprint names
-    * the bytes, so an existing destination is byte-identical and the
-    * write is skipped (no delete-then-rename window). */
-  private def writePqBooksSidecar(spark: org.apache.spark.sql.SparkSession,
-      path: String, books: ProductQuant.PqCodebooks, fp: String): String = {
-    val name = pqBooksFileOf(fp)
-    Sidecars.write(spark,
-      new org.apache.hadoop.fs.Path(path, name),
-      ProductQuant.encodeBooks(books), contentAddressed = true)
-    name
-  }
-
   private def ivfMeta(cbFile: String, fp: String,
-      baseline: IvfStats, epoch: Long = 0L): Map[String, String] = Map(
+      baseline: IvfStats, epoch: Long): Map[String, String] = Map(
     IvfCodebookKey -> cbFile,
     IvfFpKey -> fp,
     IvfBaselineKey ->
       s"${baseline.vectors}/${java.lang.Double.toString(baseline.meanSim)}",
     IvfEpochKey -> epoch.toString)
 
+  /** How a persisted IVF index stores its rows — the one thing its
+    * build, seed, append and rebuild differ in between the three
+    * codes. `encode` assigns `df` to its cells under `codebook` and
+    * stages the code's row schema, keeping [[AssignSimCol]] for the
+    * quality aggregate (`id` names the vector id; the float code keeps
+    * every column and ignores it). `meta` is the scheme's descriptor
+    * keys; `scheme` its [[IvfPqKey]] value (0: none). */
+  private[graft] sealed trait IvfCode {
+    def scheme: Int
+    def meta: Map[String, String]
+    def encode(df: DataFrame, embedding: String, id: Option[String],
+        codebook: IvfCodebook): DataFrame
+  }
+
+  private[graft] object IvfCode {
+    /** Float rows: the source columns plus `list_id`. */
+    case object Flat extends IvfCode {
+      val scheme = 0
+      val meta = Map.empty[String, String]
+      def encode(df: DataFrame, embedding: String, id: Option[String],
+          codebook: IvfCodebook): DataFrame =
+        ivfAssignWithSim(df, embedding, codebook)
+    }
+
+    /** Symmetric int8 codes, ~1/4 the bytes (see [[ivfPqIndex]]):
+      * (id, list_id, pq_scale, pq_code). */
+    case object Int8 extends IvfCode {
+      val scheme = 1
+      val meta = Map(IvfPqKey -> "1")
+      def encode(df: DataFrame, embedding: String, id: Option[String],
+          codebook: IvfCodebook): DataFrame =
+        withPqCodes(ivfAssignWithSim(df, embedding, codebook), embedding)
+          .select(col(id.get), col("list_id"), col("pq_scale"),
+            col("pq_code"), col(AssignSimCol))
+    }
+
+    /** Product codes, one byte per subspace (see [[ivfProductIndex]]):
+      * (id, list_id, pq_code); the books live in the content-addressed
+      * sidecar `file`, fingerprinted `fp`. */
+    final case class Product(books: ProductQuant.PqCodebooks, file: String,
+        fp: String) extends IvfCode {
+      val scheme = 2
+      def meta: Map[String, String] =
+        Map(IvfPqKey -> "2", PqBooksKey -> file, PqBooksFpKey -> fp)
+      def encode(df: DataFrame, embedding: String, id: Option[String],
+          codebook: IvfCodebook): DataFrame = {
+        requireProductDims(codebook, books)
+        ivfAssignWithSim(df, embedding, codebook)
+          .withColumn("pq_code", ProductQuant.encodeCol(col(embedding), books))
+          .select(col(id.get), col("list_id"), col("pq_code"),
+            col(AssignSimCol))
+      }
+    }
+
+    object Product {
+      def apply(books: ProductQuant.PqCodebooks): Product = {
+        val fp = ProductQuant.fingerprint(books)
+        Product(books, pqBooksFileOf(fp), fp)
+      }
+    }
+  }
+
   /** Everything a reader needs about a persisted IVF index, resolved
     * from ONE pinned version: `version` is the data snapshot probes
     * must scan, `codebook`/`fingerprint` the assignment family,
     * `baseline` the drift reference, `buckets` the declared layout
-    * appends must keep. */
+    * appends must keep, `code` how the rows are stored. */
   final case class IvfIndexState(version: Long, codebook: IvfCodebook,
       fingerprint: String, codebookFile: String, baseline: IvfStats,
-      buckets: Int, pq: Boolean = false, epoch: Long = 0L,
-      pqBooks: Option[ProductQuant.PqCodebooks] = None,
-      pqBooksFile: Option[String] = None,
-      pqFingerprint: Option[String] = None)
+      buckets: Int, epoch: Long, code: IvfCode) {
+    def pq: Boolean = code != IvfCode.Flat
+    def pqBooks: Option[ProductQuant.PqCodebooks] =
+      PartialFunction.condOpt(code) { case p: IvfCode.Product => p.books }
+    def pqFingerprint: Option[String] =
+      PartialFunction.condOpt(code) { case p: IvfCode.Product => p.fp }
+  }
 
   /** Resolve the current state of a persisted IVF index: pin the
     * latest version, then scan manifest meta newest-first from it for
@@ -696,46 +658,52 @@ object Similarity {
         f <- m.get(IvfCodebookKey)
         fp <- m.get(IvfFpKey)
         b <- m.get(IvfBaselineKey)
-      } yield (f, fp, b, m.contains(IvfPqKey),
-        m.get(IvfEpochKey).flatMap(s =>
-          scala.util.Try(s.toLong).toOption).getOrElse(0L),
-        m.get(PqBooksKey), m.get(PqBooksFpKey))
-    }.map { case (latest, (f, fp, b, pq, epoch, booksFile, booksFp)) =>
-      val p = new org.apache.hadoop.fs.Path(path, f)
-      // the sidecar is written BEFORE the commit that references it,
-      // so a miss here is either a concurrent (non-content-addressed)
-      // rewrite's rename window — the bounded retry absorbs it — or a
-      // genuine out-of-band deletion, reported after the retries drain
-      val raw = Sidecars.readRetrying(spark, p).getOrElse(
-        throw new IllegalStateException(
-          s"IVF index $path references codebook sidecar $f which does " +
-            "not exist — the sidecar was deleted out-of-band; rebuild " +
-            "or retrain the index"))
-      // product-codebooks sidecar (scheme 2 only): same
-      // write-before-reference contract as the IVF codebook's
-      val books = booksFile.map { bf =>
-        ProductQuant.decodeBooks(Sidecars.readRetrying(spark,
-          new org.apache.hadoop.fs.Path(path, bf)).getOrElse(
+      } yield (f, fp, b, m)
+    }.map { case (latest, (f, fp, b, m)) =>
+      // the sidecars are written BEFORE the commit that references
+      // them, so a miss here is either a concurrent (non-content-
+      // addressed) rewrite's rename window — the bounded retry absorbs
+      // it — or a genuine out-of-band deletion, reported after the
+      // retries drain
+      def sidecar(name: String, what: String): String =
+        Sidecars.readRetrying(spark,
+          new org.apache.hadoop.fs.Path(path, name)).getOrElse(
           throw new IllegalStateException(
-            s"IVF-PQ index $path references product-codebooks sidecar " +
-              s"$bf which does not exist — the sidecar was deleted " +
-              "out-of-band; rebuild the index")))
-      }
+            s"IVF index $path references $what sidecar $name which " +
+              "does not exist — the sidecar was deleted out-of-band; " +
+              "rebuild the index"))
+      val raw = sidecar(f, "codebook")
+      val code =
+        if (!m.contains(IvfPqKey)) IvfCode.Flat
+        else m.get(PqBooksKey).fold[IvfCode](IvfCode.Int8) { bf =>
+          val books = ProductQuant.decodeBooks(sidecar(bf, "product-codebooks"))
+          IvfCode.Product(books, bf, m.getOrElse(PqBooksFpKey,
+            ProductQuant.fingerprint(books)))
+        }
       val cut = b.lastIndexOf('/')
       IvfIndexState(latest, decodeCodebook(raw), fp, f,
         IvfStats(b.substring(0, cut).toLong, b.substring(cut + 1).toDouble),
         Versioned.bucketSpec(spark, path, Some(latest)).map(_._2)
-          .getOrElse(0), pq, epoch, books, booksFile, booksFp)
+          .getOrElse(0),
+        m.get(IvfEpochKey).flatMap(s =>
+          scala.util.Try(s.toLong).toOption).getOrElse(0L),
+        code)
     }
 
-  private def requireIvfState(spark: org.apache.spark.sql.SparkSession,
+  /** [[loadPersistedIvf]] or a refusal naming `what` — the guard of
+    * every persisted IVF entry point. A path without a descriptor (a
+    * plain parquet dir, or a snapshot table no IVF build committed) is
+    * rebuilt, not read on the caller's word. */
+  private[graft] def requireIvfState(spark: org.apache.spark.sql.SparkSession,
       path: String, what: String): IvfIndexState =
-    loadPersistedIvf(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"$what: $path is not a snapshot IVF index (no committed " +
-          "version carries an IVF descriptor) — build it with " +
-          "writePersistedIvf, or migrate a legacy plain-dir index with " +
-          "migratePersistedIvf"))
+    ivfOrRefuse(loadPersistedIvf(spark, path), path, what)
+
+  private def ivfOrRefuse(st: Option[IvfIndexState], path: String,
+      what: String): IvfIndexState =
+    st.getOrElse(throw new IllegalArgumentException(
+      s"$what: $path is not a snapshot IVF index (no committed version " +
+        "carries an IVF descriptor) — rebuild it with writePersistedIvf, " +
+        "writePersistedIvfPq or writePersistedIvfProduct"))
 
   private def requireFingerprint(st: IvfIndexState, cb: IvfCodebook,
       path: String, what: String): Unit =
@@ -745,11 +713,49 @@ object Similarity {
         "a different codebook; resolve the committed one with " +
         "loadPersistedIvf (or probe without a codebook argument)")
 
-  /** Mean assigned-centroid cosine of `df` under `cents` — ONE narrow
-    * scan + a scalar aggregate. */
-  private[graft] def assignmentQuality(df: DataFrame, embedding: String,
-      cents: Array[(Long, Array[Double])]): IvfStats =
-    qualityOf(assignWithSim(df, embedding, cents))
+  /** Entry-point names per lifecycle step, indexed by
+    * [[IvfCode.scheme]] — the text of every cross-scheme refusal, so a
+    * caller holding the wrong kind of index is told which entry point
+    * serves it (and codes would never be read as floats, or the
+    * reverse). */
+  private val IvfEntryPoints: Map[String, Seq[String]] = Map(
+    "append" -> Seq("appendToPersistedIvf", "appendToPersistedIvfPq",
+      "appendToPersistedIvfProduct"),
+    "probe" -> Seq("probePersistedIvf", "probePersistedIvfPq",
+      "probePersistedIvfProduct"),
+    "batch-probe" -> Seq("probePersistedIvfMany", "probePersistedIvfPqMany",
+      "probePersistedIvfProductMany"),
+    "rebuild" -> Seq(
+      "retrainPersistedIvf (in place: it carries its own embeddings)",
+      "rebuildPersistedIvfPq from the source table (its int8 codes are " +
+        "lossy), or writePersistedIvfPq to a fresh path",
+      "rebuildPersistedIvfProduct from the source table (its codes are " +
+        "lossy), or writePersistedIvfProduct to a fresh path"))
+
+  private val IvfSchemeNames =
+    Seq("a float IVF index", "an int8 IVF-PQ index",
+      "a product-quantized index")
+
+  /** Refuse an index whose code is not scheme `want` for `step`. */
+  private def requireCode(st: IvfIndexState, path: String, step: String,
+      want: Int): IvfIndexState = {
+    val have = st.code.scheme
+    require(have == want,
+      s"$path is ${IvfSchemeNames(have)}, not ${IvfSchemeNames(want)} — " +
+        s"$step it with ${IvfEntryPoints(step)(have)}")
+    st
+  }
+
+  /** Pin a persisted IVF index for a probe: its state off ONE version
+    * (a retrain landing concurrently is invisible — old snapshot, old
+    * codebook: consistent — and the next probe sees the new index
+    * atomically; the commit is the swap), the scheme checked, and that
+    * version's frame. */
+  private def pinIvf(spark: org.apache.spark.sql.SparkSession, path: String,
+      step: String, want: Int): (IvfIndexState, DataFrame) = {
+    val st = requireCode(requireIvfState(spark, path, step), path, step, want)
+    (st, SnapshotScan.frameAt(spark, path, st.version))
+  }
 
   /** The quality aggregate over a frame that already carries
     * [[AssignSimCol]] — so append paths that materialized the
@@ -777,6 +783,114 @@ object Similarity {
       codebook: IvfCodebook): DataFrame =
     assignWithSim(df, embedding, codebook.entries)
 
+  /** A staged IVF build: codebook and code, the encoded rows (still
+    * carrying [[AssignSimCol]]), their quality baseline and the
+    * layout's bucket count. */
+  private final case class IvfBuild(codebook: IvfCodebook, code: IvfCode,
+      rows: DataFrame, stats: IvfStats, buckets: Int) {
+    lazy val fp: String = fingerprint(codebook)
+    def meta(epoch: Long): Map[String, String] =
+      ivfMeta(codebookFileOf(fp), fp, stats, epoch) ++ code.meta
+  }
+
+  /** ONE assignment pass, materialized chunk-local: the checkpointed
+    * frame feeds both the bucketed write and the baseline aggregate,
+    * and a lost CAS re-stages the same blocks without recomputing. The
+    * baseline comes from the TRUE embeddings before any quantization,
+    * so drift means the same thing under every code. */
+  private def stageIvf(df: DataFrame, embedding: String, id: Option[String],
+      codebook: IvfCodebook, code: IvfCode, buckets: Int): IvfBuild = {
+    val rows = code.encode(df, embedding, id, codebook).localCheckpoint(true)
+    IvfBuild(codebook, code, rows, qualityOf(rows), buckets)
+  }
+
+  /** Create-mode commit of a build on an empty path (epoch 0): of two
+    * racing creators exactly one commits version 0; false for the
+    * other. */
+  private def createIvf(spark: org.apache.spark.sql.SparkSession,
+      path: String, b: IvfBuild): Boolean = {
+    writeSidecars(spark, path, b)
+    try {
+      Versioned.commitBucketed(b.rows.drop(AssignSimCol), path, "list_id",
+        b.buckets, "create", b.meta(0L))
+      true
+    } catch { case _: Versioned.CreateConflict => false }
+  }
+
+  /** The one overwrite loop of every IVF build, retrain and rebuild, on
+    * [[Versioned.raceLoop]]. Each attempt pins the index state (the
+    * first reuses `pinned`), stages through `stage` — which chooses
+    * the rows and the code — writes the sidecars and CAS-commits the
+    * overwrite on the pinned version. The EPOCH ([[IvfEpochKey]]) is
+    * derived from that same pinned state, so a racing commit fails the
+    * CAS and the retry re-derives it from the new head: a stalled
+    * build can never commit a stale lower epoch over a newer one
+    * (that regressed the "monotonic" contract and re-armed epoch values
+    * already handed out as appender tokens — an absorbed cohort would
+    * then see epoch == token, skip its anti-join, and duplicate).
+    * `bump` advances it (a source-frame rewrite); otherwise it rides
+    * through. A path whose versions carry no descriptor overwrites at
+    * epoch 0. */
+  private def overwriteIvf(spark: org.apache.spark.sql.SparkSession,
+      path: String, what: String, pinned: Option[IvfIndexState],
+      bump: Boolean)(stage: Option[IvfIndexState] => IvfBuild): IvfBuild = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    var st = pinned
+    Versioned.raceLoop(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      path, what, pinned.map(_.version)) { base =>
+      if (!st.exists(_.version == base)) st = loadPersistedIvf(spark, path)
+      val b = stage(st)
+      writeSidecars(spark, path, b)
+      val epoch = st.fold(0L)(s => if (bump) s.epoch + 1 else s.epoch)
+      Versioned.commitIf(b.rows.drop(AssignSimCol), path, "overwrite",
+        b.meta(epoch), st.fold(base)(_.version),
+        Some(("list_id", b.buckets))).map(_ => b)
+    }
+  }
+
+  /** The one build body of [[writePersistedIvf]], [[writePersistedIvfPq]]
+    * and [[writePersistedIvfProduct]]: stage once; on an empty path
+    * commit in create mode, else (or on losing the create race)
+    * overwrite with an epoch bump — a source-frame overwrite of an
+    * existing index absorbs the source. The staged frame is a
+    * checkpoint, so retries recommit blocks without recompute. */
+  private def buildIvf(df: DataFrame, embedding: String, id: Option[String],
+      codebook: IvfCodebook, code: IvfCode, path: String): IvfStats = {
+    require(codebook.entries.nonEmpty, "empty codebook")
+    val spark = df.sparkSession
+    val b = stageIvf(df, embedding, id, codebook, code,
+      ivfBuckets(codebook.entries.length))
+    if (!(Versioned.versions(spark, path).isEmpty && createIvf(spark, path, b)))
+      overwriteIvf(spark, path, s"index build of $path",
+        loadPersistedIvf(spark, path), bump = true)(_ => b)
+    b.stats
+  }
+
+  /** The one rebuild body of [[retrainPersistedIvf]],
+    * [[rebuildPersistedIvfPq]] and [[rebuildPersistedIvfProduct]]: each
+    * attempt checks the pinned index is a `want`-scheme IVF index,
+    * trains a fresh codebook over `rows` of it (and the code, via
+    * `train` over the same narrow frame), and stages them. The CAS base
+    * is pinned BEFORE staging: an append landing in between fails the
+    * CAS and the retry re-reads its rows — reading the base after
+    * staging would let it pass the CAS and be silently erased. */
+  private def rebuildIvf(spark: org.apache.spark.sql.SparkSession,
+      path: String, what: String, want: Int, bump: Boolean,
+      embedding: String, id: String, nlist: Int, refineIters: Int)(
+      rows: IvfIndexState => DataFrame)(
+      train: DataFrame => IvfCode): IvfBuild = {
+    val pinned = requireCode(requireIvfState(spark, path, what), path,
+      "rebuild", want)
+    overwriteIvf(spark, path, s"$what of $path", Some(pinned), bump) { st =>
+      val all = rows(requireCode(ivfOrRefuse(st, path, what), path,
+        "rebuild", want))
+      val narrow = all.select(col(id), col(embedding))
+      val cb = buildCodebook(narrow, embedding, id, nlist, refineIters)
+      stageIvf(all, embedding, Some(id), cb, train(narrow), ivfBuckets(nlist))
+    }
+  }
+
   /** Persist the IVF index as a snapshot table BUCKETED by list_id —
     * one bucket per codebook cell, committed with the full IVF
     * descriptor (codebook sidecar reference, fingerprint, drift
@@ -787,67 +901,37 @@ object Similarity {
     * in-memory index. (Cells share a bucket when their ids collide
     * under the layout hash — a small constant read amplification the
     * pushed-down parquet filter absorbs; the PRUNED fraction is what
-    * scales.) ONE assignment pass: the checkpointed frame feeds both
-    * the bucketed write and the baseline aggregate. Returns the
-    * baseline. Legacy plain-dir files under `path` (a pre-snapshot
-    * build) are left in place — invisible to snapshot readers; delete
-    * them once the new version is verified (rebucketBandIndex's
-    * migration wording). */
+    * scales.) Returns the baseline. Files under `path` that no commit
+    * references (a plain parquet dir) are left in place — invisible to
+    * snapshot readers; delete them once the new version is verified. */
   def writePersistedIvf(df: DataFrame, embedding: String,
-      codebook: IvfCodebook, path: String): IvfStats = {
-    require(codebook.entries.nonEmpty, "empty codebook")
-    val spark = df.sparkSession
-    val assigned = ivfAssignWithSim(df, embedding, codebook)
-      .localCheckpoint(true)
-    val stats = qualityOf(assigned)
-    val fp = fingerprint(codebook)
-    // sidecar BEFORE the commit that references it: a crash in between
-    // leaves an orphan file, never a referenced-but-missing codebook
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    commitIndexOverwrite(assigned.drop(AssignSimCol), path,
-      ivfBuckets(codebook.entries.length),
-      epoch => ivfMeta(cbFile, fp, stats, epoch))
-    stats
-  }
+      codebook: IvfCodebook, path: String): IvfStats =
+    buildIvf(df, embedding, None, codebook, IvfCode.Flat, path)
 
-  /** Overwrite-commit an index build with an EPOCH-SAFE bump
-    * ([[IvfEpochKey]]): a source-frame overwrite of an existing index
-    * absorbs the source, so it must advance the epoch — and the new
-    * value must be derived from the SAME committed state the commit's
-    * CAS base pins. The previous read-increment-overwrite let a
-    * stalled builder commit a STALE lower epoch over a newer one,
-    * regressing the "monotonic" contract and re-arming epoch values
-    * already handed out as appender tokens (an absorbed cohort would
-    * then see epoch == token, skip its anti-join, and duplicate).
-    * Here a racing commit fails the CAS and the retry re-derives the
-    * epoch from the new head; the staged frame is a checkpoint, so
-    * retries recommit blocks without recompute. First build (no
-    * committed version) goes through create-mode CAS; losing THAT
-    * race falls through to the overwrite branch. */
-  private def commitIndexOverwrite(staged: DataFrame, path: String,
-      buckets: Int, meta: Long => Map[String, String]): Unit = {
-    val spark = staged.sparkSession
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 5) throw new Versioned.CommitRaceExhausted(
-        s"index build of $path", attempts - 1)
-      val vs = Versioned.versions(spark, path)
-      if (vs.isEmpty) {
-        try {
-          Versioned.commitBucketed(staged, path, "list_id", buckets,
-            "create", meta(0L))
-          return
-        } catch { case _: Versioned.CreateConflict => () } // re-loop
-      } else {
-        val base = vs.max
-        val epoch = loadPersistedIvf(spark, path).map(_.epoch + 1)
-          .getOrElse(0L)
-        if (Versioned.commitIf(staged, path, "overwrite", meta(epoch),
-            base, Some(("list_id", buckets))).isDefined) return
-      }
+  /** The one seed body: an EMPTY snapshot IVF index iff none exists —
+    * create-mode CAS, so of two racing seeders exactly one commits
+    * version 0 and the loser proceeds against it (the band index's
+    * ensureIndex shape). `carrier` supplies the row schema; its rows
+    * are NOT written. The code is float, int8 with `id`, product with
+    * `id` and `books`; the empty seed commits its row schema and full
+    * descriptor, so the first streamed batch's append-schema gate sees
+    * the layout every later batch must keep. The zero-vector baseline
+    * it commits never justifies a drift verdict — the first non-empty
+    * append re-seeds it. */
+  private[graft] def ensurePersistedIvf(carrier: DataFrame,
+      embedding: String, codebook: IvfCodebook, path: String,
+      id: Option[String] = None,
+      books: Option[ProductQuant.PqCodebooks] = None): Unit = {
+    val spark = carrier.sparkSession
+    if (Versioned.versions(spark, path).nonEmpty) return
+    val code = (id, books) match {
+      case (None, _) => IvfCode.Flat
+      case (_, None) => IvfCode.Int8
+      case (_, Some(bk)) => IvfCode.Product(bk)
     }
-    sys.error("unreachable: the CAS loop returns or throws")
+    createIvf(spark, path, IvfBuild(codebook, code,
+      code.encode(carrier.limit(0), embedding, id, codebook),
+      IvfStats(0, 0.0), ivfBuckets(codebook.entries.length)))
   }
 
   /** Append new vectors to a persisted IVF index: assign against the
@@ -857,9 +941,8 @@ object Similarity {
     * declared bucket layout. A production ANN corpus grows; rebuilding
     * nlist cells per arriving chunk is the thing this avoids — the
     * append touches only the chunk, and bucket-pruned probes see old
-    * and new rows alike. The append rides `commitBucketed`'s CAS, so
-    * concurrent appenders interleave safely and a RETRAIN landing
-    * mid-append surfaces as `BucketLayoutChanged`/fingerprint refusal
+    * and new rows alike. Concurrent appenders interleave safely and a
+    * RETRAIN landing mid-append surfaces as a fingerprint refusal
     * instead of silent mis-routing. The returned [[IvfAppend]] carries
     * the drift check against the committed baseline; a re-seeded
     * baseline (zero-vector build) rides THIS append's manifest meta —
@@ -867,34 +950,40 @@ object Similarity {
     * the same commit (the streaming ingest's batch ledger). */
   def appendToPersistedIvf(df: DataFrame, embedding: String,
       codebook: IvfCodebook, path: String,
-      extraMeta: Map[String, String] = Map.empty): IvfAppend = {
-    val st = requireIvfState(df.sparkSession, path, "append")
-    require(!st.pq, s"$path is an IVF-PQ index (codes, no embedding " +
-      "column) — append with appendToPersistedIvfPq")
-    requireFingerprint(st, codebook, path, "append")
-    appendUnderState(df, embedding, path, st, extraMeta,
-      onRetrainRace = st2 =>
-        // a RETRAIN landed mid-append: the caller's codebook is stale
-        // now — refuse with the standard message (re-running the
-        // append under the reloaded codebook is the caller's call)
-        requireFingerprint(st2, codebook, path, "append"))
+      extraMeta: Map[String, String] = Map.empty): IvfAppend =
+    appendIvf(df, embedding, None, path,
+      requireIvfState(df.sparkSession, path, "append"), extraMeta,
+      callerCodebook(codebook, path, 0), None)
+
+  /** The accept check of an append holding its own codebook: the
+    * scheme, and the fingerprint — on a retrain landing mid-append the
+    * caller's codebook is stale, and re-running the append under the
+    * reloaded one is the caller's call. */
+  private def callerCodebook(codebook: IvfCodebook, path: String,
+      want: Int): IvfIndexState => Unit = s => {
+    requireCode(s, path, "append", want)
+    requireFingerprint(s, codebook, path, "append")
   }
 
-  /** [[appendToPersistedIvf]] assigning under the COMMITTED codebook
-    * (resolved from the index itself) — the streaming-ingest form: the
-    * stream never holds a codebook that can go stale, so a RETRAIN
-    * landing mid-stream hands off automatically — the next assignment
-    * resolves the retrained codebook from the commit it rode in on. */
-  private[graft] def appendResolvedToPersistedIvf(df: DataFrame,
-      embedding: String, path: String,
-      extraMeta: Map[String, String]): IvfAppend = {
-    val st = requireIvfState(df.sparkSession, path, "append")
-    require(!st.pq, s"$path is an IVF-PQ index — the streaming float " +
-      "ingest cannot append codes; build a float index for AnnIngest " +
-      "or append with appendToPersistedIvfPq")
-    appendUnderState(df, embedding, path, st, extraMeta,
-      onRetrainRace = _ => ())
-  }
+  /** The streaming-ingest append ([[graft.streaming.AnnIngest]]),
+    * assigning under the COMMITTED codebook and encoding under the
+    * COMMITTED code of the state each attempt pins: the stream never
+    * holds a codebook or books that can go stale, so a retrain or
+    * rebuild landing mid-stream hands off automatically. `id` set is
+    * the quantized ingest (int8 or product, whichever the index is);
+    * unset, the float ingest. `st` is the caller's resolved state. */
+  private[graft] def appendStreamed(df: DataFrame, embedding: String,
+      id: Option[String], path: String, st: IvfIndexState,
+      extraMeta: Map[String, String]): IvfAppend =
+    appendIvf(df, embedding, id, path, st, extraMeta, s =>
+      if (id.isEmpty) require(s.code == IvfCode.Flat,
+        s"$path is ${IvfSchemeNames(s.code.scheme)} — the streaming " +
+          "float ingest cannot append codes; stream into it with pqId " +
+          "set, or build a float index for the float ingest")
+      else require(s.code != IvfCode.Flat,
+        s"$path is a float IVF index — stream into it without pqId " +
+          "(codes would corrupt its schema)"),
+      None)
 
   /** Fail-fast schema gate for the conditional-commit append paths:
     * commitIf/commitIfAdjudicated skip `commit`'s write-time
@@ -926,260 +1015,156 @@ object Similarity {
         "its schema")
   }
 
-  /** The append commit loop. The commit is CAS'd on the EXACT version
-    * the codebook was verified against: a retrain interleaving between
-    * assignment and commit would otherwise land rows assigned under
-    * the OLD codebook onto the retrained snapshot — silently
-    * mis-routed (same-nlist retrains don't even change the bucket
-    * layout, so no other guard fires). On conflict: an interleaved
-    * APPEND (same fingerprint) rebases AT MANIFEST COST via
-    * [[Versioned.commitIfAdjudicated]]'s adjudication — the staged
-    * assignment is still valid, no re-staging; an interleaved RETRAIN
-    * abandons to the outer loop, which re-assigns under the new
-    * codebook (after `onRetrainRace`, which for caller-held codebooks
-    * refuses instead). */
-  private def appendUnderState(df: DataFrame, embedding: String,
-      path: String, st0: IvfIndexState, extraMeta: Map[String, String],
-      onRetrainRace: IvfIndexState => Unit,
-      shape: (DataFrame, IvfIndexState) => DataFrame = (d, _) => d,
-      idCol: Option[String] = None,
-      sourceEpoch: Option[Long] = None): IvfAppend = {
+  /** The one append body, every code and caller. `accept` vets each
+    * pinned state (the scheme; for caller-held codebooks the
+    * fingerprint). The cohort is assigned and encoded under the state
+    * it stages against — the index's codebook and code — and staged
+    * ONCE; the commit is CAS'd on the EXACT version that state was
+    * pinned at: a retrain interleaving between assignment and commit
+    * would otherwise land rows assigned under the OLD codebook onto
+    * the retrained snapshot — silently mis-routed (same-nlist retrains
+    * don't even change the bucket layout, so no other guard fires). On
+    * conflict, an interleaved APPEND (same fingerprint, layout and
+    * epoch) rebases AT MANIFEST COST via
+    * [[Versioned.commitIfAdjudicated]]'s adjudication — no per-attempt
+    * re-staging, which at N concurrent appenders would be O(N²) segment
+    * writes; anything else abandons to the next attempt of
+    * [[Versioned.raceLoop]], which re-pins, re-accepts and — on a new
+    * codebook or epoch — re-stages.
+    *
+    * `sourceEpoch` (id-carrying codes only; default: the epoch at
+    * entry) is the ABSORPTION guard (r18 ADVICE): when the index's
+    * source-rewrite epoch differs from the epoch the caller captured
+    * BEFORE its cohort entered the source, a rebuild may have read the
+    * source with the cohort already in it — committing the cohort's
+    * codes now would duplicate every absorbed id. The cohort is then
+    * anti-joined against the ids the rebased version already holds
+    * (one column-pruned id scan, paid ONLY on the rare epoch-mismatch
+    * path). The float paths never absorb (retrain re-assigns the
+    * index's own pinned rows). */
+  private def appendIvf(df: DataFrame, embedding: String,
+      id: Option[String], path: String, st0: IvfIndexState,
+      extraMeta: Map[String, String], accept: IvfIndexState => Unit,
+      sourceEpoch: Option[Long]): IvfAppend = {
     val spark = df.sparkSession
-    var st = st0
-    // the FULL descriptor re-emitted by this append — including the
-    // quantization-scheme keys — comes from the LIVE state, not from
-    // caller-supplied extraMeta: an adjudicated rebase or a re-stage
-    // after a raced rebuild must carry the raced-in descriptor
-    // (e.g. the NEW product codebook sidecar), or the newest-first
-    // scan would resolve a stale one from this very commit
-    def schemeMeta(s: IvfIndexState): Map[String, String] =
-      if (!s.pq) Map.empty
-      else if (s.pqBooks.isEmpty) Map(IvfPqKey -> "1")
-      else Map(IvfPqKey -> "2") ++
-        s.pqBooksFile.map(PqBooksKey -> _) ++
-        s.pqFingerprint.map(PqBooksFpKey -> _)
-    // ABSORPTION guard (r18 ADVICE): when the index's source-rewrite
-    // epoch differs from the epoch the caller captured BEFORE its
-    // cohort entered the source, a rebuild may have read the source
-    // with the cohort already in it — committing the cohort's codes
-    // now would duplicate every absorbed id. Anti-join the cohort
-    // against the ids the rebased version already holds (one
-    // column-pruned id scan, paid ONLY on the rare epoch-mismatch
-    // path; epochs match on every ordinary append). Requires an id
-    // column — the PQ paths supply it; the float paths never absorb
-    // (retrain re-assigns the index's own pinned rows).
+    accept(st0)
+    val token = sourceEpoch.orElse(id.map(_ => st0.epoch))
     def cohortAt(s: IvfIndexState): DataFrame =
-      if (idCol.isDefined && sourceEpoch.exists(_ != s.epoch))
+      if (token.exists(_ != s.epoch))
         df.join(SnapshotScan.frameAt(spark, path, s.version)
-            .select(col(idCol.get)),
-          Seq(idCol.get), "left_anti")
+            .select(col(id.get)),
+          Seq(id.get), "left_anti")
       else df
-    def stage(s: IvfIndexState): DataFrame =
-      shape(ivfAssignWithSim(cohortAt(s), embedding, s.codebook), s)
-        .localCheckpoint(true)
-    // ONE assignment pass (the dominant per-row compute), materialized
-    // chunk-local: the write and the quality aggregate both read it,
-    // and a lost CAS re-stages the same blocks without recomputing.
-    // `shape` is the staged-row projection (identity for the float
-    // index, quantize-and-narrow for the PQ forms, resolved against
-    // the state it stages under) — it must preserve AssignSimCol for
-    // the quality aggregate.
+    // every validation runs on the LAZY plan, so a refused append
+    // costs nothing
     requireAppendSchema(
-      shape(ivfAssignWithSim(df, embedding, st.codebook), st)
-        .drop(AssignSimCol),
-      spark, path, st.version)
-    var assigned = stage(st)
-    var q = qualityOf(assigned)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 5) {
+      st0.code.encode(df, embedding, id, st0.codebook).drop(AssignSimCol),
+      spark, path, st0.version)
+    var st = st0
+    var assigned: DataFrame = null
+    var q: IvfStats = null
+    // the superseded staging's blocks are dead — free before replacing
+    // (a long-lived streaming driver otherwise accumulates blocks
+    // until GC; the r18 discipline)
+    def stage(s: IvfIndexState): Unit = {
+      if (assigned != null)
         org.apache.spark.sql.GraftShims.freeLocalCheckpoint(assigned)
-        throw new IllegalStateException(
-          s"append to $path kept racing commits (${attempts - 1} " +
-            "attempts) — retry when the writer storm subsides")
+      assigned = s.code.encode(cohortAt(s), embedding, id, s.codebook)
+        .localCheckpoint(true)
+      q = qualityOf(assigned)
+    }
+    // a zero-vector baseline (empty build corpus) carries no evidence:
+    // re-seed it from the first non-empty cohort so the drift signal
+    // arms instead of staying silent forever — the re-seed rides THIS
+    // commit's meta, crash-atomic with its rows ...but never from a
+    // NaN-quality cohort (all assignment sims null): it carries no
+    // more evidence than the empty baseline it would replace, and
+    // would disarm the relative rule forever
+    def buildFrom(s: IvfIndexState): IvfStats =
+      if (s.baseline.vectors == 0 && q.vectors > 0 && !q.meanSim.isNaN) q
+      else s.baseline
+    // the FULL descriptor this append re-emits — the scheme keys
+    // included — comes from the LIVE state, not from extraMeta: a
+    // rebase or re-stage after a raced rebuild must carry the raced-in
+    // descriptor (e.g. the NEW product books), or the newest-first
+    // scan would resolve a stale one from this very commit
+    def metaOf(s: IvfIndexState, build: IvfStats): Map[String, String] =
+      ivfMeta(s.codebookFile, s.fingerprint, build, s.epoch) ++
+        s.code.meta ++ extraMeta
+    val root = new org.apache.hadoop.fs.Path(path)
+    val res = try Versioned.raceLoop(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root,
+      path, s"append to $path", Some(st0.version)) { _ =>
+      if (assigned == null) stage(st)
+      else {
+        val st2 = requireIvfState(spark, path, "append")
+        accept(st2) // caller-held codebooks refuse a retrain here
+        // a new codebook re-assigns; a new epoch under the same
+        // codebook (a rebuild converging on the same fingerprint)
+        // re-stages so the absorption anti-join runs
+        if (st2.fingerprint != st.fingerprint || st2.epoch != st.epoch)
+          stage(st2)
+        st = st2
       }
       require(st.buckets > 0,
         s"$path latest version declares no bucket layout — a foreign " +
           "unbucketed commit landed on the index; retrain it " +
           "(retrainPersistedIvf) to restore the layout")
-      // a zero-vector baseline (empty build corpus) carries no
-      // evidence: re-seed it from the first non-empty cohort so the
-      // drift signal arms instead of staying silent forever — the
-      // re-seed rides THIS commit's meta, crash-atomic with its rows
-      // ...but never from a NaN-quality cohort (all assignment sims
-      // null): it carries no more evidence than the empty baseline it
-      // would replace, and would disarm the relative rule forever
-      def buildFrom(s: IvfIndexState): IvfStats =
-        if (s.baseline.vectors == 0 && q.vectors > 0 && !q.meanSim.isNaN)
-          q
-        else s.baseline
-      // stage ONCE; interleaved SAME-fingerprint appends rebase at
-      // manifest cost via the adjudication (no per-attempt re-staging
-      // — at N concurrent appenders that would be O(N²) segment
-      // writes); a fingerprint or layout change underneath abandons
-      // to the re-assign path below
       var committedBuild = buildFrom(st)
-      val landed = Versioned.commitIfAdjudicated(
-        assigned.drop(AssignSimCol), path,
-        ivfMeta(st.codebookFile, st.fingerprint, committedBuild,
-          st.epoch) ++ schemeMeta(st) ++ extraMeta,
-        st.version, Some(("list_id", st.buckets)),
+      Versioned.commitIfAdjudicated(assigned.drop(AssignSimCol), path,
+        metaOf(st, committedBuild), st.version, Some(("list_id", st.buckets)),
         adjudicate = () => {
           val stN = requireIvfState(spark, path, "append")
-          // the EPOCH must match too: a source rewrite landing
-          // mid-call can keep the SAME fingerprint (deterministic
-          // seeding over a stable id prefix converges on the same
-          // codebook) yet have absorbed the staged cohort from the
-          // source — rebasing over it would duplicate every absorbed
-          // id. Fall through to the re-stage path, which anti-joins.
+          // the EPOCH must match too: a source rewrite landing mid-call
+          // can keep the SAME fingerprint (deterministic seeding over a
+          // stable id prefix converges on the same codebook) yet have
+          // absorbed the staged cohort from the source — rebasing over
+          // it would duplicate every absorbed id
           if (stN.fingerprint != st.fingerprint ||
-              stN.buckets != st.buckets ||
-              stN.epoch != st.epoch) None
+              stN.buckets != st.buckets || stN.epoch != st.epoch) None
           else {
             committedBuild = buildFrom(stN)
-            Some((stN.version,
-              ivfMeta(stN.codebookFile, stN.fingerprint,
-                committedBuild, stN.epoch) ++ schemeMeta(stN) ++
-                extraMeta))
+            Some((stN.version, metaOf(stN, committedBuild)))
           }
-        })
-      if (landed.isDefined) {
-        // free the staged cohort's checkpointed blocks now that the
-        // commit consumed them (the r18 discipline — a long-lived
-        // streaming driver otherwise accumulates blocks until GC)
+        }).map(_ => IvfAppend(q.vectors, q.meanSim, committedBuild))
+    } catch {
+      // the append's storm refusal keeps its own wording
+      case e: Versioned.CommitRaceExhausted =>
+        throw new IllegalStateException(s"append to $path kept racing " +
+          "commits — retry when the writer storm subsides", e)
+    } finally {
+      if (assigned != null)
         org.apache.spark.sql.GraftShims.freeLocalCheckpoint(assigned)
-        val res = IvfAppend(q.vectors, q.meanSim, committedBuild)
-        if (res.retrainRecommended)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"IVF index $path: appended cohort mean assignment sim " +
-              f"${q.meanSim}%.4f vs build baseline " +
-              f"${committedBuild.meanSim}%.4f — the frozen codebook " +
-              "no longer fits the arriving distribution; rebuild " +
-              "(retrain) recommended")
-        return res
-      }
-      val st2 = requireIvfState(spark, path, "append")
-      if (st2.fingerprint != st.fingerprint) {
-        onRetrainRace(st2) // caller-held codebooks refuse here
-        // the superseded staging's blocks are dead — free before
-        // replacing (see the landed-path free above)
-        org.apache.spark.sql.GraftShims.freeLocalCheckpoint(assigned)
-        assigned = stage(st2)
-        q = qualityOf(assigned)
-      } else if (st2.epoch != st.epoch) {
-        // same codebook, new epoch: a source rewrite landed mid-call
-        // (rebuild converging on the same fingerprint) — re-stage so
-        // the absorption anti-join runs against the rebased version
-        org.apache.spark.sql.GraftShims.freeLocalCheckpoint(assigned)
-        assigned = stage(st2)
-        q = qualityOf(assigned)
-      }
-      st = st2
     }
-    sys.error("unreachable: the CAS loop returns or throws")
-  }
-
-  /** Seed an EMPTY snapshot IVF index iff none exists — create-mode
-    * CAS, so of two racing seeders exactly one commits version 0 and
-    * the loser proceeds against it (the band index's ensureIndex
-    * shape). `carrier` supplies the row schema; its rows are NOT
-    * written. The zero-vector baseline it commits never justifies a
-    * drift verdict — the first non-empty append re-seeds it. */
-  private[graft] def ensurePersistedIvf(carrier: DataFrame,
-      embedding: String, codebook: IvfCodebook, path: String): Unit = {
-    val spark = carrier.sparkSession
-    if (Versioned.versions(spark, path).nonEmpty) return
-    val fp = fingerprint(codebook)
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    try Versioned.commitBucketed(
-      ivfAssign(carrier.limit(0), embedding, codebook), path, "list_id",
-      ivfBuckets(codebook.entries.length), "create",
-      ivfMeta(cbFile, fp, IvfStats(0, 0.0)))
-    catch { case _: Versioned.CreateConflict => () }
-  }
-
-  /** [[ensurePersistedIvf]]'s PQ form: the empty seed commits the
-    * CODES schema (id, list_id, pq_scale, pq_code) under the `ivf_pq`
-    * marker, so the first streamed batch's append-schema gate sees
-    * the layout every later batch must keep. */
-  private[graft] def ensurePersistedIvfPq(carrier: DataFrame,
-      embedding: String, id: String, codebook: IvfCodebook,
-      path: String): Unit = {
-    val spark = carrier.sparkSession
-    if (Versioned.versions(spark, path).nonEmpty) return
-    val fp = fingerprint(codebook)
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    try Versioned.commitBucketed(
-      withPqCodes(ivfAssign(carrier.limit(0), embedding, codebook),
-          embedding)
-        .select(col(id), col("list_id"), col("pq_scale"),
-          col("pq_code")),
-      path, "list_id", ivfBuckets(codebook.entries.length), "create",
-      ivfMeta(cbFile, fp, IvfStats(0, 0.0)) + (IvfPqKey -> "1"))
-    catch { case _: Versioned.CreateConflict => () }
-  }
-
-  /** [[appendResolvedToPersistedIvf]]'s PQ form — the streaming-ingest
-    * append for quantized indexes: assign on TRUE embeddings under the
-    * COMMITTED codebook, quantize, stage codes. A codebook change
-    * underneath (a writePersistedIvfPq rebuild) just re-resolves and
-    * re-assigns, like the float stream under a retrain. */
-  private[graft] def appendResolvedToPersistedIvfPq(df: DataFrame,
-      embedding: String, id: String, path: String,
-      extraMeta: Map[String, String],
-      sourceEpoch: Option[Long] = None): IvfAppend = {
-    val st = requireIvfState(df.sparkSession, path, "append")
-    require(st.pq, s"$path is a float IVF index — append with the " +
-      "float ingest path (codes would corrupt its schema)")
-    require(st.pqBooks.isEmpty, s"$path is a product-quantized index " +
-      "— append with appendToPersistedIvfProduct (int8 codes would " +
-      "corrupt its schema)")
-    val shape = (d: DataFrame, _: IvfIndexState) =>
-      withPqCodes(d, embedding)
-        .select(col(id), col("list_id"), col("pq_scale"), col("pq_code"),
-          col(AssignSimCol))
-    // sourceEpoch default: the epoch at entry — closes every mid-call
-    // absorption window; see [[appendToPersistedIvfPq]]'s scaladoc for
-    // the caller-token protocol that closes the rest
-    appendUnderState(df, embedding, path, st, extraMeta,
-      onRetrainRace = _ => (), shape = shape, idCol = Some(id),
-      sourceEpoch = sourceEpoch.orElse(Some(st.epoch)))
+    if (res.retrainRecommended)
+      logWarning(s"IVF index $path: appended cohort mean assignment sim " +
+        f"${res.meanSim}%.4f vs build baseline ${res.build.meanSim}%.4f " +
+        "— the frozen codebook no longer fits the arriving " +
+        "distribution; rebuild (retrain) recommended")
+    res
   }
 
   /** Top-k probe against a persisted IVF index, resolving the
-    * COMMITTED codebook: pin the latest version, read its descriptor,
-    * scan exactly that version — so a retrain landing concurrently is
-    * invisible (old snapshot, old codebook: consistent) and the NEXT
-    * probe sees the new index atomically. The commit is the swap;
-    * probes never need a side-channel handoff. */
+    * COMMITTED codebook off the pinned version ([[pinIvf]]) — probes
+    * never need a side-channel handoff. */
   def probePersistedIvf(spark: org.apache.spark.sql.SparkSession,
       path: String, embedding: String, id: String, query: Array[Float],
       nprobe: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    require(!st.pq, s"$path is an IVF-PQ index (codes, no embedding " +
-      "column) — probe it with probePersistedIvfPq")
-    ivfTopK(SnapshotScan.frameAt(spark, path, st.version), embedding, id,
-      query, st.codebook, nprobe, k)
+    val (st, frame) = pinIvf(spark, path, "probe", 0)
+    ivfTopK(frame, embedding, id, query, st.codebook, nprobe, k)
   }
 
   /** [[probePersistedIvf]] with a caller-held codebook — verified by
     * fingerprint against the committed descriptor, so a probe holding
     * a codebook the index was RETRAINED away from refuses loudly
-    * instead of silently scanning the wrong cells. Legacy plain-dir
-    * indexes (no commit log) are probed as before, on the caller's
-    * word. */
+    * instead of silently scanning the wrong cells. */
   def probePersistedIvf(spark: org.apache.spark.sql.SparkSession,
       path: String, embedding: String, id: String, query: Array[Float],
-      codebook: IvfCodebook, nprobe: Int, k: Int): DataFrame =
-    if (SnapshotScan.isSnapshot(spark, path)) {
-      val st = requireIvfState(spark, path, "probe")
-      requireFingerprint(st, codebook, path, "probe")
-      ivfTopK(SnapshotScan.frameAt(spark, path, st.version), embedding,
-        id, query, codebook, nprobe, k)
-    } else
-      ivfTopK(spark.read.parquet(path), embedding, id, query, codebook,
-        nprobe, k)
+      codebook: IvfCodebook, nprobe: Int, k: Int): DataFrame = {
+    val (st, frame) = pinIvf(spark, path, "probe", 0)
+    requireFingerprint(st, codebook, path, "probe")
+    ivfTopK(frame, embedding, id, query, codebook, nprobe, k)
+  }
 
   /** Retrain a drifted persisted IVF index IN PLACE: build a FRESH
     * codebook from everything the index now holds (build rows + every
@@ -1194,82 +1179,23 @@ object Similarity {
     * IS the retrain→probe handoff. An append interleaving with the
     * rewrite wins or loses the CAS cleanly: on conflict the retrain
     * re-reads the new latest (which contains the interleaved rows) and
-    * retries, like OPTIMIZE. One assignment pass over the index plus
-    * the quality aggregate — linear in the index, paid only when drift
-    * says so. Returns the new codebook and its baseline. */
+    * retries, like OPTIMIZE. It re-assigns the index's OWN pinned rows
+    * — it can never absorb a row the index doesn't hold — so the epoch
+    * rides through unchanged; it keeps the FULL row schema (minus the
+    * recomputed list_id), since the next micro-batch's schema gate
+    * would refuse a narrowed index. One assignment pass over the index
+    * plus the quality aggregate — linear in the index, paid only when
+    * drift says so. Returns the new codebook and its baseline; a lost
+    * race ends in the typed [[Versioned.CommitRaceExhausted]], so the
+    * streaming AutoRetrain policy can defer without matching text. */
   def retrainPersistedIvf(spark: org.apache.spark.sql.SparkSession,
       path: String, embedding: String, id: String, nlist: Int,
       refineIters: Int = 0): (IvfCodebook, IvfStats) = {
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      // TYPED exhaustion (the rewrite/compact/DV/rebuild discipline):
-      // the streaming AutoRetrain policy must distinguish
-      // "maintenance lost the race — defer to the next drift fire"
-      // from every other illegal state without matching message text
-      if (attempts > 5) throw new Versioned.CommitRaceExhausted(
-        s"retrain of $path", attempts - 1)
-      val vs = Versioned.versions(spark, path)
-      require(vs.nonEmpty, s"no committed version in $path — build the " +
-        "index with writePersistedIvf (or migrate a legacy dir with " +
-        "migratePersistedIvf) before retraining")
-      require(!loadPersistedIvf(spark, path).exists(_.pq),
-        s"$path is an IVF-PQ index: its rows are lossy int8 codes, so " +
-          "an in-place retrain cannot recover the true embeddings — " +
-          "rebuild from the source table with rebuildPersistedIvfPq " +
-          "(or writePersistedIvfPq to a fresh path)")
-      val base = vs.max
-      // the retrain re-assigns the index's OWN pinned rows — it can
-      // never absorb a row the index doesn't hold, so the absorption
-      // epoch rides through unchanged
-      val epoch = loadPersistedIvf(spark, path).map(_.epoch)
-        .getOrElse(0L)
-      // Keep the FULL row schema (minus the recomputed list_id): an
-      // index whose streamed batches carry extra columns must come out
-      // of a retrain schema-identical, or the next micro-batch's
-      // requireAppendSchema refuses and crashes the stream — the
-      // retrain re-ASSIGNS rows, it never narrows them.
-      val rows = SnapshotScan.frameAt(spark, path, base).drop("list_id")
-      val cb = buildCodebook(rows.select(col(id), col(embedding)),
-        embedding, id, nlist, refineIters)
-      val assigned = ivfAssignWithSim(rows, embedding, cb)
-        .localCheckpoint(true)
-      val stats = qualityOf(assigned)
-      val fp = fingerprint(cb)
-      val cbFile = writeCodebookSidecar(spark, path, cb, fp)
-      if (Versioned.commitIf(assigned.drop(AssignSimCol), path,
-          "overwrite", ivfMeta(cbFile, fp, stats, epoch), base,
-          Some(("list_id", ivfBuckets(nlist)))).isDefined)
-        return (cb, stats)
-      // lost the CAS to an interleaved append: its rows must be in the
-      // retrained index — re-read and retry (the orphan codebook
-      // sidecar is content-addressed and tiny; a later retrain to the
-      // same codebook would reuse it)
-    }
-    sys.error("unreachable: the CAS loop returns or throws")
-  }
-
-  /** Migrate a LEGACY plain-dir IVF index (`list_id=` partition dirs,
-    * or the pre-r16 streaming `batch=<id>/list_id=` layout) — or any
-    * readable vector parquet — into the snapshot layout at `dstPath`,
-    * retraining a fresh codebook over everything it holds. The
-    * plain-dir source has no commit protocol, so the migration is
-    * inherently single-writer on the source side and must land at a
-    * NEW path (readers swap once it returns); every later retrain then
-    * takes the in-place CAS path above. */
-  def migratePersistedIvf(spark: org.apache.spark.sql.SparkSession,
-      srcPath: String, dstPath: String, embedding: String, id: String,
-      nlist: Int, refineIters: Int = 0): (IvfCodebook, IvfStats) = {
-    require(srcPath != dstPath,
-      "migration must land at a NEW path — the plain-dir source has " +
-        "no commit protocol to swap in place under live probes")
-    // drop only the layout partitions — extra payload columns migrate
-    // with their rows (the retrain-in-place discipline above)
-    val rows = spark.read.parquet(srcPath).drop("list_id", "batch")
-    val cb = buildCodebook(rows.select(col(id), col(embedding)),
-      embedding, id, nlist, refineIters)
-    val stats = writePersistedIvf(rows, embedding, cb, dstPath)
-    (cb, stats)
+    val b = rebuildIvf(spark, path, "retrain", 0, bump = false, embedding,
+      id, nlist, refineIters)(s =>
+      SnapshotScan.frameAt(spark, path, s.version).drop("list_id"))(
+      _ => IvfCode.Flat)
+    (b.codebook, b.stats)
   }
 
   /** Round-1-shaped overload: rebuilds the seed codebook from the
@@ -1413,11 +1339,18 @@ object Similarity {
       }
     val probes = live.select(col(qid), col(qEmbedding),
       cellsOf.as("__cell"))
+    rankPerQuery(pruned.join(probes, col("list_id") === col("__cell")),
+      embedding, id, qid, qEmbedding, k)
+  }
+
+  /** Exact per-query top-k over (index row, query) candidate pairs —
+    * one window rank, the last step of every batch probe. */
+  private def rankPerQuery(joined: DataFrame, embedding: String, id: String,
+      qid: String, qEmbedding: String, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(qid))
       .orderBy(col("score").desc, col(id).asc)
-    pruned
-      .join(probes, col("list_id") === col("__cell"))
+    joined
       .withColumn("score",
         round(CosineSimilarity(col(embedding), col(qEmbedding)), 4))
       .withColumn("__rn", row_number().over(w))
@@ -1431,9 +1364,9 @@ object Similarity {
   def probePersistedIvfMany(spark: org.apache.spark.sql.SparkSession,
       path: String, embedding: String, id: String, queries: DataFrame,
       qid: String, qEmbedding: String, nprobe: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    ivfTopKMany(SnapshotScan.frameAt(spark, path, st.version), embedding,
-      id, queries, qid, qEmbedding, st.codebook, nprobe, k)
+    val (st, frame) = pinIvf(spark, path, "batch-probe", 0)
+    ivfTopKMany(frame, embedding, id, queries, qid, qEmbedding,
+      st.codebook, nprobe, k)
   }
 
   /** BATCH top-k probe against a hyperplane-LSH index — [[ivfTopKMany]]'s
@@ -1475,19 +1408,11 @@ object Similarity {
     val live0 = queries.where(col(qEmbedding).isNotNull)
       .where(requireDimCol(qEmbedding, dim,
         s"batch probe against a ($numPlanes, $dim) plane family"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qid))
-      .orderBy(col("score").desc, col(id).asc)
-    def rank(joined: DataFrame): DataFrame = joined
-      .withColumn("score",
-        round(CosineSimilarity(col(embedding), col(qEmbedding)), 4))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col(qid), col(id), col("score"))
     if (probeHamming >= numPlanes)
       // every bucket is within the ball: exact brute force, one join
       // with no key — each query scores the whole index
-      return rank(indexed.crossJoin(live0))
+      return rankPerQuery(indexed.crossJoin(live0), embedding, id, qid,
+        qEmbedding, k)
     val masks = hammingBall(0L, numPlanes, probeHamming).getOrElse(
       throw new IllegalArgumentException(
         s"batch probe ball exceeds $MaxProbeBall cells " +
@@ -1507,7 +1432,8 @@ object Similarity {
       else indexed.where(col("bucket").isin(probedCells.toSeq: _*))
     val probes = pinned.select(col(qid), col(qEmbedding),
       cellsOf.as("__cell"))
-    rank(pruned.join(probes, col("bucket") === col("__cell")))
+    rankPerQuery(pruned.join(probes, col("bucket") === col("__cell")),
+      embedding, id, qid, qEmbedding, k)
   }
 
   /** [[lshTopKMany]] against a persisted snapshot LSH index, resolving
@@ -1517,13 +1443,7 @@ object Similarity {
       path: String, embedding: String, id: String, queries: DataFrame,
       qid: String, qEmbedding: String, k: Int,
       probeHamming: Int = 1): DataFrame = {
-    require(SnapshotScan.isSnapshot(spark, path),
-      s"$path is not a snapshot LSH index (no commit log) — migrate " +
-        "the legacy plain-dir index first with migratePersistedIndex")
-    val (v, np, d) = lshState(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"probe: $path carries no plane-family descriptor — rebuild " +
-          "it with writePersistedIndex"))
+    val (v, np, d) = requireLshState(spark, path, "probe")
     lshTopKMany(SnapshotScan.frameAt(spark, path, v), embedding, id,
       queries, qid, qEmbedding, np, d, probeHamming, k)
   }
@@ -1555,8 +1475,7 @@ object Similarity {
     * this frame deliberately does not carry them. */
   def ivfPqIndex(df: DataFrame, embedding: String, id: String,
       codebook: IvfCodebook): DataFrame =
-    withPqCodes(ivfAssign(df, embedding, codebook), embedding)
-      .select(col(id), col("list_id"), col("pq_scale"), col("pq_code"))
+    IvfCode.Int8.encode(df, embedding, Some(id), codebook).drop(AssignSimCol)
 
   /** Symmetric int8 quantization columns from `embedding` (emb2's
     * scheme): `pq_scale` = max|v|/127, `pq_code` = round(v/scale) as
@@ -1588,39 +1507,15 @@ object Similarity {
     * IO). The `ivf_pq` marker rides the descriptor so the float
     * probe/retrain refuse this layout loudly instead of failing on a
     * missing embedding column. The true embeddings stay in the SOURCE
-    * table; [[probePersistedIvfPq]] rescores against it. Quality
-    * baseline is computed from the TRUE embeddings before they are
-    * dropped, so drift checks are quantization-independent. */
+    * table; [[probePersistedIvfPq]] rescores against it. */
   def writePersistedIvfPq(df: DataFrame, embedding: String, id: String,
-      codebook: IvfCodebook, path: String): IvfStats = {
-    require(codebook.entries.nonEmpty, "empty codebook")
-    val spark = df.sparkSession
-    val staged = withPqCodes(ivfAssignWithSim(df, embedding, codebook),
-        embedding)
-      .select(col(id), col("list_id"), col("pq_scale"), col("pq_code"),
-        col(AssignSimCol))
-      .localCheckpoint(true)
-    val stats = qualityOf(staged)
-    val fp = fingerprint(codebook)
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    // epoch-safe overwrite ([[commitIndexOverwrite]]): the absorption
-    // bump is CAS'd against the state it was derived from
-    commitIndexOverwrite(staged.drop(AssignSimCol), path,
-      ivfBuckets(codebook.entries.length),
-      epoch => ivfMeta(cbFile, fp, stats, epoch) + (IvfPqKey -> "1"))
-    stats
-  }
+      codebook: IvfCodebook, path: String): IvfStats =
+    buildIvf(df, embedding, Some(id), codebook, IvfCode.Int8, path)
 
-  /** Append a chunk to a persisted IVF-PQ index: assign on the TRUE
-    * embeddings against the frozen codebook (fingerprint-verified),
-    * quantize, and ride the same stage-once/CAS-many append as the
-    * float index — drift quality comes from the pre-quantization
-    * assignment sims, so the baseline means the same thing on both
-    * layouts. */
   /** The index's current source-absorption epoch ([[IvfEpochKey]]) —
     * the token of the duplicate-safe append protocol: capture it
     * BEFORE committing a cohort to the SOURCE table, pass it to
-    * [[appendToPersistedIvfPq]]/[[appendResolvedToPersistedIvfPq]] as
+    * [[appendToPersistedIvfPq]]/[[appendToPersistedIvfProduct]] as
     * `sourceEpoch`. If a source-absorbing rebuild lands in between,
     * the append detects the epoch advance and anti-joins the cohort
     * against the index's ids, so the absorbed rows are never appended
@@ -1629,7 +1524,10 @@ object Similarity {
       path: String): Long =
     loadPersistedIvf(spark, path).map(_.epoch).getOrElse(0L)
 
-  /** `sourceEpoch` (r18 ADVICE) is the duplicate-safety token of the
+  /** [[appendToPersistedIvf]] for an IVF-PQ index: assign on the TRUE
+    * embeddings against the frozen codebook, then quantize.
+    *
+    * `sourceEpoch` (r18 ADVICE) is the duplicate-safety token of the
     * source-first protocol (rows land in the SOURCE, then their codes
     * here): pass [[rebuildEpoch]] captured BEFORE the source commit,
     * and a [[rebuildPersistedIvfPq]] interleaving anywhere between
@@ -1644,30 +1542,10 @@ object Similarity {
   def appendToPersistedIvfPq(df: DataFrame, embedding: String,
       id: String, codebook: IvfCodebook, path: String,
       extraMeta: Map[String, String] = Map.empty,
-      sourceEpoch: Option[Long] = None): IvfAppend = {
-    val st = requireIvfState(df.sparkSession, path, "append")
-    require(st.pq, s"$path is a float IVF index — append with " +
-      "appendToPersistedIvf (codes would corrupt its schema)")
-    require(st.pqBooks.isEmpty, s"$path is a product-quantized index " +
-      "— append with appendToPersistedIvfProduct (int8 codes would " +
-      "corrupt its schema)")
-    requireFingerprint(st, codebook, path, "append")
-    val shape = (d: DataFrame, _: IvfIndexState) =>
-      withPqCodes(d, embedding)
-        .select(col(id), col("list_id"), col("pq_scale"), col("pq_code"),
-          col(AssignSimCol))
-    // the scheme marker must ride EVERY descriptor-carrying commit
-    // (schemeMeta inside appendUnderState): the newest-first
-    // descriptor scan resolves from this append, and an append that
-    // dropped the marker would demote the index to float in every
-    // later reader's eyes (probes would then look for an embedding
-    // column the rows don't carry)
-    appendUnderState(df, embedding, path, st, extraMeta,
-      onRetrainRace = st2 =>
-        requireFingerprint(st2, codebook, path, "append"),
-      shape = shape, idCol = Some(id),
-      sourceEpoch = sourceEpoch.orElse(Some(st.epoch)))
-  }
+      sourceEpoch: Option[Long] = None): IvfAppend =
+    appendIvf(df, embedding, Some(id), path,
+      requireIvfState(df.sparkSession, path, "append"), extraMeta,
+      callerCodebook(codebook, path, 1), sourceEpoch)
 
   /** Rebuild a drifted persisted IVF-PQ index IN PLACE from the
     * SOURCE table's true embeddings — the quantized layout's
@@ -1679,68 +1557,19 @@ object Similarity {
     * against, so it must exist and stay in sync by contract) is where
     * the truth lives. Builds a fresh codebook over `source`, assigns
     * on true embeddings, quantizes, and commits the rewrite as one
-    * CAS'd overwrite — live probes pinned to the old version keep
-    * reading its (codebook, codes) consistently, and the next probe
-    * resolves the new triple atomically; the commit IS the swap
-    * (retrainPersistedIvf's discipline at `Similarity.scala`'s float
-    * path). The rebuilt index holds exactly the source's CURRENT
-    * vectors: index rows absent from the source are dropped — the
-    * source is the truth, which is also why an append interleaving
-    * with the rebuild only costs a CAS retry, never a merge. Returns
-    * the new codebook and its (pre-quantization) baseline. */
+    * CAS'd overwrite with an epoch bump — the swap discipline of
+    * [[retrainPersistedIvf]]. The rebuilt index holds exactly the
+    * source's CURRENT vectors: index rows absent from the source are
+    * dropped — the source is the truth, which is also why an append
+    * interleaving with the rebuild only costs a CAS retry, never a
+    * merge. Returns the new codebook and its (pre-quantization)
+    * baseline. */
   def rebuildPersistedIvfPq(spark: org.apache.spark.sql.SparkSession,
       path: String, source: DataFrame, embedding: String, id: String,
       nlist: Int, refineIters: Int = 0): (IvfCodebook, IvfStats) = {
-    val st0 = requireIvfState(spark, path, "rebuild")
-    require(st0.pq, s"$path is a float IVF index — retrain it in " +
-      "place with retrainPersistedIvf (it carries its own embeddings)")
-    require(st0.pqBooks.isEmpty, s"$path is a product-quantized index " +
-      "— rebuild it with rebuildPersistedIvfProduct (the product " +
-      "codebooks must be retrained with the cells)")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      // TYPED exhaustion (the rewrite/compact/DV discipline): the
-      // streaming AutoRebuild policy must distinguish "maintenance
-      // lost the race — defer to the next drift fire" from every
-      // other illegal state without matching message text
-      if (attempts > 5) throw new Versioned.CommitRaceExhausted(
-        s"rebuild of $path", attempts - 1)
-      // Pin the CAS base BEFORE staging (retrainPersistedIvf's
-      // discipline): an append landing between this read and the
-      // commit FAILS the CAS, and the retry re-reads the source —
-      // which by contract contains the appended rows — and re-stages.
-      // Reading the base after staging would let an interleaved
-      // append pass the CAS and be silently erased by the overwrite.
-      val base = Versioned.versions(spark, path).max
-      // the rebuild ABSORBS the source: bump the epoch so an appender
-      // whose cohort entered the source before this read (but whose
-      // index append lands after this commit) detects the absorption
-      // and anti-joins instead of duplicating its ids — see
-      // [[IvfEpochKey]]
-      val epoch = loadPersistedIvf(spark, path).map(_.epoch + 1)
-        .getOrElse(0L)
-      val cb = buildCodebook(source.select(col(id), col(embedding)),
-        embedding, id, nlist, refineIters)
-      val staged = withPqCodes(ivfAssignWithSim(source, embedding, cb),
-          embedding)
-        .select(col(id), col("list_id"), col("pq_scale"), col("pq_code"),
-          col(AssignSimCol))
-        .localCheckpoint(true)
-      val stats = qualityOf(staged)
-      val fp = fingerprint(cb)
-      val cbFile = writeCodebookSidecar(spark, path, cb, fp)
-      if (Versioned.commitIf(staged.drop(AssignSimCol), path,
-          "overwrite",
-          ivfMeta(cbFile, fp, stats, epoch) + (IvfPqKey -> "1"),
-          base, Some(("list_id", ivfBuckets(nlist)))).isDefined)
-        return (cb, stats)
-      // lost the CAS to an interleaved append: loop — fresh source
-      // read, fresh staging (the orphan codebook sidecar is
-      // content-addressed and tiny; a retry converging on the same
-      // codebook reuses it)
-    }
-    sys.error("unreachable: the CAS loop returns or throws")
+    val b = rebuildIvf(spark, path, "rebuild", 1, bump = true, embedding,
+      id, nlist, refineIters)(_ => source)(_ => IvfCode.Int8)
+    (b.codebook, b.stats)
   }
 
   /** [[ivfPqTopK]] against a persisted snapshot PQ index: codebook,
@@ -1752,13 +1581,8 @@ object Similarity {
   def probePersistedIvfPq(spark: org.apache.spark.sql.SparkSession,
       path: String, source: DataFrame, embedding: String, id: String,
       query: Array[Float], nprobe: Int, m: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    require(st.pq, s"$path is a float IVF index — probe it with " +
-      "probePersistedIvf")
-    require(st.pqBooks.isEmpty, s"$path is a product-quantized index " +
-      "— probe it with probePersistedIvfProduct")
-    ivfPqTopK(SnapshotScan.frameAt(spark, path, st.version), source,
-      embedding, id, query, st.codebook, nprobe, m, k)
+    val (st, frame) = pinIvf(spark, path, "probe", 1)
+    ivfPqTopK(frame, source, embedding, id, query, st.codebook, nprobe, m, k)
   }
 
   /** Two-stage PQ probe: (1) rank the probed cells' CODES by
@@ -1934,17 +1758,9 @@ object Similarity {
         // shuffled; the broadcast side is bounded by queries × m
         source.select(col(id), col(embedding))
           .join(broadcast(ids), Seq(id), "leftsemi")
-    val wK = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(qid))
-      .orderBy(col("score").desc, col(id).asc)
-    val result = fetched
-      .join(shortlist, Seq(id))
-      .join(pinned.select(col(qid), col(qEmbedding)), Seq(qid))
-      .withColumn("score",
-        round(CosineSimilarity(col(embedding), col(qEmbedding)), 4))
-      .withColumn("__rn", row_number().over(wK))
-      .where(col("__rn") <= k)
-      .select(col(qid), col(id), col("score"))
+    val result = rankPerQuery(fetched.join(shortlist, Seq(id))
+        .join(pinned.select(col(qid), col(qEmbedding)), Seq(qid)),
+      embedding, id, qid, qEmbedding, k)
       .localCheckpoint(true)
     // Free the BIG checkpointed intermediates (the pinned query frame
     // — queries × dim embeddings — and the queries × m shortlist)
@@ -1968,13 +1784,9 @@ object Similarity {
       path: String, source: DataFrame, embedding: String, id: String,
       queries: DataFrame, qid: String, qEmbedding: String, nprobe: Int,
       m: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    require(st.pq, s"$path is a float IVF index — batch-probe it with " +
-      "probePersistedIvfMany")
-    require(st.pqBooks.isEmpty, s"$path is a product-quantized index " +
-      "— batch-probe it with probePersistedIvfProductMany")
-    ivfPqTopKMany(SnapshotScan.frameAt(spark, path, st.version), source,
-      embedding, id, queries, qid, qEmbedding, st.codebook, nprobe, m, k)
+    val (st, frame) = pinIvf(spark, path, "batch-probe", 1)
+    ivfPqTopKMany(frame, source, embedding, id, queries, qid, qEmbedding,
+      st.codebook, nprobe, m, k)
   }
 
   // ==================== TRUE product quantization (scheme 2) =======
@@ -1990,9 +1802,6 @@ object Similarity {
   // plus a SECOND content-addressed sidecar holding the per-subspace
   // codebooks ([[PqBooksKey]]).
 
-  private def productMeta(bkFile: String, bfp: String): Map[String, String] =
-    Map(IvfPqKey -> "2", PqBooksKey -> bkFile, PqBooksFpKey -> bfp)
-
   private def requireProductDims(codebook: IvfCodebook,
       books: ProductQuant.PqCodebooks): Unit =
     require(books.dim == codebook.entries.head._2.length,
@@ -2006,12 +1815,9 @@ object Similarity {
     * it. Null codes for a null or zero-norm embedding (ranks
     * nothing, the family convention). */
   def ivfProductIndex(df: DataFrame, embedding: String, id: String,
-      codebook: IvfCodebook, books: ProductQuant.PqCodebooks): DataFrame = {
-    requireProductDims(codebook, books)
-    ivfAssign(df, embedding, codebook)
-      .withColumn("pq_code", ProductQuant.encodeCol(col(embedding), books))
-      .select(col(id), col("list_id"), col("pq_code"))
-  }
+      codebook: IvfCodebook, books: ProductQuant.PqCodebooks): DataFrame =
+    IvfCode.Product(books).encode(df, embedding, Some(id), codebook)
+      .drop(AssignSimCol)
 
   /** Two-stage product-quantized probe — [[ivfPqTopK]]'s scheme-2
     * sibling riding the same core: stage 1 ranks the probed cells'
@@ -2062,66 +1868,17 @@ object Similarity {
       ProductQuant.approxCol(col("pq_code"), col(qEmbedding), books))
   }
 
-  /** Persist a product-quantized IVF index on the snapshot layout —
-    * [[writePersistedIvfPq]]'s scheme-2 sibling: same bucketed
-    * overwrite commit, same epoch bump (a source-frame overwrite of an
-    * existing index absorbs the source — see [[IvfEpochKey]]), plus
-    * the product-codebooks sidecar written BEFORE the commit that
-    * references it. Quality baseline from the TRUE embeddings (drift
-    * is quantization-independent). */
+  /** [[writePersistedIvfPq]] storing product codes; the books ride a
+    * second content-addressed sidecar, written BEFORE the commit that
+    * references it. */
   def writePersistedIvfProduct(df: DataFrame, embedding: String,
       id: String, codebook: IvfCodebook,
-      books: ProductQuant.PqCodebooks, path: String): IvfStats = {
-    require(codebook.entries.nonEmpty, "empty codebook")
-    requireProductDims(codebook, books)
-    val spark = df.sparkSession
-    val staged = ivfAssignWithSim(df, embedding, codebook)
-      .withColumn("pq_code", ProductQuant.encodeCol(col(embedding), books))
-      .select(col(id), col("list_id"), col("pq_code"), col(AssignSimCol))
-      .localCheckpoint(true)
-    val stats = qualityOf(staged)
-    val fp = fingerprint(codebook)
-    val bfp = ProductQuant.fingerprint(books)
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    val bkFile = writePqBooksSidecar(spark, path, books, bfp)
-    // epoch-safe overwrite ([[commitIndexOverwrite]]): the absorption
-    // bump is CAS'd against the state it was derived from
-    commitIndexOverwrite(staged.drop(AssignSimCol), path,
-      ivfBuckets(codebook.entries.length),
-      epoch => ivfMeta(cbFile, fp, stats, epoch) ++
-        productMeta(bkFile, bfp))
-    stats
-  }
-
-  /** [[ensurePersistedIvfPq]]'s product form: the empty seed commits
-    * the product-codes schema (id, list_id, pq_code binary) under the
-    * full scheme-2 descriptor (both sidecars written BEFORE the
-    * commit that references them), so the first streamed batch's
-    * append-schema gate sees the layout every later batch must keep.
-    * Create-mode CAS: of two racing seeders exactly one commits
-    * version 0. */
-  private[graft] def ensurePersistedIvfProduct(carrier: DataFrame,
-      embedding: String, id: String, codebook: IvfCodebook,
-      books: ProductQuant.PqCodebooks, path: String): Unit = {
-    requireProductDims(codebook, books)
-    val spark = carrier.sparkSession
-    if (Versioned.versions(spark, path).nonEmpty) return
-    val fp = fingerprint(codebook)
-    val bfp = ProductQuant.fingerprint(books)
-    val cbFile = writeCodebookSidecar(spark, path, codebook, fp)
-    val bkFile = writePqBooksSidecar(spark, path, books, bfp)
-    try Versioned.commitBucketed(
-      ivfAssign(carrier.limit(0), embedding, codebook)
-        .withColumn("pq_code", ProductQuant.encodeCol(col(embedding), books))
-        .select(col(id), col("list_id"), col("pq_code")),
-      path, "list_id", ivfBuckets(codebook.entries.length), "create",
-      ivfMeta(cbFile, fp, IvfStats(0, 0.0)) ++ productMeta(bkFile, bfp))
-    catch { case _: Versioned.CreateConflict => () }
-  }
+      books: ProductQuant.PqCodebooks, path: String): IvfStats =
+    buildIvf(df, embedding, Some(id), codebook, IvfCode.Product(books), path)
 
   /** Append a chunk to a persisted product-quantized index. The
     * encoding codebooks come from the LIVE state INSIDE the CAS loop
-    * (`shape` re-resolves on every re-stage): a rebuild racing this
+    * (every re-stage encodes under the re-pinned code): a rebuild racing this
     * append swaps both the IVF codebook and the product books, and
     * the re-staged cohort must be encoded under — and its descriptor
     * re-emitted with — the raced-in pair, or the committed codes
@@ -2131,36 +1888,19 @@ object Similarity {
   def appendToPersistedIvfProduct(df: DataFrame, embedding: String,
       id: String, path: String,
       extraMeta: Map[String, String] = Map.empty,
-      sourceEpoch: Option[Long] = None): IvfAppend = {
-    val st = requireIvfState(df.sparkSession, path, "append")
-    require(st.pq && st.pqBooks.nonEmpty,
-      s"$path is not a product-quantized index — append with " +
-        "appendToPersistedIvf (float) or appendToPersistedIvfPq (int8)")
-    val shape = (d: DataFrame, s: IvfIndexState) =>
-      d.withColumn("pq_code", ProductQuant.encodeCol(col(embedding),
-          s.pqBooks.getOrElse(throw new IllegalStateException(
-            s"$path lost its product codebooks mid-append — a " +
-              "concurrent rewrite demoted the index to another " +
-              "scheme; re-append against the new layout"))))
-        .select(col(id), col("list_id"), col("pq_code"),
-          col(AssignSimCol))
-    appendUnderState(df, embedding, path, st, extraMeta,
-      onRetrainRace = _ => (), shape = shape, idCol = Some(id),
-      sourceEpoch = sourceEpoch.orElse(Some(st.epoch)))
-  }
+      sourceEpoch: Option[Long] = None): IvfAppend =
+    appendIvf(df, embedding, Some(id), path,
+      requireIvfState(df.sparkSession, path, "append"), extraMeta,
+      s => requireCode(s, path, "append", 2), sourceEpoch)
 
   /** [[ivfProductTopK]] against a persisted snapshot index: codebook,
     * product books, codes and version resolve off ONE pinned commit. */
   def probePersistedIvfProduct(spark: org.apache.spark.sql.SparkSession,
       path: String, source: DataFrame, embedding: String, id: String,
       query: Array[Float], nprobe: Int, m: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    require(st.pq && st.pqBooks.nonEmpty,
-      s"$path is not a product-quantized index — probe it with " +
-        "probePersistedIvf (float) or probePersistedIvfPq (int8)")
-    ivfProductTopK(SnapshotScan.frameAt(spark, path, st.version),
-      source, embedding, id, query, st.codebook, st.pqBooks.get,
-      nprobe, m, k)
+    val (st, frame) = pinIvf(spark, path, "probe", 2)
+    ivfProductTopK(frame, source, embedding, id, query, st.codebook,
+      st.pqBooks.get, nprobe, m, k)
   }
 
   /** [[ivfProductTopKMany]] against a persisted snapshot index. */
@@ -2169,64 +1909,26 @@ object Similarity {
       source: DataFrame, embedding: String, id: String,
       queries: DataFrame, qid: String, qEmbedding: String, nprobe: Int,
       m: Int, k: Int): DataFrame = {
-    val st = requireIvfState(spark, path, "probe")
-    require(st.pq && st.pqBooks.nonEmpty,
-      s"$path is not a product-quantized index — batch-probe it with " +
-        "probePersistedIvfMany (float) or probePersistedIvfPqMany (int8)")
-    ivfProductTopKMany(SnapshotScan.frameAt(spark, path, st.version),
-      source, embedding, id, queries, qid, qEmbedding, st.codebook,
-      st.pqBooks.get, nprobe, m, k, MaxRescoreIdLiterals)
+    val (st, frame) = pinIvf(spark, path, "batch-probe", 2)
+    ivfProductTopKMany(frame, source, embedding, id, queries, qid,
+      qEmbedding, st.codebook, st.pqBooks.get, nprobe, m, k,
+      MaxRescoreIdLiterals)
   }
 
-  /** Rebuild a drifted persisted product-quantized index IN PLACE
-    * from the SOURCE table's true embeddings —
-    * [[rebuildPersistedIvfPq]]'s scheme-2 sibling with identical CAS
-    * discipline (base pinned BEFORE staging, epoch bump, typed
-    * [[Versioned.CommitRaceExhausted]]); retrains BOTH the IVF
-    * codebook and the product books, since codes under stale books
-    * would decode against the wrong centroids. */
+  /** [[rebuildPersistedIvfPq]] for a product-quantized index: it
+    * retrains BOTH the IVF codebook and the product books (keeping the
+    * numSub/kSub shape asked for), since codes under stale books would
+    * decode against the wrong centroids. */
   def rebuildPersistedIvfProduct(
       spark: org.apache.spark.sql.SparkSession, path: String,
       source: DataFrame, embedding: String, id: String, nlist: Int,
       numSub: Int, kSub: Int = 256, refineIters: Int = 0,
       pqIters: Int = 2): (IvfCodebook, ProductQuant.PqCodebooks, IvfStats) = {
-    val st0 = requireIvfState(spark, path, "rebuild")
-    require(st0.pq && st0.pqBooks.nonEmpty,
-      s"$path is not a product-quantized index — rebuild it with " +
-        "retrainPersistedIvf (float) or rebuildPersistedIvfPq (int8)")
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      if (attempts > 5) throw new Versioned.CommitRaceExhausted(
-        s"rebuild of $path", attempts - 1)
-      // CAS base pinned BEFORE staging (rebuildPersistedIvfPq's
-      // discipline): an interleaved append fails the CAS and the
-      // retry re-reads the source, so it can't be silently erased
-      val base = Versioned.versions(spark, path).max
-      val epoch = loadPersistedIvf(spark, path).map(_.epoch + 1)
-        .getOrElse(0L)
-      val narrow = source.select(col(id), col(embedding))
-      val cb = buildCodebook(narrow, embedding, id, nlist, refineIters)
-      val books = ProductQuant.train(narrow, embedding, id, numSub,
-        kSub, pqIters)
-      val staged = ivfAssignWithSim(source, embedding, cb)
-        .withColumn("pq_code",
-          ProductQuant.encodeCol(col(embedding), books))
-        .select(col(id), col("list_id"), col("pq_code"),
-          col(AssignSimCol))
-        .localCheckpoint(true)
-      val stats = qualityOf(staged)
-      val fp = fingerprint(cb)
-      val bfp = ProductQuant.fingerprint(books)
-      val cbFile = writeCodebookSidecar(spark, path, cb, fp)
-      val bkFile = writePqBooksSidecar(spark, path, books, bfp)
-      if (Versioned.commitIf(staged.drop(AssignSimCol), path,
-          "overwrite",
-          ivfMeta(cbFile, fp, stats, epoch) ++ productMeta(bkFile, bfp),
-          base, Some(("list_id", ivfBuckets(nlist)))).isDefined)
-        return (cb, books, stats)
-    }
-    sys.error("unreachable: the CAS loop returns or throws")
+    val b = rebuildIvf(spark, path, "rebuild", 2, bump = true, embedding,
+      id, nlist, refineIters)(_ => source)(narrow => IvfCode.Product(
+      ProductQuant.train(narrow, embedding, id, numSub, kSub, pqIters)))
+    val IvfCode.Product(books, _, _) = b.code
+    (b.codebook, books, b.stats)
   }
 
   /** Embedding-cosine near-duplicate pairs, LSH-bucketed: pairs are

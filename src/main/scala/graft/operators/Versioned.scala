@@ -906,23 +906,28 @@ object Versioned {
   }
 
   /** The bounded read-compute-commit loop of the rewrite-shaped
-    * operations ([[rewrite]], [[mergeOnRead]], [[compactSmall]]) and
-    * the validated DDL ([[alterColumns]], [[addInvariants]]): each
+    * operations ([[rewrite]], [[mergeOnRead]], [[compactSmall]]), the
+    * validated DDL ([[alterColumns]], [[addInvariants]]) and the
+    * persisted ANN index's builds, retrains and appends: each
     * attempt reads the latest version, computes against it and
     * commits; None means the commit lost the race (its staged files
     * already deleted) and the whole cycle recomputes against the new
     * latest — at most 5 attempts, then [[CommitRaceExhausted]]. A
+    * caller that already pinned a version passes it as `pinned`, and
+    * the first attempt runs against it without re-resolving. A
     * concurrent VACUUM under the attempt ([[isVacuumRace]],
     * [[tableMovedPast]]) resolves the same way; its staged debris falls
     * to the orphan-grace sweep. */
-  private def raceLoop[A](fs: FileSystem, root: Path, table: String,
-      what: String)(attempt: Long => Option[A]): A = {
+  private[graft] def raceLoop[A](fs: FileSystem, root: Path, table: String,
+      what: String, pinned: Option[Long] = None)(
+      attempt: Long => Option[A]): A = {
     var attempts = 0
     var base = -1L
     while (true) {
       attempts += 1
       try {
-        base = latestVersion(fs, root).getOrElse(throw
+        base = pinned.filter(_ => attempts == 1)
+          .orElse(latestVersion(fs, root)).getOrElse(throw
           new IllegalArgumentException(s"no committed version in $table"))
         attempt(base) match {
           case Some(a) => return a

@@ -18,12 +18,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * its manifest meta — committed atomically WITH the rows — and a
   * replayed batch (checkpoint lost after the sink ran) finds its id
   * recorded and skips, where a snapshot append replayed blindly would
-  * DUPLICATE the batch's vectors. (The pre-r16 plain-dir layout was
-  * idempotent by construction — per-batch dir overwrites — but paid
-  * for it with no commit protocol at all: no concurrent writers, no
-  * in-place retrain, mixed-layout read failures. The ledger is the
-  * price of the snapshot layout's multi-writer safety, and it is the
-  * same ledger st17 already proved.) A root-level `_annbatch` mirror
+  * DUPLICATE the batch's vectors — the same ledger st17 already
+  * proved. A root-level `_annbatch` mirror
   * backstops the manifest against vacuum erasure, exactly like
   * NearDedup's (see [[BatchMirror]]).
   *
@@ -48,37 +44,29 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * — the commit IS the swap, no pointer file or probe repoint needed.
   * Without the policy the WARN remains the operator's signal.
   *
-  * With `pqId` set, the sink grows an IVF-PQ index instead: batches
-  * assign on TRUE embeddings, quantize to int8 codes, and append
-  * ~1/4 the bytes — same ledger, same mirror, same drift signal
-  * (pre-quantization sims). [[AutoRetrain]] refuses to compose with
-  * it (lossy codes cannot rebuild a codebook); the quantized sink's
-  * drift response is [[AutoRebuild]], which retrains from the SOURCE
-  * table's true embeddings via
-  * [[Similarity.rebuildPersistedIvfPq]].
+  * The sink grows whichever code the INDEX holds. A MISSING index is
+  * seeded from the caller's arguments: float rows by default, int8
+  * codes with `pqId` (the vector-id column), TRUE product
+  * quantization ([[graft.operators.ProductQuant]], one byte per
+  * subvector) with `pqId` and `productBooks`. After the seed, every
+  * batch follows the committed descriptor, not the arguments: the
+  * appended codes and the re-emitted descriptor come from the state
+  * each commit attempt pins, so a mid-stream rebuild that swaps the
+  * codebooks hands off to the stream atomically, exactly like a float
+  * retrain. `pqId` only says the stream carries codes (any quantized
+  * index) or floats. Quantized batches assign on TRUE embeddings and
+  * keep the drift signal quantization-independent. [[AutoRetrain]]
+  * refuses to compose with them (lossy codes cannot rebuild a
+  * codebook); their drift response is [[AutoRebuild]], which
+  * retrains from the SOURCE table's true embeddings, keeping a
+  * product index's numSub/k shape.
   *
-  * With `productBooks` additionally set (requires `pqId`), a MISSING
-  * index seeds as TRUE product quantization (scheme 2 — one byte per
-  * subvector, [[graft.operators.ProductQuant]]) instead of int8.
-  * After the seed, every batch follows the INDEX's resolved scheme,
-  * not the caller's arguments: the appended codes and the re-emitted
-  * descriptor come from the committed state inside the CAS loop, so
-  * a mid-stream rebuild that swaps the product books (or an operator
-  * migration between quantization schemes) hands off to the stream
-  * atomically, exactly like a float retrain. [[AutoRebuild]]
-  * composes with BOTH quantized schemes: it dispatches on the live
-  * state — [[Similarity.rebuildPersistedIvfProduct]] (keeping the
-  * current numSub/k shape) for a product index,
-  * [[Similarity.rebuildPersistedIvfPq]] for int8.
-  *
-  * A LEGACY pre-r16 dir (`batch=<id>/list_id=` stream layout or a
-  * root-level `list_id=` plain build, no commit log) refuses up front:
-  * committing a snapshot over it would permanently shadow every legacy
-  * vector from the catalog read. Migrate with
-  * [[Similarity.migratePersistedIvf]] to a fresh path and point the
-  * stream there.
+  * A plain parquet dir (no commit log) refuses up front: committing a
+  * snapshot over it would permanently shadow every vector in it from
+  * the catalog read. Rebuild it at a fresh path with
+  * `Similarity.writePersistedIvf` and point the stream there.
   */
-object AnnIngest {
+object AnnIngest extends org.apache.spark.internal.Logging {
 
   /** Manifest meta key carrying the last applied foreachBatch id. */
   val BatchKey = "annbatch"
@@ -98,9 +86,9 @@ object AnnIngest {
     (fromMeta ++ fromFile).maxOption
   }
 
-  /** Refuse a legacy plain-dir layout before the first commit lands —
-    * a snapshot committed over it would shadow every legacy vector
-    * with no write-time error. Runs per micro-batch (one exists +
+  /** Refuse a plain-dir layout before the first commit lands — a
+    * snapshot committed over it would shadow every vector in it with
+    * no write-time error. Runs per micro-batch (one exists +
     * listing); it short-circuits on the commit log's presence, so the
     * listing only happens while the dir is still uncommitted. */
   private def requireSnapshotOrEmpty(spark: SparkSession,
@@ -110,19 +98,18 @@ object AnnIngest {
     if (!fs.exists(p) ||
         fs.exists(new org.apache.hadoop.fs.Path(p, Versioned.LogDir)))
       return
-    val legacy = fs.listStatus(p).exists { st =>
+    val plainDir = fs.listStatus(p).exists { st =>
       val n = st.getPath.getName
       (st.isDirectory &&
         (n.startsWith("list_id=") || n.startsWith("batch="))) ||
         (!st.isDirectory && n.endsWith(".parquet") && !n.startsWith("_") &&
           !n.startsWith("."))
     }
-    if (legacy) throw new IllegalStateException(
-      s"$path holds a legacy plain-dir IVF layout (pre-snapshot " +
-        "list_id=/batch= dirs) but no commit log — committing a " +
-        "snapshot over it would shadow every legacy vector; migrate " +
-        "it first with Similarity.migratePersistedIvf to a fresh path " +
-        "and point the stream there")
+    if (plainDir) throw new IllegalStateException(
+      s"$path holds a plain-dir IVF layout (list_id=/batch= dirs) but " +
+        "no commit log — committing a snapshot over it would shadow " +
+        "every vector in it; rebuild it at a fresh path with " +
+        "Similarity.writePersistedIvf and point the stream there")
   }
 
   /** In-stream drift response: when a batch's drift check fires, the
@@ -197,6 +184,25 @@ object AnnIngest {
       retrainRecommended: Boolean, replayed: Boolean,
       retrained: Boolean = false, compacted: Boolean = false)
 
+  /** The argument combinations a sink refuses — at sink construction
+    * and per batch, never on the first drifted batch mid-stream (see
+    * [[AutoRebuild]] for why AutoRetrain cannot compose with pqId). */
+  private def requirePolicies(autoRetrain: Option[AutoRetrain],
+      pqId: Option[String], autoRebuild: Option[AutoRebuild],
+      productBooks: Option[graft.operators.ProductQuant.PqCodebooks]): Unit = {
+    require(productBooks.isEmpty || pqId.nonEmpty,
+      "productBooks seeds a quantized index — it requires pqId (the " +
+        "vector-id column); a float index carries its own embeddings")
+    require(autoRetrain.isEmpty || pqId.isEmpty,
+      "AutoRetrain cannot rebuild an IVF-PQ index from its lossy " +
+        "codes — use AutoRebuild(source, ...) to retrain from the " +
+        "source table, or stream into a float index")
+    require(autoRebuild.isEmpty || pqId.nonEmpty,
+      "AutoRebuild retrains from the source table a PQ probe rescores " +
+        "against — it only composes with pqId; a float index retrains " +
+        "in place with AutoRetrain")
+  }
+
   /** Process one micro-batch (the foreachBatch body, callable directly
     * so specs can drive replay/retrain schedules deterministically). */
   def processBatch(batch: DataFrame, batchId: Long, embedding: String,
@@ -208,34 +214,17 @@ object AnnIngest {
       productBooks: Option[graft.operators.ProductQuant.PqCodebooks] =
         None): BatchOutcome = {
     val spark = batch.sparkSession
-    require(productBooks.isEmpty || pqId.nonEmpty,
-      "productBooks seeds a quantized index — it requires pqId (the " +
-        "vector-id column); a float index carries its own embeddings")
-    // pqId names the vector-id column and switches the sink to the
-    // IVF-PQ layout: batches assign on TRUE embeddings, quantize, and
-    // append codes (~1/4 the index bytes). AutoRetrain cannot compose
-    // with it — a PQ index's rows are lossy codes, so an in-place
-    // rebuild has nothing to retrain FROM; refuse up front rather
-    // than on the first drifted batch mid-stream. The PQ drift
-    // response is AutoRebuild, which retrains from the SOURCE table.
-    require(autoRetrain.isEmpty || pqId.isEmpty,
-      "AutoRetrain cannot rebuild an IVF-PQ index from its lossy " +
-        "codes — use AutoRebuild(source, ...) to retrain from the " +
-        "source table, or stream into a float index")
-    require(autoRebuild.isEmpty || pqId.nonEmpty,
-      "AutoRebuild retrains from the source table a PQ probe rescores " +
-        "against — it only composes with pqId; a float index retrains " +
-        "in place with AutoRetrain")
+    requirePolicies(autoRetrain, pqId, autoRebuild, productBooks)
     requireSnapshotOrEmpty(spark, path)
-    (pqId, productBooks) match {
-      case (Some(id), Some(books)) =>
-        Similarity.ensurePersistedIvfProduct(batch, embedding, id,
-          seedCodebook, books, path)
-      case (Some(id), None) =>
-        Similarity.ensurePersistedIvfPq(batch, embedding, id,
-          seedCodebook, path)
-      case _ =>
-        Similarity.ensurePersistedIvf(batch, embedding, seedCodebook, path)
+    // ONE descriptor resolution serves the append AND the post-append
+    // policies (nlist default, AutoRebuild's books shape): a raced
+    // rebuild keeps the scheme and the append re-pins internally, so
+    // re-loading per use would only buy extra manifest scans. A
+    // missing index is seeded first (iff no version exists).
+    val state = Similarity.loadPersistedIvf(spark, path).getOrElse {
+      Similarity.ensurePersistedIvf(batch, embedding, seedCodebook, path,
+        pqId, productBooks)
+      Similarity.requireIvfState(spark, path, "append")
     }
     val applied = lastAppliedBatch(spark, path)
     if (applied.exists(_ >= batchId)) {
@@ -246,65 +235,30 @@ object AnnIngest {
       return BatchOutcome(batchId, -1, 0.0, retrainRecommended = false,
         replayed = true)
     }
-    // ONE descriptor resolution serves the scheme dispatch here AND
-    // the post-append policies (nlist default, AutoRebuild's scheme
-    // dispatch): the codebook family can't change during our own
-    // append (a raced rebuild keeps the scheme and the CAS loop
-    // re-resolves internally), so re-loading per use would only buy
-    // extra manifest scans and a dispatch/append race window
-    val preState = Similarity.loadPersistedIvf(spark, path)
-    // the append follows the INDEX's resolved scheme (not the seed
-    // arguments): a stream pointed at a product index appends product
-    // codes even when seeded for int8, and vice versa — the committed
-    // descriptor is the single source of layout truth
-    val app = pqId match {
-      case Some(id) if preState.exists(_.pqBooks.nonEmpty) =>
-        Similarity.appendToPersistedIvfProduct(batch, embedding, id,
-          path, Map(BatchKey -> batchId.toString))
-      case Some(id) => Similarity.appendResolvedToPersistedIvfPq(batch,
-        embedding, id, path, Map(BatchKey -> batchId.toString))
-      case None => Similarity.appendResolvedToPersistedIvf(batch,
-        embedding, path, Map(BatchKey -> batchId.toString))
-    }
+    // the append follows the INDEX's resolved code (not the seed
+    // arguments): the committed descriptor is the single source of
+    // layout truth
+    val app = Similarity.appendStreamed(batch, embedding, pqId, path, state,
+      Map(BatchKey -> batchId.toString))
     // after the commit: the vacuum-proof mirror (see lastAppliedBatch)
     BatchMirror.write(spark, mirrorFile(path), path, batchId)
-    def currentNlist(declared: Int): Int =
-      if (declared > 0) declared
-      else preState
-        .map(_.codebook.entries.length)
-        .getOrElse(throw new IllegalStateException(
-          s"$path carries no IVF descriptor — a foreign overwrite " +
-            "landed; rebuild the index"))
-    val retrained = app.retrainRecommended && (autoRetrain.exists { ar =>
-      val nlist = currentNlist(ar.nlist)
-      try {
-        val (_, stats) = Similarity.retrainPersistedIvf(spark, path,
-          embedding, ar.id, nlist, ar.refineIters)
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"ann-ingest batch $batchId: drift fired, retrained $path in " +
-            f"place (nlist=$nlist, new baseline ${stats.vectors} " +
-            f"vectors @ mean_sim=${stats.meanSim}%.4f)")
-        true
-      } catch {
-        // best-effort like the PQ rebuild below: the batch's ledger
-        // commit already landed — a retrain that exhausts its CAS
-        // retries under an ingest storm WARNs and defers (drift
-        // re-fires on the next cohort), never crashes the stream
-        case e: Versioned.CommitRaceExhausted =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"ann-ingest batch $batchId: drift fired but the retrain " +
-              s"of $path lost its commit race to the ingest storm; " +
-              "deferring — drift re-fires on the next cohort", e)
-          false
-      }
-    } || autoRebuild.exists { ar =>
-      val nlist = currentNlist(ar.nlist)
-      try {
-        // dispatch on the resolved scheme: a product index keeps its
-        // current subspace shape through the rebuild (the books are
-        // retrained, not reshaped — reshaping is an operator decision,
-        // not a drift response)
-        val stats = preState.flatMap(_.pqBooks) match {
+    // the drift response: each policy only chooses the rebuild call;
+    // nlist = 0 keeps the current cell count
+    def nlistOf(declared: Int): Int =
+      if (declared > 0) declared else state.codebook.entries.length
+    val response: Option[(String, String, Int, () => Similarity.IvfStats)] =
+      autoRetrain.map { ar =>
+        val nlist = nlistOf(ar.nlist)
+        ("retrain", s"retrained $path in place", nlist, () =>
+          Similarity.retrainPersistedIvf(spark, path, embedding, ar.id,
+            nlist, ar.refineIters)._2)
+      }.orElse(autoRebuild.map { ar =>
+        val nlist = nlistOf(ar.nlist)
+        // a product index keeps its current subspace shape through the
+        // rebuild (the books are retrained, not reshaped — reshaping
+        // is an operator decision, not a drift response)
+        ("PQ rebuild", s"rebuilt PQ index $path in place from its " +
+          "source table", nlist, () => state.pqBooks match {
           case Some(books) =>
             Similarity.rebuildPersistedIvfProduct(spark, path,
               ar.source(spark), embedding, ar.id, nlist,
@@ -314,27 +268,29 @@ object AnnIngest {
             Similarity.rebuildPersistedIvfPq(spark, path,
               ar.source(spark), embedding, ar.id, nlist,
               ar.refineIters)._2
-        }
-        org.slf4j.LoggerFactory.getLogger(getClass).info(
-          s"ann-ingest batch $batchId: drift fired, rebuilt PQ index " +
-            s"$path in place from its source table (nlist=$nlist, new " +
-            f"baseline ${stats.vectors} vectors @ " +
+        })
+      })
+    val retrained = app.retrainRecommended && response.exists {
+      case (name, done, nlist, run) =>
+        try {
+          val stats = run()
+          logInfo(s"ann-ingest batch $batchId: drift fired, $done " +
+            f"(nlist=$nlist, new baseline ${stats.vectors} vectors @ " +
             f"mean_sim=${stats.meanSim}%.4f)")
-        true
-      } catch {
-        // best-effort like AutoCompact: the batch's ledger commit has
-        // already landed — a rebuild that exhausts its CAS retries
-        // under an ingest storm WARNs and defers (the still-drifted
-        // distribution re-fires the flag on its next cohort), never
-        // crashes a stream whose data is safe
-        case e: Versioned.CommitRaceExhausted =>
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"ann-ingest batch $batchId: drift fired but the PQ " +
-              s"rebuild of $path lost its commit race to the ingest " +
+          true
+        } catch {
+          // best-effort like AutoCompact: the batch's ledger commit has
+          // already landed — a retrain/rebuild that exhausts its CAS
+          // retries under an ingest storm WARNs and defers (the
+          // still-drifted distribution re-fires the flag on its next
+          // cohort), never crashes a stream whose data is safe
+          case e: Versioned.CommitRaceExhausted =>
+            logWarning(s"ann-ingest batch $batchId: drift fired but the " +
+              s"$name of $path lost its commit race to the ingest " +
               "storm; deferring — drift re-fires on the next cohort", e)
-          false
-      }
-    })
+            false
+        }
+    }
     // segment hygiene LAST: a retrain just rewrote everything (nothing
     // small left), and the fold must see this batch's segments. A
     // compaction here is a foreign commit to the ledger/descriptor
@@ -358,20 +314,11 @@ object AnnIngest {
       productBooks: Option[graft.operators.ProductQuant.PqCodebooks] =
         None):
       (DataFrame, Long) => Unit = {
-    require(autoRetrain.isEmpty || pqId.isEmpty,
-      "AutoRetrain cannot rebuild an IVF-PQ index from its lossy " +
-        "codes — fail at sink construction, not on the first drifted " +
-        "batch")
-    require(autoRebuild.isEmpty || pqId.nonEmpty,
-      "AutoRebuild only composes with pqId — fail at sink " +
-        "construction, not on the first drifted batch")
-    require(productBooks.isEmpty || pqId.nonEmpty,
-      "productBooks requires pqId — fail at sink construction, not " +
-        "on the first batch")
+    requirePolicies(autoRetrain, pqId, autoRebuild, productBooks)
     (batch, batchId) => {
       val o = processBatch(batch, batchId, embedding, seedCodebook, path,
         autoRetrain, autoCompact, pqId, autoRebuild, productBooks)
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
+      logInfo(
         if (o.replayed)
           s"ann-ingest batch ${o.batchId}: replay detected, skipped"
         else s"ann-ingest batch ${o.batchId}: appended=${o.appended} " +

@@ -386,36 +386,14 @@ class OperatorSpec extends SparkSpec {
       Similarity.probePersistedIndex(spark, path, "embedding", "vec_id",
         q, numPlanes = 8, k = 5)
     }.getMessage.contains("plane family"))
-    // a LEGACY plain-dir index: appends refuse with the migration
-    // pointer; migratePersistedIndex commits it as a snapshot in place
-    // (recording the family), after which the guarded paths serve it
+    // a plain parquet dir: appends refuse with the rebuild pointer
     val bare = tmpDir("lshheal") + "/index"
     Similarity.index(build, "embedding", 6, 64)
       .write.partitionBy("bucket").parquet(bare)
     assert(Similarity.planeFamilyOf(spark, bare).isEmpty)
     assert(intercept[IllegalArgumentException] {
       Similarity.appendToPersistedIndex(extra, "embedding", 6, 64, bare)
-    }.getMessage.contains("migratePersistedIndex"))
-    Similarity.migratePersistedIndex(spark, bare, 6, 64)
-    assert(Similarity.planeFamilyOf(spark, bare).contains((6, 64)))
-    Similarity.appendToPersistedIndex(extra, "embedding", 6, 64, bare)
-    val migProbe = Similarity.probePersistedIndex(spark, bare, "embedding",
-      "vec_id", q, numPlanes = 6, k = 5, probeHamming = 2)
-      .collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(migProbe.toSeq == inMem.toSeq,
-      s"migrated+appended probe diverged: ${migProbe.toSeq}")
-    // a truncated LEGACY sidecar (crash between create and write)
-    // fails with a NAMED error pointing at the file, never a bare
-    // MatchError
-    val bare2 = tmpDir("lshcorrupt") + "/index"
-    Similarity.index(build, "embedding", 6, 64)
-      .write.partitionBy("bucket").parquet(bare2)
-    val sc = new org.apache.hadoop.fs.Path(bare2, "_lsh_planes.json")
-    sc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(sc, true).close() // zero bytes
-    assert(intercept[IllegalStateException] {
-      Similarity.readPlaneSidecar(spark, bare2)
-    }.getMessage.contains("corrupt sidecar"))
+    }.getMessage.contains("writePersistedIndex"))
   }
 
   test("persisted IVF append: frozen-codebook assignment, post-append " +
@@ -511,16 +489,16 @@ class OperatorSpec extends SparkSpec {
     val app = Similarity.appendToPersistedIvf(shifted, "embedding", cb, path)
     assert(app.retrainRecommended,
       s"orthogonal cohort must flag retrain: $app vs $baseline")
-    // a LEGACY plain-dir index (no commit log, no descriptor) refuses
-    // the append loudly and points at the migration, not a silent
-    // append whose codebook nobody recorded
+    // a plain-dir index (no commit log, no descriptor) refuses the
+    // append loudly and points at the rebuild, not a silent append
+    // whose codebook nobody recorded
     val bare = tmpDir("ivfbare") + "/index"
     Similarity.ivfAssign(build, "embedding", cb)
       .write.partitionBy("list_id").parquet(bare)
     val e = intercept[IllegalArgumentException] {
       Similarity.appendToPersistedIvf(build, "embedding", cb, bare)
     }
-    assert(e.getMessage.contains("migratePersistedIvf"))
+    assert(e.getMessage.contains("writePersistedIvf"))
   }
 
   test("batch probe ivfTopKMany: each query's top-k equals its single " +
@@ -1219,12 +1197,6 @@ class OperatorSpec extends SparkSpec {
     // time travel: the pre-retrain snapshot is still readable (a live
     // probe pinned to it mid-retrain reads consistent old data)
     assert(Versioned.read(spark, path, Some(preRetrainV)).count() == 88)
-    // legacy migration still refuses same-path (no commit protocol on
-    // the plain-dir source to swap under live probes)
-    assert(intercept[IllegalArgumentException] {
-      Similarity.migratePersistedIvf(spark, path, path, "embedding",
-        "vec_id", 16)
-    }.getMessage.contains("NEW path"))
   }
 
   test("fingerprint is deterministic and text-sensitive") {

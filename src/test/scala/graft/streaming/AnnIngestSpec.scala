@@ -372,30 +372,22 @@ class AnnIngestSpec extends SparkSpec {
     assert(!AnnIngest.processBatch(vecs(300L -> 3), 2L, "embedding", cb,
       path).replayed)
 
-    // legacy layouts refuse before any commit: the pre-r16 streaming
-    // batch= shape and the plain list_id= build shape alike
+    // plain-dir layouts refuse before any commit: the batch= shape and
+    // the plain list_id= build shape alike
     val legacyBatch = tmpDir("annlegacy") + "/ivf"
     Similarity.ivfAssign(b0, "embedding", cb)
       .write.partitionBy("list_id").parquet(s"$legacyBatch/batch=0")
     assert(intercept[IllegalStateException] {
       AnnIngest.processBatch(vecs(400L -> 4), 0L, "embedding", cb,
         legacyBatch)
-    }.getMessage.contains("migratePersistedIvf"))
+    }.getMessage.contains("writePersistedIvf"))
     val legacyPlain = tmpDir("annlegacy2") + "/ivf"
     Similarity.ivfAssign(b0, "embedding", cb)
       .write.partitionBy("list_id").parquet(legacyPlain)
     assert(intercept[IllegalStateException] {
       AnnIngest.processBatch(vecs(400L -> 4), 0L, "embedding", cb,
         legacyPlain)
-    }.getMessage.contains("migratePersistedIvf"))
-    // ...and migratePersistedIvf turns the legacy dir into a snapshot
-    // index the stream can then run against
-    val migrated = tmpDir("annlegacy3") + "/ivf"
-    val (cbM, _) = Similarity.migratePersistedIvf(spark, legacyPlain,
-      migrated, "embedding", "vec_id", nlist = 8)
-    assert(!AnnIngest.processBatch(vecs(400L -> 4), 0L, "embedding", cbM,
-      migrated).replayed)
-    assert(Versioned.read(spark, migrated).count() == 9)
+    }.getMessage.contains("writePersistedIvf"))
   }
 
   test("maintenance composition: threshold COMPACT folds a night of " +
