@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - n-gram Jaccard: exact verify on LSH candidates via
   *    array_intersect/array_union on shingle sets.
   */
-object Dedup {
+object Dedup extends org.apache.spark.internal.Logging {
 
   // ---------- exact ----------
 
@@ -335,7 +335,7 @@ object Dedup {
       .map(bucketsForIndexBytes).getOrElse(n)
     val res = BandIndexWrite(n, rec, committedV)
     if (res.rebucketRecommended)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      logWarning(
         s"band index $path: declared layout $n buckets vs " +
           s"$rec recommended for its current bytes — " +
           "rebucketBandIndex(spark, path) migration recommended")

@@ -29,7 +29,7 @@ import scala.collection.mutable
   * rather than O(listing 100 TB of dirs), and historic versions stay
   * readable until vacuumed.
   */
-object Versioned {
+object Versioned extends org.apache.spark.internal.Logging {
 
   /** Manifest-log dir name — shared with the DSv2 catalog's
     * "is this dir a snapshot table" probe (GraftCatalog.listTables). */
@@ -2117,7 +2117,7 @@ object Versioned {
       // Fall back to a full re-read of the latest snapshot (safe
       // under the consumer's at-least-once contract) and say so.
       case Some(v) if !live.contains(v) =>
-        org.apache.log4j.Logger.getLogger(getClass).warn(
+        logWarning(
           s"change-feed cursor version $v of $table was vacuumed; " +
             s"re-reading full table at version $latest")
         read(spark, table, Some(latest))

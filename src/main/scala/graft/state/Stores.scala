@@ -1,8 +1,8 @@
 package graft.state
 
 import graft.model.{ConfigValue, TableLoadDetail}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{Dataset, Encoder, SaveMode, SparkSession}
 import java.sql.Timestamp
 
 /** Parquet-backed state stores with MERGE semantics (SURVEY.md §2.1
@@ -16,7 +16,13 @@ import java.sql.Timestamp
   *
   * Scale note: these are control tables (hundreds of rows), not data
   * tables; full-rewrite cost is constant. Data-plane writes never go
-  * through this path.
+  * through this path. Each store keeps a driver-side copy of its rows,
+  * valid while the table's file signature — the sorted (name, length,
+  * mtime) of its visible data files — is unchanged. A lookup costs one
+  * status call and one LIST and starts no Spark job; a miss re-reads
+  * the table in one job; a commit is one write job. Every
+  * Spark write lands new UUID-named part files, so a write by another
+  * store instance or process is seen on the next lookup.
   */
 object ParquetMerge {
   /** Overwrite `path` with `ds` via write-new + swap (best-effort atomic
@@ -24,20 +30,90 @@ object ParquetMerge {
     * Staging/backup use hidden sibling names (ignored by Spark's
     * FileIndex) and a crash between the two renames — table only at the
     * backup — is repaired on the next overwrite, same contract as
-    * [[graft.operators.DataMerge.stagedOverwrite]]. */
-  def overwrite[T](ds: Dataset[T], path: String): Unit = {
+    * [[graft.operators.DataMerge.stagedOverwrite]]. Returns the
+    * [[signature]] of what landed, listed in staging before the swap (a
+    * rename keeps names, lengths and mtimes). */
+  def overwrite[T](ds: Dataset[T], path: String): Seq[(String, Long, Long)] = {
     import graft.operators.DataMerge.hiddenSibling
-    val tmp = hiddenSibling(path, ".staging")
-    ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(tmp), ds.sparkSession.sparkContext.hadoopConfiguration)
-    val dst = new org.apache.hadoop.fs.Path(path)
-    val bak = new org.apache.hadoop.fs.Path(hiddenSibling(path, ".old"))
+    val tmp = new Path(hiddenSibling(path, ".staging"))
+    ds.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val fs = FileSystem.get(
+      new java.net.URI(path), ds.sparkSession.sparkContext.hadoopConfiguration)
+    val landed = signature(fs, tmp).getOrElse(Nil)
+    val dst = new Path(path)
+    val bak = new Path(hiddenSibling(path, ".old"))
     if (fs.exists(bak) && !fs.exists(dst)) fs.rename(bak, dst) // crash repair
     if (fs.exists(bak)) fs.delete(bak, true)
     if (fs.exists(dst)) fs.rename(dst, bak)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
+    fs.rename(tmp, dst)
     fs.delete(bak, true)
+    landed
+  }
+
+  /** Sorted (name, length, mtime) of the entries a reader of `dir` sees
+    * (Spark's FileIndex skips `_`- and `.`-prefixed names); None when
+    * `dir` does not exist. */
+  private[state] def signature(fs: FileSystem,
+      dir: Path): Option[Seq[(String, Long, Long)]] =
+    try Some(signatureOf(fs.listStatus(dir).toSeq))
+    catch { case _: java.io.FileNotFoundException => None }
+
+  private[state] def signatureOf(
+      files: Seq[FileStatus]): Seq[(String, Long, Long)] =
+    files.map(s => (s.getPath.getName, s.getLen, s.getModificationTime))
+      .filterNot(f => f._1.startsWith("_") || f._1.startsWith(".")).sorted
+}
+
+/** The driver-side copy of one control table's rows that a parquet
+  * store reads and commits through, keyed by the table's
+  * [[ParquetMerge.signature]]. One per store instance; its lock
+  * serializes the store's read-modify-overwrite commits. */
+private final class ControlSnapshot[T <: Product : Encoder](
+    spark: SparkSession, path: String) {
+  private var copy: Option[(Option[Seq[(String, Long, Long)]], Seq[T])] = None
+
+  /** The table's rows; re-read (one job) only when its files changed. */
+  def rows(): Seq[T] = synchronized {
+    val fs = FileSystem.get(
+      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(path)
+    // crash repair BEFORE the listing: after a crash inside a prior
+    // overwrite's commit window the table lives only at the hidden .old
+    // backup — a listing alone would read EMPTY, and the next commit
+    // would then write just its own row, permanently wiping the rest
+    val present = fs.exists(dir) ||
+      graft.operators.DataMerge.recoverStagedOverwrite(spark, path)
+    copy = copy match {
+      case _ if !present => Some((None, Nil))
+      case Some((sig, _)) if sig == ParquetMerge.signature(fs, dir) => copy
+      case _ => Some(read()) // a cold copy needs no listing of its own
+    }
+    copy.get._2
+  }
+
+  /** The rows with the signature of the files the read's own index
+    * listed: one LIST, one job. */
+  private def read(): (Option[Seq[(String, Long, Long)]], Seq[T]) = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      LogicalRelation, PartitioningAwareFileIndex}
+    val df = spark.read.schema(implicitly[Encoder[T]].schema).parquet(path)
+    val files = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.collect { case i: PartitioningAwareFileIndex => i.allFiles() }
+      .getOrElse(Nil)
+    (Some(ParquetMerge.signatureOf(files)), df.as[T].collect().toSeq)
+  }
+
+  /** Read-modify-overwrite: `f` maps the current rows to the new table,
+    * or to None when nothing changes. Synchronized: parallel table loads
+    * (Ingest.run(parallelism)) commit DIFFERENT rows through the same
+    * file — interleaved rewrites would lose updates. */
+  def update(f: Seq[T] => Option[Seq[T]]): Unit = synchronized {
+    f(rows()).foreach { next =>
+      copy = None // a failed overwrite must not leave the old copy valid
+      val landed = ParquetMerge.overwrite(spark.createDataset(next), path)
+      copy = Some((Some(landed), next))
+    }
   }
 }
 
@@ -64,48 +140,34 @@ trait WatermarkStoreApi {
 final class ConfigStore(spark: SparkSession, path: String)
     extends ConfigStoreApi {
   import spark.implicits._
+  private val snapshot = new ControlSnapshot[ConfigValue](spark, path)
 
-  def all(): Dataset[ConfigValue] = {
-    // crash repair BEFORE the existence probe: after a crash inside a
-    // prior overwrite's commit window the table lives only at the
-    // hidden .old backup — an exists-check alone would read EMPTY,
-    // and the next upsert would then commit just its own row,
-    // permanently wiping every other config value
-    graft.operators.DataMerge.recoverStagedOverwrite(spark, path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.emptyDataset[ConfigValue]
-    else spark.read.parquet(path).as[ConfigValue]
-  }
+  def all(): Dataset[ConfigValue] = spark.createDataset(allValues())
 
-  def allValues(): Seq[ConfigValue] = all().collect().toSeq
+  def allValues(): Seq[ConfigValue] = snapshot.rows()
 
   /** Active values of a group as name->value (the `rdd.collectAsMap()`
     * pattern at `Ingest:97,104` — config tables are tiny by contract). */
   def activeGroup(group: String): Map[String, String] =
     // case-insensitive like `value` and the JDBC backend — the two
     // ConfigStoreApi implementations must agree on row matching
-    all().filter(c => c.is_active && c.group_name.equalsIgnoreCase(group))
-      .collect().map(c => c.config_name -> c.config_value).toMap
+    allValues().filter(c => c.is_active && c.group_name.equalsIgnoreCase(group))
+      .map(c => c.config_name -> c.config_value).toMap
 
   /** Single config value; case-insensitive name match (P11,
     * `Config:114`). Missing-config is an error, as `Ingest:78-79`. */
   def value(group: String, name: String): Option[String] =
-    all().filter(c => c.is_active &&
+    allValues().find(c => c.is_active &&
         c.group_name.equalsIgnoreCase(group) &&
         c.config_name.equalsIgnoreCase(name))
-      .collect().headOption.map(_.config_value)
+      .map(_.config_value)
 
   /** Insert-or-update on (group_name, config_name) — S10/C8 semantics
     * (`Config:106-140`). */
-  def upsert(row: ConfigValue): Unit = this.synchronized {
-    // synchronized for the same reason as WatermarkStore.commit
-    val rest = all().collect().filterNot(c =>
+  def upsert(row: ConfigValue): Unit =
+    snapshot.update(rows => Some(rows.filterNot(c =>
       c.group_name.equalsIgnoreCase(row.group_name) &&
-        c.config_name.equalsIgnoreCase(row.config_name))
-    ParquetMerge.overwrite(spark.createDataset(rest :+ row), path)
-  }
+        c.config_name.equalsIgnoreCase(row.config_name)) :+ row))
 }
 
 /** Watermark state store (`configurations.TableLoadDetails`,
@@ -113,6 +175,7 @@ final class ConfigStore(spark: SparkSession, path: String)
 final class WatermarkStore(spark: SparkSession, path: String)
     extends WatermarkStoreApi {
   import spark.implicits._
+  private val snapshot = new ControlSnapshot[TableLoadDetail](spark, path)
 
   private def key(systemType: String, db: String, table: String): Long = {
     // deterministic id for the logical key (replaces MAX(id)+1)
@@ -121,56 +184,38 @@ final class WatermarkStore(spark: SparkSession, path: String)
       .getMostSignificantBits & Long.MaxValue
   }
 
-  def all(): Dataset[TableLoadDetail] = {
-    // same read-side crash repair as ConfigStore.all — a lost
-    // watermark table would re-load every table from scratch
-    graft.operators.DataMerge.recoverStagedOverwrite(spark, path)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-      spark.emptyDataset[TableLoadDetail]
-    else spark.read.parquet(path).as[TableLoadDetail]
-  }
+  private def matches(systemType: String, db: String, table: String)(
+      d: TableLoadDetail): Boolean =
+    d.systemType.equalsIgnoreCase(systemType) &&
+      d.databaseName.equalsIgnoreCase(db) &&
+      d.tableName.equalsIgnoreCase(table)
+
+  def all(): Dataset[TableLoadDetail] = spark.createDataset(snapshot.rows())
 
   /** `GetMaxTimestampUsingPython` equivalent (C3, `Ingest:453-459`). */
   def lastLoad(systemType: String, db: String, table: String): Option[Timestamp] =
-    all().filter(d =>
-        d.systemType.equalsIgnoreCase(systemType) &&
-        d.databaseName.equalsIgnoreCase(db) &&
-        d.tableName.equalsIgnoreCase(table))
-      .collect().headOption.flatMap(_.lastLoadDate)
+    snapshot.rows().find(matches(systemType, db, table)).flatMap(_.lastLoadDate)
 
   /** MERGE WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED AND insertConfig
     * THEN INSERT (`Ingest:373-415`). The reference only inserts on the
     * chunked path (`insertconfig`, `Ingest:426,431`) — same flag here.
     * `lastLoad` is already lagged by the caller (−80h, F4). */
   def commit(systemType: String, db: String, table: String,
-      lastLoad: Timestamp, insertIfMissing: Boolean): Unit = this.synchronized {
-    // synchronized: parallel table loads (Ingest.run(parallelism))
-    // commit DIFFERENT table rows through the same read-modify-
-    // overwrite file — interleaved rewrites would lose updates
-    val now = new Timestamp(System.currentTimeMillis())
-    val existing = all().collect()
-    val matches = existing.filter(d =>
-      d.systemType.equalsIgnoreCase(systemType) &&
-        d.databaseName.equalsIgnoreCase(db) &&
-        d.tableName.equalsIgnoreCase(table))
-    val updated: Seq[TableLoadDetail] =
-      if (matches.nonEmpty)
-        existing.toSeq.map { d =>
-          if (matches.contains(d))
-            d.copy(lastLoadDate = Some(lastLoad), sqlUpdatedDate = Some(now))
-          else d
-        }
+      lastLoad: Timestamp, insertIfMissing: Boolean): Unit =
+    snapshot.update { existing =>
+      val now = new Timestamp(System.currentTimeMillis())
+      val hit = matches(systemType, db, table) _
+      // rewrite only when the merge changed something: matched rows are
+      // updated, or an insert happens (no-match + !insertIfMissing is the
+      // one no-op path)
+      if (existing.exists(hit))
+        Some(existing.map(d =>
+          if (hit(d)) d.copy(lastLoadDate = Some(lastLoad), sqlUpdatedDate = Some(now))
+          else d))
       else if (insertIfMissing)
-        existing.toSeq :+ TableLoadDetail(
+        Some(existing :+ TableLoadDetail(
           key(systemType, db, table), systemType, db, table.toLowerCase,
-          Some(lastLoad), now, None)
-      else existing.toSeq
-    // rewrite only when the merge changed something: matched rows were
-    // updated, or an insert happened (no-match + !insertIfMissing is the
-    // one no-op path)
-    if (matches.nonEmpty || insertIfMissing)
-      ParquetMerge.overwrite(spark.createDataset(updated), path)
-  }
+          Some(lastLoad), now, None))
+      else None
+    }
 }

@@ -56,7 +56,7 @@ import org.apache.spark.sql.SparkSession
   * per-path inside the instance, so sharing one instance across
   * sinks is also safe. */
 final case class AutoCompact(minBytes: Long = 8L << 20,
-    minSmallFiles: Int = 64) {
+    minSmallFiles: Int = 64) extends org.apache.spark.internal.Logging {
   require(minBytes > 0, s"minBytes must be positive, got $minBytes")
   require(minSmallFiles >= 2,
     s"minSmallFiles must be >= 2 (compaction of one file is a no-op), " +
@@ -99,7 +99,7 @@ final case class AutoCompact(minBytes: Long = 8L << 20,
         try Versioned.compactSmall(spark, path, minBytes)
         catch {
           case e: Versioned.CommitRaceExhausted =>
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            logWarning(
               s"auto-compact $path lost its commit race to the writer " +
                 "storm; deferring to the next batch", e)
             None
@@ -117,13 +117,13 @@ final case class AutoCompact(minBytes: Long = 8L << 20,
           catch { case scala.util.control.NonFatal(_) => countSmall() }
         residue.put(path, post)
         if (post >= small)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+          logWarning(
             s"auto-compact $path: fold reduced nothing ($small -> " +
               s"$post small files — per-bucket bytes still under " +
               s"$minBytes across ${post} occupied buckets); deferring " +
               s"until $minSmallFiles new small files accumulate")
         else
-          org.slf4j.LoggerFactory.getLogger(getClass).info(
+          logInfo(
             s"auto-compact $path: folded $rewritten small files " +
               s"(carried $carried) into version $v ($small -> $post " +
               "small)")

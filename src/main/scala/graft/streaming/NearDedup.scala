@@ -56,7 +56,7 @@ import org.apache.spark.sql.functions._
   * genuinely new pipeline over an old index should start from a fresh
   * index path (or rebucket-migrate the old one into it).
   */
-object NearDedup {
+object NearDedup extends org.apache.spark.internal.Logging {
 
   /** Manifest meta key carrying the last applied foreachBatch id. */
   val BatchKey = "neardedup_batch"
@@ -250,7 +250,7 @@ object NearDedup {
       // the per-batch dedup ledger an unattended stream leaves behind
       // (the outcome counts ride the flags write as observed metrics —
       // no extra job for this line)
-      org.slf4j.LoggerFactory.getLogger(getClass).info(
+      logInfo(
         if (o.replayed)
           s"near-dedup batch ${o.batchId}: replay detected, skipped"
         else s"near-dedup batch ${o.batchId}: admitted=${o.admitted} " +

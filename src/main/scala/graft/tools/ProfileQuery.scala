@@ -98,7 +98,13 @@ object ProfileQuery {
       // next repeat or drop them — r19 ADVICE); bounded for safety
       val deadline = System.nanoTime() + 5000000000L
       while (!jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      Thread.sleep(50) // one beat for the matching job-end enqueue→done
+      // then until `done` stops growing for a quiet 50 ms: a job-end can
+      // still be on its way from the in-flight map to `done`
+      var seen = -1
+      while (done.size != seen && System.nanoTime() < deadline) {
+        seen = done.size
+        Thread.sleep(50)
+      }
       println(f"== run $r: $name rows=$n wall=$sec%.3f s")
       val items = done.toArray(Array.empty[(Int, String, Long)]).sortBy(_._1)
       val total = items.map(_._3).sum
