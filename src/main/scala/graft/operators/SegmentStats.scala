@@ -20,7 +20,9 @@ import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
   * is O(matching files): a query on one day of an append-only table
   * opens the manifests, drops every segment whose [min,max] window
   * excludes the predicate, and scans only the survivors — no
-  * footer-probing of a million files at plan time, no full scan.
+  * footer-probing of a million files at plan time, no full scan. The
+  * same bounds answer `max(col)` outright when every live file has one
+  * (`Versioned.statsMax`): ingest's watermark commit starts no job.
   *
   * Manifest encoding (backward compatible — a file line without a tab
   * is a plain path, older manifests parse unchanged):

@@ -316,7 +316,8 @@ object Versioned extends org.apache.spark.internal.Logging {
     val committed = transact(spark, fs, root, table, staged,
       meta ++ bloomMeta ++ invMeta ++ carrier, Retry(mode, baseV),
       if (mode == "append") Some(_ ++ staged.lines) else None).get
-    baseV.foreach(advanceSchemaCache(table, _, committed, union))
+    advanceSchemaCache(fs, root, baseV, committed, union,
+      staged.lines.nonEmpty, physDf.schema)
     // an interleaved commit may have introduced columns this commit's
     // carrier (computed pre-race) doesn't know — repair it
     if (carrier.isDefined && baseV.exists(committed != _ + 1))
@@ -1488,18 +1489,46 @@ object Versioned extends org.apache.spark.internal.Logging {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val v = version.orElse(latestVersion(fs, root)).getOrElse(
       throw new IllegalArgumentException(s"no committed version in $table"))
-    val lines = readFileLines(fs, root, v)
-    val files = lines.map(l => new Path(root, parseLine(l)._1).toString)
-    require(files.nonEmpty, s"version $v of $table is empty")
     // a widened table resolves under its DECLARED schema (the parquet
     // reader promotes narrow committed files in place); everything
     // else keeps the mergeSchema union
-    val base = schemaCarrier(spark, table, Some(v)) match {
-      case Some(s) => spark.read.schema(s).parquet(files: _*)
-      case None =>
-        spark.read.option("mergeSchema", "true").parquet(files: _*)
+    scanLines(spark, root, v, readFileLines(fs, root, v),
+      schemaCarrier(spark, table, Some(v)))
+  }
+
+  /** The latest version's rows — only those of `files` (absolute paths
+    * of some of its data files) when given — under the version's
+    * read-planning schema ([[versionSchema]]), with its deletion
+    * vectors and column mapping applied. Unlike [[read]], a version
+    * whose schema is cached (every commit through [[commit]] that
+    * extends a cached schema leaves one) pays no footer inference;
+    * the column ORDER is the cached union's, so this serves callers
+    * that address columns by name. */
+  private[graft] def readByName(spark: SparkSession, table: String,
+      files: Option[Seq[String]] = None): DataFrame = {
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = latestVersion(fs, root).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $table"))
+    val all = readFileLines(fs, root, v)
+    val lines = files.fold(all) { subset =>
+      val keep = subset.toSet
+      all.filter(l => keep(new Path(root, parseLine(l)._1).toString))
     }
-    applyDv(spark, root, lines, base)
+    columnMapping(spark, table, Some(v)).applyRead(scanLines(spark, root, v,
+      lines, versionSchema(spark, table, Some(v))))
+  }
+
+  /** A scan of `lines`' files (of version `v`) under `schema`, else
+    * their mergeSchema union, with the lines' deletion vectors
+    * applied. */
+  private def scanLines(spark: SparkSession, root: Path, v: Long,
+      lines: Seq[String], schema: Option[StructType]): DataFrame = {
+    val files = lines.map(l => new Path(root, parseLine(l)._1).toString)
+    require(files.nonEmpty, s"version $v of $root is empty")
+    val reader = schema.fold(spark.read.option("mergeSchema", "true"))(
+      spark.read.schema)
+    applyDv(spark, root, lines, reader.parquet(files: _*))
   }
 
   /** The version's DECLARED physical schema (the widening carrier,
@@ -1622,18 +1651,39 @@ object Versioned extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Advance the schema cache after a successful commit: trusted only
-    * when the commit landed EXACTLY one past its enforcement base (no
-    * foreign interleave — a racing committer's columns would be
-    * missing from the in-memory union). */
-  private def advanceSchemaCache(table: String, baseV: Long,
-      committed: Long, union: Option[StructType]): Unit =
-    union.foreach { s =>
-      if (committed == baseV + 1) {
-        if (schemaCache.size > 512) schemaCache.clear()
-        schemaCache.put(new Path(table).toUri.toString, (committed, s))
-      }
+  /** Advance the schema caches after a successful commit that landed
+    * `written` (the staged frame's schema; `wrote` = it produced files).
+    * An append is trusted only when it landed EXACTLY one past its
+    * enforcement base (no foreign interleave — a racing committer's
+    * columns would be missing from the in-memory union). A commit with
+    * no base that lands version 0 seeds both caches with the schema its
+    * files carry, so the first append after a create pays no footer
+    * inference. The read-planning cache only ever takes what
+    * [[inferPhysicalSchema]] would return: a parquet write records the
+    * frame's schema, and inference reads it back all-nullable, so the
+    * seed is exact; an append whose files carry the base's inferred
+    * schema leaves the union unchanged. */
+  private def advanceSchemaCache(fs: FileSystem, root: Path,
+      baseV: Option[Long], committed: Long, union: Option[StructType],
+      wrote: Boolean, written: StructType): Unit = {
+    val inferred = org.apache.spark.sql.GraftShims.asNullable(written)
+    def put(s: StructType): Unit = {
+      if (schemaCache.size > 512) schemaCache.clear()
+      schemaCache.put(root.toUri.toString, (committed, s))
     }
+    baseV match {
+      case None if committed == 0L && wrote =>
+        put(inferred)
+        readSchemaCache.put(cacheKey(fs, root, committed), inferred)
+      case Some(b) if committed == b + 1 => union.foreach { u => // append
+        put(u)
+        val base = readSchemaCache.get(cacheKey(fs, root, b))
+        if (base != null && (!wrote || base == inferred))
+          readSchemaCache.put(cacheKey(fs, root, committed), base)
+      }
+      case _ =>
+    }
+  }
 
   /** Test-only seam: invoked by [[commit]]/[[commitBucketed]] between
     * schema enforcement and staging (and again between an invariant
@@ -3126,44 +3176,71 @@ object Versioned extends org.apache.spark.internal.Logging {
     * all-NULL, or empty) are excluded. None when the stats cannot
     * restrict anything — caller must fall back to a full read.
     *
-    * The watermark-commit path uses this to turn `max(wm_col)` over a
-    * snapshot table from an O(table) column scan into a read of
-    * (usually) ONE file: max-of-file-maxes is the global max, and any
-    * file achieving the bounded max contains it. */
+    * Max-of-file-maxes is the global max, and any file achieving the
+    * bounded max contains it, so a `max(col)` read of these files is
+    * (usually) ONE file instead of an O(table) column scan. */
   def maxCandidateFiles(spark: SparkSession, table: String,
-      column: String): Option[Seq[String]] = {
-    val all = versionFiles(spark, table)
-    if (all.isEmpty) return None
-    // a deletion vector may have removed exactly the row achieving a
-    // file's recorded max — the stats are then upper bounds, not
-    // attained values, and the arg-max restriction is unsound. Bail
-    // to the full (DV-aware) read; OPTIMIZE folding restores the
-    // fast path.
-    locally {
-      val root = new Path(table)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      latestVersion(fs, root).foreach { v =>
-        if (readFileLines(fs, root, v).exists(parseLine(_)._3.nonEmpty))
-          return None
-      }
+      column: String): Option[Seq[String]] =
+    maxWalk(spark, table, column).flatMap { w =>
+      val candidates = (w.best.map(_._1).toList ++ w.unknown).distinct
+      // only claim a restriction when it actually restricts; a
+      // candidate set as large as the table means the stats bought
+      // nothing
+      if (candidates.nonEmpty && candidates.size < w.files) Some(candidates)
+      else None
     }
-    val stats = fileStats(spark, table)
-    if (stats.isEmpty) return None
+
+  /** `max(column)` over the latest version answered from the manifest
+    * stats alone, for an integer-ordered (`l`) column — catalyst's
+    * micros for TIMESTAMP and TIMESTAMP_NTZ. `Some(None)` when the
+    * stats prove the column NULL in every live row, None when any live
+    * file's bound is unknown or of another ordering class (the caller
+    * reads instead). The stats are the committed footers' own bounds,
+    * so the answer is exactly what a read of the persisted rows gives.
+    * Opens the manifest at most; starts no Spark job. */
+  private[graft] def statsMax(spark: SparkSession, table: String,
+      column: String): Option[Option[Long]] =
+    maxWalk(spark, table, column).collect {
+      case w if w.unknown.isEmpty && w.best.forall(_._2 == 'l') =>
+        w.best.map(_._3.toLong)
+    }
+
+  /** One arg-max walk over the latest version's stats for `column`:
+    * the file with the largest bounded max (file, ordering class, max),
+    * the files whose bound is unknown, and the live file count. Files
+    * the stats prove contribute nothing are in neither list. */
+  private final case class MaxWalk(best: Option[(String, Char, String)],
+      unknown: List[String], files: Int)
+
+  /** The walk behind [[maxCandidateFiles]] and [[statsMax]], over one
+    * resolved version. None when a deletion vector rides the version:
+    * it may have removed exactly the row achieving a file's recorded
+    * max, so the stats are then upper bounds, not attained values
+    * (OPTIMIZE folding restores the walk). */
+  private def maxWalk(spark: SparkSession, table: String,
+      column: String): Option[MaxWalk] = {
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val v = latestVersion(fs, root).getOrElse(
+      throw new IllegalArgumentException(s"no committed version in $table"))
+    if (readFileLines(fs, root, v).exists(parseLine(_)._3.nonEmpty))
+      return None
+    val all = versionFiles(spark, table, Some(v))
+    val stats = fileStats(spark, table, Some(v))
     // stats are keyed by physical column name — a renamed watermark
     // column must still find its bounds
-    val lower = columnMapping(spark, table).physicalOf(column)
+    val lower = columnMapping(spark, table, Some(v)).physicalOf(column)
       .toLowerCase(java.util.Locale.ROOT)
     var unknown = List.empty[String]
-    var bestFile: String = null
-    var bestTag = ' '
-    var bestMax: String = null
-    def better(tag: Char, m: String): Boolean =
-      bestFile == null || (tag == bestTag && (tag match {
+    var best: Option[(String, Char, String)] = None
+    def better(tag: Char, m: String): Boolean = best.forall {
+      case (_, bestTag, bestMax) => tag == bestTag && (tag match {
         case 'l' => m.toLong > bestMax.toLong
         case _ => org.apache.spark.unsafe.types.UTF8String.fromString(m)
           .compareTo(org.apache.spark.unsafe.types.UTF8String
             .fromString(bestMax)) > 0
-      }))
+      })
+    }
     all.foreach { f =>
       stats.get(f) match {
         case None => unknown ::= f // stats-less file: must be read
@@ -3175,18 +3252,14 @@ object Versioned extends org.apache.spark.internal.Logging {
               if (c.nulls.contains(st.rows)) () // all-NULL
               else (c.tag, c.max) match {
                 case (t @ ('l' | 's' | 'b'), Some(m)) =>
-                  if (better(t, m)) { bestFile = f; bestTag = t; bestMax = m }
-                  else if (t != bestTag) unknown ::= f // mixed classes
+                  if (better(t, m)) best = Some((f, t, m))
+                  else if (best.exists(_._2 != t)) unknown ::= f // mixed classes
                 case _ => unknown ::= f // unbounded or unordered class
               }
           }
       }
     }
-    val candidates = (Option(bestFile).toList ++ unknown).distinct
-    // only claim a restriction when it actually restricts; a candidate
-    // set as large as the table means the stats bought nothing
-    if (candidates.nonEmpty && candidates.size < all.size) Some(candidates)
-    else None
+    Some(MaxWalk(best, unknown, all.size))
   }
 
   /** The `#k=v` metadata header of a committed version (empty map for

@@ -1,11 +1,14 @@
 package graft.pipeline
 
 import graft.model._
+import graft.operators.Versioned
 import graft.plan.{ChunkPlanner, PathPlanner, WatermarkResolver}
 import graft.sources.{LakeReader, LakeWriter, Source}
 import graft.state.{ConfigStore, WatermarkStore}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 import java.sql.Timestamp
 import java.time.LocalDate
 import scala.collection.mutable.ArrayBuffer
@@ -84,6 +87,12 @@ final case class IngestConfig(
   *    probe job per level
   *  - chunk writes loop over predicate filters of the cached frame; at
   *    1000 executors each write is a narrow filtered pass, no re-scan
+  *  - the routing count is ONE job, the one that fills the cache: the
+  *    cached plan's rows are counted directly, not through an
+  *    aggregate (AQE plans that as three jobs)
+  *  - a Snapshot table's watermark comes from the manifest's per-file
+  *    footer stats where they answer `max` (no job, no data read); the
+  *    reference re-reads the written data (`Ingest:344-415`)
   */
 final class Ingest(spark: SparkSession, source: Source, cfg: IngestConfig,
     alerts: AlertSink, log: AuditLog,
@@ -178,7 +187,11 @@ final class Ingest(spark: SparkSession, source: Source, cfg: IngestConfig,
     // re-executes the source scan per probe and per chunk)
     val staged = staged0.cache()
     try {
-      val stagedCount = staged.count() // first materialization (E1 step 4)
+      // first materialization (E1 step 4): counting the cached plan's
+      // rows directly is ONE job that also fills the cache, where
+      // `staged.count()` plans an aggregate over it (AQE: cache stage,
+      // partial count, final count — three jobs)
+      val stagedCount = staged.queryExecution.toRdd.count()
       log.add(s"${paths.table}: staged $stagedCount rows " +
         s"(watermarks=${wmCols.mkString(",")}, incremental=${last.isDefined})")
 
@@ -198,7 +211,7 @@ final class Ingest(spark: SparkSession, source: Source, cfg: IngestConfig,
             Some(cfg.filesPerChunk), cfg.lakeFormat, bucket)
           // full path updates but never inserts (reference quirk,
           // `Ingest:424-426` insertconfig only on chunked)
-          commitWatermark(paths.filePath, wmCols, paths.table,
+          commitWatermark(paths.filePath, wmCols, staged.schema, paths.table,
             insertIfMissing = false)
           stagedCount
 
@@ -211,7 +224,7 @@ final class Ingest(spark: SparkSession, source: Source, cfg: IngestConfig,
               SaveMode.Append, Some(cfg.filesPerChunk), cfg.lakeFormat,
               bucket)
           }
-          commitWatermark(paths.filePath, wmCols, paths.table,
+          commitWatermark(paths.filePath, wmCols, staged.schema, paths.table,
             insertIfMissing = true)
           stagedCount
 
@@ -228,47 +241,69 @@ final class Ingest(spark: SparkSession, source: Source, cfg: IngestConfig,
     } finally staged.unpersist()
   }
 
-  /** C6 watermark commit: re-read written data, MAX(COALESCE(cols)) − lag,
-    * MERGE (`Ingest:344-415`). Re-reading the lake dir (not the staged
-    * frame) is load-bearing: it commits what was actually persisted, so
-    * a write path that drops or rewrites rows can never advance the
-    * watermark past data that isn't on disk. The parquet max-statistics
-    * make this a footer-only scan, not a data read. */
+  /** C6 watermark commit: MAX(COALESCE(cols)) − lag of the WRITTEN
+    * data, MERGEd into the watermark store (`Ingest:344-415`). Taking
+    * it from the lake (not the staged frame) is load-bearing: it
+    * commits what was actually persisted, so a write path that drops
+    * or rewrites rows can never advance the watermark past data that
+    * isn't on disk.
+    *
+    * A Snapshot table with ONE timestamp watermark column answers the
+    * max from the manifest's per-file footer stats — the persisted
+    * footers' own bounds — with no Spark job and no data file opened.
+    * Otherwise a Snapshot table is read under its known schema
+    * (`Versioned.readByName`: no footer-inference job once the
+    * version's schema is cached): only the arg-max file plus the files
+    * without a bound when the stats can restrict the read, else the
+    * whole DV-aware table. Multi-column watermarks coalesce ROW-wise,
+    * which per-column bounds can't decompose. `schema` is the staged
+    * frame's: the write that just landed enforced its column types. */
   private def commitWatermark(lakePath: String, wmCols: Seq[String],
-      table: String, insertIfMissing: Boolean): Unit = {
-    if (wmCols.nonEmpty) {
-      // Snapshot tables with a SINGLE watermark column answer
-      // max(col) from the manifest's per-file stats: only the arg-max
-      // file (plus any stats-less files) is read — O(1 file) instead
-      // of an O(table) column scan per chunk, while still committing
-      // only what is persisted on disk (the stats ARE the persisted
-      // footers' bounds). Multi-column watermarks coalesce ROW-wise,
-      // which per-column bounds can't decompose — those (and
-      // stats-poor tables) fall back to the full re-read.
-      val source = (cfg.lakeFormat match {
-        case graft.sources.LakeFormat.Snapshot if wmCols.size == 1 =>
-          graft.operators.Versioned
-            .maxCandidateFiles(spark, lakePath, wmCols.head)
-            .map(files => spark.read.parquet(files: _*))
-        case _ => None
-      }).getOrElse(LakeReader.read(spark, lakePath, format = cfg.lakeFormat))
+      schema: StructType, table: String, insertIfMissing: Boolean): Unit = {
+    if (wmCols.isEmpty) return
+    val snapshot = cfg.lakeFormat == graft.sources.LakeFormat.Snapshot
+    val single = if (snapshot && wmCols.size == 1) wmCols.headOption else None
+    // `max − INTERVAL lag HOURS` as Spark evaluates it (the days step in
+    // the session zone for TIMESTAMP, in UTC for NTZ), surfaced as
+    // `head()` surfaces it
+    val lag = -cfg.lagHours * 3600L * 1000000L
+    val fromStats = for {
+      c <- single
+      toTs <- schema.find(_.name.equalsIgnoreCase(c)).map(_.dataType).collect {
+        case TimestampType =>
+          val zone = DateTimeUtils.getZoneId(spark.conf.get(
+            org.apache.spark.sql.internal.SQLConf.SESSION_LOCAL_TIMEZONE.key))
+          (m: Long) => DateTimeUtils.toJavaTimestamp(
+            DateTimeUtils.timestampAddDayTime(m, lag, zone))
+        case TimestampNTZType =>
+          (m: Long) => Timestamp.valueOf(DateTimeUtils.microsToLocalDateTime(
+            DateTimeUtils.timestampAddDayTime(m, lag, java.time.ZoneOffset.UTC)))
+      }
+      m <- Versioned.statsMax(spark, lakePath, c)
+    } yield m.map(toTs)
+    val lagged = fromStats.getOrElse {
+      val source =
+        if (snapshot) Versioned.readByName(spark, lakePath,
+          single.flatMap(Versioned.maxCandidateFiles(spark, lakePath, _)))
+        else LakeReader.read(spark, lakePath, format = cfg.lakeFormat)
       val maxRow = source
         .agg(max(coalesce(wmCols.map(col): _*)).as("maxdate"))
         .select(col("maxdate") - expr(s"INTERVAL ${cfg.lagHours} HOURS"))
         .head()
-      if (!maxRow.isNullAt(0)) {
-        // TIMESTAMP columns surface as java.sql.Timestamp, TIMESTAMP_NTZ
-        // (parquet isAdjustedToUTC=false) as java.time.LocalDateTime
-        val ts = maxRow.get(0) match {
-          case t: Timestamp => t
-          case l: java.time.LocalDateTime => Timestamp.valueOf(l)
-          case d: java.sql.Date => new Timestamp(d.getTime)
-          case other => sys.error(s"unexpected watermark type: $other")
-        }
-        watermarks.commit(cfg.systemType, cfg.databaseName, table, ts,
-          insertIfMissing)
-        log.add(s"$table: watermark -> $ts")
-      }
+      // TIMESTAMP columns surface as java.sql.Timestamp, TIMESTAMP_NTZ
+      // (parquet isAdjustedToUTC=false) as java.time.LocalDateTime
+      if (maxRow.isNullAt(0)) None
+      else Some(maxRow.get(0) match {
+        case t: Timestamp => t
+        case l: java.time.LocalDateTime => Timestamp.valueOf(l)
+        case d: java.sql.Date => new Timestamp(d.getTime)
+        case other => sys.error(s"unexpected watermark type: $other")
+      })
+    }
+    lagged.foreach { ts =>
+      watermarks.commit(cfg.systemType, cfg.databaseName, table, ts,
+        insertIfMissing)
+      log.add(s"$table: watermark -> $ts")
     }
   }
 }

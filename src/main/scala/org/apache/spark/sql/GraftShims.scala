@@ -28,6 +28,12 @@ object GraftShims {
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()
 
+  /** `s` with every field nullable at every nesting level
+    * (StructType.asNullable is private[spark]): what parquet schema
+    * inference reads back from files written with `s`. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
   /** The analyzed logical plan of a DataFrame (private[sql] in
     * classic.Dataset), for re-rooting the same computation into a
     * cloned session via [[ofRows]]. */
