@@ -3,59 +3,47 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Tiny sidecar files (flat one-object JSON or a bare value) next to
-  * persisted indexes: the content-addressed IVF codebook and product
-  * books (`_ivf_codebook-<fp>.txt`, `_ivf_pqbooks-<fp>.txt`), the
-  * streaming batch mirrors (`_neardedup_batch`, `_annbatch`). One
-  * read/write/parse implementation so the call sites cannot drift —
-  * and so a TRUNCATED sidecar (a crash between create and write leaves a
-  * zero-byte file) fails with a named, actionable error instead of a
-  * bare MatchError. */
+/** Tiny CONTENT-ADDRESSED sidecar files next to persisted IVF indexes:
+  * the codebook and the product books (`_ivf_codebook-<fp>.txt`,
+  * `_ivf_pqbooks-<fp>.txt`), each named by a fingerprint of its own
+  * bytes. One read/write implementation so the call sites cannot
+  * drift — and so a TRUNCATED sidecar (a crash between create and
+  * write leaves a zero-byte file) is repaired by the next write
+  * instead of failing every later read. */
 private[graft] object Sidecars {
 
-  /** `contentAddressed = true` declares that the file NAME pins the
-    * bytes (e.g. the `_ivf_codebook-<fp>.txt` family, named by a
-    * fingerprint of its own content): if the destination already
-    * exists it is byte-identical by construction, so the write is
-    * SKIPPED outright. This is not just an IO saving — the rewrite
-    * path below goes through `FileContext.rename(OVERWRITE)`, which
-    * Hadoop implements as delete-then-rename on the local FS (and
-    * which is non-atomic on most object stores), so an
-    * identical-bytes rewrite still opens a reader-visible window
-    * where the file does not exist. A retrain storm that keeps
-    * producing the same seed codebook rewrites the same sidecar over
-    * and over; skipping the no-op write closes the window on the
-    * rewrite path (r17 judge finding — it failed ConcurrencySpec's
-    * IVF storm). The CREATION path is guarded too: racing first-time
+  /** Write `content` to `p`, whose NAME pins the bytes: if the
+    * destination already exists it is byte-identical by construction,
+    * so the write is SKIPPED outright. This is not just an IO saving —
+    * an overwrite goes through `FileContext.rename(OVERWRITE)`, which
+    * Hadoop implements as delete-then-rename on the local FS (and which
+    * is non-atomic on most object stores), so an identical-bytes
+    * rewrite would still open a reader-visible window where the file
+    * does not exist. A retrain storm that keeps producing the same seed
+    * codebook rewrites the same sidecar over and over; skipping the
+    * no-op write closes that window (it failed ConcurrencySpec's IVF
+    * storm). The CREATION path is guarded too: racing first-time
     * creators of the same fingerprint both pass the exists() skip, so
     * the rename runs WITHOUT overwrite — the loser gets a
     * FileAlreadyExists refusal (its bytes are identical by
-    * construction) instead of delete-then-renaming the winner's file.
-    * Non-content-addressed rewrites (the batch mirrors, whose content
-    * changes under a fixed name) keep the overwrite rename and are
-    * covered by [[readRetrying]] on the reader side. */
-  def write(spark: SparkSession, p: Path, content: String,
-      contentAddressed: Boolean = false): Unit = {
+    * construction) instead of delete-then-renaming the winner's file. */
+  def write(spark: SparkSession, p: Path, content: String): Unit = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Skip only a NON-EMPTY destination: the write path below never
     // produces a truncated file (temp + rename), so a zero-byte
     // destination is always out-of-band damage — and because the
     // skip-on-exists otherwise trusts the name forever, a truncated
-    // codebook sidecar would never be repaired by any later rewrite
-    // (every probe fails until manual deletion). A damaged destination
-    // falls through to the OVERWRITE rename: the repair re-opens the
-    // rewrite window, but only on a file every reader already fails on.
-    val repairingDamage = contentAddressed && {
+    // sidecar would never be repaired by any later write (every probe
+    // fails until manual deletion). A damaged destination falls
+    // through to the OVERWRITE rename: the repair re-opens the rewrite
+    // window, but only on a file every reader already fails on.
+    val repairingDamage =
       try {
         if (fs.getFileStatus(p).getLen > 0) return
         true
       } catch { case _: java.io.FileNotFoundException => false }
-    }
-    // temp + rename, never an in-place overwrite: the re-seed paths
-    // rewrite a sidecar a concurrent reader may be mid-read, and a
-    // crash mid-write would leave a truncated file that fails every
-    // later read until manually deleted (r15 ADVICE). The rename is
-    // atomic-enough on the Hadoop filesystems we target.
+    // temp + rename, never an in-place write: a crash mid-write would
+    // leave a truncated file under the final name
     val tmp = new Path(p.getParent,
       s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
@@ -64,63 +52,50 @@ private[graft] object Sidecars {
     try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         fs.getUri, fs.getConf)
-      if (contentAddressed && !repairingDamage) {
-        // FIRST creation of a content-addressed file: rename WITHOUT
-        // overwrite. Two writers racing to create the same new
-        // fingerprint both pass the exists() skip above; with
-        // Rename.OVERWRITE the loser would delete-then-rename the
-        // winner's file — reopening the missing-file window on the
-        // creation path. Rename.NONE refuses on an existing
-        // destination instead (the loser's bytes are identical by
-        // construction — drop its temp and return).
-        try fc.rename(tmp, p)
-        catch {
-          // FileAlreadyExistsException on well-behaved filesystems,
-          // but some object-store bindings surface the refusal as a
-          // plain IOException — any failure with the destination
-          // PRESENT means a racing creator won, and its bytes are
-          // identical by construction
-          case e: java.io.IOException =>
-            if (!fs.exists(p)) throw e
-            fs.delete(tmp, false)
-        }
-        return
+      if (repairingDamage)
+        fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      // FIRST creation: rename WITHOUT overwrite. Two writers racing to
+      // create the same new fingerprint both pass the exists() skip
+      // above; with Rename.OVERWRITE the loser would delete-then-rename
+      // the winner's file — reopening the missing-file window on the
+      // creation path. Rename.NONE refuses on an existing destination
+      // instead (the loser's bytes are identical — drop its temp).
+      else try fc.rename(tmp, p)
+      catch {
+        // FileAlreadyExistsException on well-behaved filesystems, but
+        // some object-store bindings surface the refusal as a plain
+        // IOException — any failure with the destination PRESENT means
+        // a racing creator won, and its bytes are identical
+        case e: java.io.IOException =>
+          if (!fs.exists(p)) throw e
+          fs.delete(tmp, false)
       }
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     } catch {
       // ONLY capability errors (no AbstractFileSystem binding / no
-      // atomic-overwrite rename) downgrade to delete+rename — a
-      // TRANSIENT IOException must propagate, because the fallback
-      // deletes the existing sidecar first and a second failure (or a
-      // crash) in that window would leave NO sidecar where stale-but-
-      // valid content previously survived.
+      // atomic-overwrite rename) downgrade to FileSystem.rename — a
+      // TRANSIENT IOException must propagate
       case _: org.apache.hadoop.fs.UnsupportedFileSystemException |
           _: UnsupportedOperationException =>
-        if (contentAddressed && !repairingDamage) {
-          // never delete-then-rename a content-addressed destination:
-          // if it exists (a racing creator won) it is byte-identical —
-          // drop the temp; otherwise a plain rename suffices
-          if (fs.exists(p)) fs.delete(tmp, false)
-          else if (!fs.rename(tmp, p)) {
-            // a racing creator won between the exists probe and the
-            // rename (its bytes are identical by construction) — but
-            // the loser's temp must still be swept, or
-            // .{name}.tmp-<uuid> files leak next to the index on every
-            // filesystem without a FileContext binding
-            require(fs.exists(p), s"could not write sidecar $p")
-            fs.delete(tmp, false)
-          }
-        } else {
+        if (repairingDamage) {
           if (fs.exists(p)) fs.delete(p, false)
           require(fs.rename(tmp, p), s"could not write sidecar $p")
+        } else if (fs.exists(p)) fs.delete(tmp, false)
+        else if (!fs.rename(tmp, p)) {
+          // a racing creator won between the exists probe and the
+          // rename (its bytes are identical) — but the loser's temp
+          // must still be swept, or .{name}.tmp-<uuid> files leak next
+          // to the index on every filesystem without a FileContext
+          // binding
+          require(fs.exists(p), s"could not write sidecar $p")
+          fs.delete(tmp, false)
         }
     }
   }
 
   /** None iff the file does not exist; an existing file is read fully.
     * The exists-then-open pair is a TOCTOU against a concurrent
-    * non-content-addressed rewrite (delete-then-rename can land
-    * between the two calls), so a FileNotFound on the open ALSO
+    * damage repair (its overwrite rename is delete-then-rename, which
+    * can land between the two calls), so a FileNotFound on the open ALSO
     * returns None — otherwise [[readRetrying]] would crash in the
     * exact transient window it exists to absorb. */
   def read(spark: SparkSession, p: Path): Option[String] = {
@@ -163,26 +138,5 @@ private[graft] object Sidecars {
       left -= 1
     }
     got
-  }
-
-  /** Parse `{"k":v,...}` (values contain no commas/colons — ours are
-    * numbers and plain path strings written by [[write]]). A corrupt
-    * or truncated payload names the file and the remedy. */
-  def parseFlatJson(raw: String, p: Path): Map[String, String] = {
-    val body = raw.trim.stripPrefix("{").stripSuffix("}")
-    val pairs = body.split(",").filter(_.nonEmpty).map { kv =>
-      kv.split(":", 2) match {
-        case Array(k, v) =>
-          k.trim.replaceAll("\"", "") -> v.trim.replaceAll("\"", "")
-        case _ => throw new IllegalStateException(
-          s"corrupt sidecar $p: ${raw.take(80)} — a crash may have " +
-            "truncated it; delete the file (or rebuild the index) and " +
-            "re-run")
-      }
-    }
-    if (pairs.isEmpty) throw new IllegalStateException(
-      s"corrupt sidecar $p: empty — a crash may have truncated it; " +
-        "delete the file (or rebuild the index) and re-run")
-    pairs.toMap
   }
 }

@@ -538,19 +538,14 @@ object Similarity extends org.apache.spark.internal.Logging {
   /** Write a build's sidecars — the codebook and, for a product code,
     * its books — BEFORE the commit that references them: a crash in
     * between leaves an orphan file, never a referenced-but-missing
-    * sidecar. Both are content-addressed (the name carries the
-    * fingerprint of the bytes, so when the file already exists it is
-    * byte-identical by construction and the write is SKIPPED —
-    * `Sidecars.write`'s rename-overwrite is delete-then-rename on
-    * local FS and non-atomic on object stores, so even an
-    * identical-bytes rewrite would open a reader-visible missing-file
-    * window; a retrain storm converging on the same seed codebook hit
-    * exactly that in the r17 IVF-storm run). */
+    * sidecar. Both are content-addressed: the name carries the
+    * fingerprint of the bytes, so [[Sidecars.write]] skips a file that
+    * already exists. */
   private def writeSidecars(spark: org.apache.spark.sql.SparkSession,
       path: String, b: IvfBuild): Unit = {
     def put(name: String, content: String): Unit =
       Sidecars.write(spark, new org.apache.hadoop.fs.Path(path, name),
-        content, contentAddressed = true)
+        content)
     put(codebookFileOf(b.fp), encodeCodebook(b.codebook))
     b.code match {
       case p: IvfCode.Product => put(p.file, ProductQuant.encodeBooks(p.books))

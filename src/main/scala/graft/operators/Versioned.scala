@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField,
+  StructType}
 import scala.collection.mutable
 
 /** Versioned snapshot tables over parquet — manifest-based commits with
@@ -144,6 +145,23 @@ object Versioned extends org.apache.spark.internal.Logging {
     * un-optimized. */
   private[graft] val BucketKey = "bucket"
 
+  /** Prefix of the STREAMING TRANSACTION LEDGER (Delta's
+    * SetTransaction): a meta key `txn.<appId>=<batchId>` records that
+    * writer `appId` committed batch `batchId`. [[commitManifest]]
+    * checks it under the commit lock against the base the commit lands
+    * on — a batch the base already records is refused with
+    * [[ReplayedBatch]] — and carries every entry the commit does not
+    * name onto the new version, whatever the commit (append, overwrite,
+    * DML, compaction, RESTORE, DDL). The latest manifest therefore
+    * always holds the whole ledger and VACUUM can never erase it;
+    * [[txnVersion]] reads it with one header read. */
+  private[graft] val TxnPrefix = "txn."
+
+  private[graft] def txnKey(appId: String): String = TxnPrefix + appId
+
+  private def txnOf(meta: Map[String, String]): Map[String, String] =
+    meta.filter(_._1.startsWith(TxnPrefix))
+
   /** Commit time of a version: the manifest's embedded commit_ts_ms
     * when present (authoritative — survives copies and clock skew),
     * else the manifest file's mtime (legacy manifests). */
@@ -162,6 +180,17 @@ object Versioned extends org.apache.spark.internal.Logging {
     * SaveMode.ErrorIfExists/Ignore would otherwise have). */
   final class CreateConflict(table: String) extends IllegalStateException(
     s"snapshot table $table already exists")
+
+  /** Thrown by a commit naming ledger entry `txn.<appId>=<batch>` when
+    * the base it lands on already records `appId` at `landed >= batch`
+    * (see [[TxnPrefix]]) — a second delivery of a batch that already
+    * committed. Raised INSIDE the commit lock, so of two deliveries of
+    * one batch exactly one lands; the refused attempt's staged segment
+    * is deleted and nothing is retried. */
+  final class ReplayedBatch(table: String, val appId: String,
+      val batch: Long, val landed: Long) extends IllegalStateException(
+    s"batch $batch of $appId is already committed to $table " +
+      s"(ledger at $landed)")
 
   /** Thrown when a rewrite-shaped operation (OPTIMIZE/compactSmall,
     * MERGE/DML rewrite, DV write) exhausts its CAS attempts under a
@@ -310,7 +339,6 @@ object Versioned extends org.apache.spark.internal.Logging {
       .filter(_ => !meta.contains(Invariants.MetaKey))
       .map(metaKeys(spark, table, _, Invariants.MetaKey))
       .getOrElse(Map.empty)
-    commitTestHook()
     val staged = stage(spark, fs, root, physDf, mapping,
       Invariants.decode(meta ++ invMeta), s"$mode commit", spec)
     val committed = transact(spark, fs, root, table, staged,
@@ -553,7 +581,8 @@ object Versioned extends org.apache.spark.internal.Logging {
     * applied to the lines of the base it lands on (None: the staged
     * lines alone — an overwrite). `policy` resolves conflicts. Returns
     * the committed version, or None when the policy abandons; every
-    * abandoned or refused attempt deletes the staged segment first. */
+    * abandoned or refused attempt (a [[ReplayedBatch]] included)
+    * deletes the staged segment first. */
   private def transact(spark: SparkSession, fs: FileSystem, root: Path,
       table: String, staged: Staged, meta: Map[String, String],
       policy: OnConflict,
@@ -616,6 +645,7 @@ object Versioned extends org.apache.spark.internal.Logging {
         if (landed != expected) throw new RewriteConflict
         compose(linesOf(landed))
     }
+    commitTestHook() // the staged → commit window
     var attempts = 0
     while (true) {
       attempts += 1
@@ -660,7 +690,8 @@ object Versioned extends org.apache.spark.internal.Logging {
                   scala.util.Random.nextInt(10))
             case None => abandon(); return None
           }
-        case e @ (_: CreateConflict | _: BucketLayoutChanged) =>
+        case e @ (_: CreateConflict | _: BucketLayoutChanged |
+            _: ReplayedBatch) =>
           abandon(); throw e
       }
     }
@@ -1166,7 +1197,9 @@ object Versioned extends org.apache.spark.internal.Logging {
     * `validatedInv` (the rules the staged rows were checked against),
     * an attempt whose merged invariant set demands rules beyond it
     * throws [[InvariantsChanged]] (outside any segment write — staged
-    * data stays reusable) instead of committing unvalidated rows. */
+    * data stays reusable) instead of committing unvalidated rows.
+    * Every attempt checks and carries the [[TxnPrefix]] ledger off the
+    * landed base's headers, the same read the writer gate takes. */
   private def commitManifest(fs: FileSystem, root: Path,
       meta: Map[String, String],
       filesFor: Option[Long] => Seq[String],
@@ -1179,15 +1212,24 @@ object Versioned extends org.apache.spark.internal.Logging {
     var committed = -1L
     while (committed < 0) {
       val base = latestVersion(fs, root)
+      val baseHeaders = base.map(b => manifestHeaders(fs, root, b))
       // the writer gate runs FIRST: a base stamped by a newer writer
       // declares duties this build cannot honor — refuse to commit
-      base.foreach(b => checkWriter(root, b, manifestHeaders(fs, root, b)))
+      for (b <- base; h <- baseHeaders) checkWriter(root, b, h)
+      // the transaction ledger: refuse a batch the landed base already
+      // records, then carry every entry this commit does not name
+      val ledger = baseHeaders.fold(Map.empty[String, String])(h =>
+        txnOf(metaOf(h)))
+      for ((k, b) <- txnOf(meta); batch <- b.toLongOption;
+           landed <- ledger.get(k).flatMap(_.toLongOption) if landed >= batch)
+        throw new ReplayedBatch(root.toString, k.stripPrefix(TxnPrefix),
+          batch, landed)
       val target = base.map(_ + 1).getOrElse(0L)
       val newLines = filesFor(base)
-      val effMeta =
+      val effMeta = ledger ++ (
         if (inheritKeys.isEmpty || base == contractBase) meta
         else mergedContractMeta(fs, root, meta, contractBase, base,
-          inheritKeys)
+          inheritKeys))
       validatedInv.foreach { validated =>
         if (effMeta.get(Invariants.MetaKey) != meta.get(Invariants.MetaKey) &&
             !Invariants.decode(effMeta).forall(validated.contains))
@@ -1685,9 +1727,9 @@ object Versioned extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Test-only seam: invoked by [[commit]]/[[commitBucketed]] between
-    * schema enforcement and staging (and again between an invariant
-    * re-validation and the retry), and by [[commitMetadataOnly]]
+  /** Test-only seam: invoked by [[transact]] between staging and the
+    * first commit attempt of every staged-row commit (and again between
+    * an invariant re-validation and the retry), and by [[commitMetadataOnly]]
     * between its caller's validation and the commit — the windows a
     * concurrent commit lands in. Production value is a no-op. */
   private[graft] var commitTestHook: () => Unit = () => ()
@@ -2632,25 +2674,21 @@ object Versioned extends org.apache.spark.internal.Logging {
     * (a table named its column `file`) would be mistaken for a table
     * predicate and could wrongly prune every segment — a silent no-op
     * DML. Double-underscore-prefixed names are rejected nowhere but
-    * used by no real schema; sidecars written before the rename (plain
-    * `file`/`idx`) are still readable via [[readDvEntries]]. */
+    * used by no real schema. */
   private[graft] val DvFileCol = "__graft_file"
   private[graft] val DvIdxCol = "__graft_idx"
 
-  /** Union of DV sidecar dirs under the normalized reserved schema,
-    * accepting both vintages (old sidecars named the columns
-    * `file`/`idx`). One schema probe per dir — dirs are few (stacked
-    * deletes), entries track the deleted rows. */
+  /** The on-disk schema of a DV sidecar, as [[mergeOnRead]] writes it:
+    * the file's table-relative path and its parquet row index. */
+  private val DvSchema = StructType(Seq(
+    StructField(DvFileCol, StringType), StructField(DvIdxCol, LongType)))
+
+  /** Union of DV sidecar dirs, read in one scan under the known
+    * [[DvSchema]] — no footer-inference job. */
   private def readDvEntries(spark: SparkSession, root: Path,
-      dirs: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    dirs.map { d =>
-      val df = spark.read.parquet(new Path(root, d).toString)
-      if (df.columns.contains(DvFileCol))
-        df.select(col(DvFileCol), col(DvIdxCol))
-      else df.select(col("file").as(DvFileCol), col("idx").as(DvIdxCol))
-    }.reduce(_.unionAll(_))
-  }
+      dirs: Seq[String]): DataFrame =
+    spark.read.schema(DvSchema)
+      .parquet(dirs.map(d => new Path(root, d).toString): _*)
 
   /** Absolute, scheme-stripped form of a table-relative path — the
     * exact form executor-side `_metadata.file_path` normalizes to via
@@ -3272,13 +3310,25 @@ object Versioned extends org.apache.spark.internal.Logging {
     readMetaRaw(fs, root, v)
   }
 
+  /** The last batch writer `appId` committed to `table` — its
+    * [[TxnPrefix]] ledger entry in the latest version (resolved through
+    * the `_latest` pointer, never a LIST), one cached header read.
+    * None when the table has no version or `appId` never committed. */
+  def txnVersion(spark: SparkSession, table: String,
+      appId: String): Option[Long] = {
+    val root = new Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    latestVersion(fs, root).flatMap(v =>
+      readMetaRaw(fs, root, v).get(txnKey(appId))).flatMap(_.toLongOption)
+  }
+
   /** Pin the table's LATEST version, then scan manifest meta
     * newest-first from it for the first commit where `select` yields a
-    * value — the shared "my descriptor/ledger rides the newest commit
-    * that carries it; FOREIGN commits (OPTIMIZE, VACUUM checkpoint
+    * value — the shared "my descriptor rides the newest commit that
+    * carries it; FOREIGN commits (OPTIMIZE, VACUUM checkpoint
     * rewrites, other writers' appends) carry none and are skipped
-    * over" read, used by the persisted-index descriptors (LSH plane
-    * family, IVF codebook) and the streaming batch ledgers. Returns
+    * over" read of the persisted-index descriptors (LSH plane family,
+    * IVF codebook). Returns
     * (the pinned latest version — the snapshot a reader must scan, NOT
     * necessarily the version that carried the value — and the value);
     * None when the table has no versions or none carries it. */
@@ -3297,13 +3347,16 @@ object Versioned extends org.apache.spark.internal.Logging {
     * manifest cache makes it one map lookup on the hot path). */
   private def readMetaRaw(fs: FileSystem, root: Path, v: Long)
       : Map[String, String] =
-    manifestHeaders(fs, root, v)
-      .flatMap { l =>
-        l.drop(1).split("=", 2) match {
-          case Array(k, v2) if !SystemKeys.contains(k) => Some(k -> v2)
-          case _ => None
-        }
-      }.toMap
+    metaOf(manifestHeaders(fs, root, v))
+
+  /** The user meta of a manifest's `#k=v` header lines. */
+  private def metaOf(headers: Seq[String]): Map[String, String] =
+    headers.flatMap { l =>
+      l.drop(1).split("=", 2) match {
+        case Array(k, v2) if !SystemKeys.contains(k) => Some(k -> v2)
+        case _ => None
+      }
+    }.toMap
 
   /** Count of PHYSICAL manifest-file opens — test hook proving the
     * cache bounds read-planning IO (ManifestLogSpec). */

@@ -831,7 +831,7 @@ object StreamingQueries {
     // micro-batch is one CAS-guarded append assigned under the index's
     // COMMITTED codebook (seeded from the v0 half before the stream) —
     // probes bucket-prune on list_id across every batch's rows and the
-    // index grows at chunk cost. Exactly-once rides the annbatch
+    // index grows at chunk cost. Exactly-once rides the txn.anningest
     // commit-meta ledger (st17's discipline — a snapshot append
     // replayed blindly would duplicate vectors), and retrain handoff
     // is by construction: batches and the final probe both resolve the

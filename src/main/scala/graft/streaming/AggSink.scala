@@ -13,12 +13,19 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *
   * Unlike [[UpsertSink]], an aggregate fold is NOT idempotent: replaying
   * a micro-batch after a crash would double-count it. Exactly-once here
-  * comes from committing each fold as a [[Versioned]] snapshot whose
-  * manifest carries the folded `batchId` as metadata — manifest rename
-  * is the single atomic commit point, so the data and the batch marker
-  * can never disagree. A replayed batch sees `batchId <=` the latest
-  * version's marker and skips; a batch that crashed before the rename
-  * left only an orphaned (invisible) segment dir, swept by vacuum.
+  * comes from the commit itself: each fold's snapshot carries the
+  * ledger entry `txn.<appId>=<batchId>` ([[Versioned.TxnPrefix]]) in
+  * the same manifest rename as its rows, and every later commit carries
+  * it forward. The appId is the streaming query's checkpoint-stable id,
+  * or the fixed name `graft-agg` when [[foldBatch]] is driven outside a
+  * stream. A replayed batch is skipped by one header read of the
+  * latest version; a second delivery racing the first is refused
+  * inside the commit lock ([[Versioned.ReplayedBatch]]). A batch that
+  * crashed before the rename left only an orphaned (invisible) segment
+  * dir, swept by vacuum.
+  *
+  * Lost checkpoint: a restart without the checkpoint is a NEW query
+  * (new queryId, batch ids from 0) and folds its batches as fresh.
   *
   * Each fold re-aggregates ONLY the groups present in the batch
   * (anti-join keeps untouched groups' rows as-is) and commits a new
@@ -43,78 +50,57 @@ object AggSink {
       .start()
 
   /** Fold one micro-batch (exposed for replay testing). No-op when the
-    * table already carries this query's marker for `batchId`.
+    * ledger already records `batchId` for this query.
     *
-    * Three disciplines shared with the sibling sinks:
-    *  - replay dedup walks the marker-bearing HISTORY (the
-    *    [[LakeSink.lastCommitted]] walk, paired by queryId) — reading
-    *    only the latest version's meta would let any interleaved
-    *    non-fold commit (OPTIMIZE, DML, RESTORE) hide the marker and
-    *    double-count the replay;
-    *  - group matching is NULL-SAFE (`<=>`, like the MoR upsert
-    *    sink's matched-row mark) — plain equality never matches a
-    *    NULL-keyed group, which would then accumulate one duplicate
-    *    row per batch with unmerged counts;
-    *  - the commit is a CAS ([[Versioned.commitIf]] on the fold's
-    *    base): an unconditional overwrite would silently erase any
-    *    commit that landed between the fold's read and its write —
-    *    on conflict the fold recomputes from the new latest. */
+    * Group matching is NULL-SAFE (`<=>`, like the MoR upsert sink's
+    * matched-row mark) — plain equality never matches a NULL-keyed
+    * group, which would then accumulate one duplicate row per batch
+    * with unmerged counts. The first fold creates the table; every
+    * later one is a CAS ([[Versioned.commitIf]] on the fold's base)
+    * inside [[Versioned.raceLoop]]: an unconditional overwrite would
+    * silently erase any commit that landed between the fold's read and
+    * its write, so on conflict the fold recomputes from the new latest,
+    * at most 5 times. */
   def foldBatch(batch: DataFrame, table: String, keys: Seq[String],
       countAs: String, sums: Seq[(String, String)], batchId: Long): Unit = {
     val spark = batch.sparkSession
-    val queryId = Option(spark.sparkContext.getLocalProperty(
+    val appId = Option(spark.sparkContext.getLocalProperty(
       org.apache.spark.sql.execution.streaming.runtime
-        .StreamExecution.QUERY_ID_KEY))
-    var done = false
-    while (!done) {
-      val versions = Versioned.versions(spark, table)
-      val latest = versions.lastOption
-      // the LakeSink walk, with no-queryId (test-driven) calls
-      // matching ANY query's marker — the pre-walk behavior. A marker
-      // carrying batchId but NO queryId key is a legacy (pre-stamp)
-      // fold marker: it must match a live query too, else a checkpoint
-      // replay onto a pre-upgrade table sees lastFolded = -1 and
-      // re-folds an already-committed batch (double count).
-      val lastFolded = versions.reverseIterator
-        .map(v => Versioned.readMeta(spark, table, v))
-        .collectFirst {
-          case m if m.contains("batchId") &&
-              (queryId.isEmpty || !m.contains("queryId") ||
-                m.get("queryId") == queryId) =>
-            m("batchId").toLong
-        }.getOrElse(-1L)
-      if (batchId <= lastFolded) return // checkpoint replay: folded
-      val batchAgg = batch.groupBy(keys.map(col): _*)
-        .agg(count(lit(1)).as(countAs),
-          sums.map { case (src, al) => sum(col(src)).as(al) }: _*)
-      val snapshot = latest match {
-        case None => batchAgg
-        case Some(v) =>
-          val existing = Versioned.read(spark, table, Some(v))
-          val bk = batchAgg.select(keys.map(col): _*)
-          def touched(l: DataFrame): org.apache.spark.sql.Column =
-            keys.map(k => l(k) <=> bk(k)).reduce(_ && _)
-          val untouched = existing.join(bk, touched(existing), "left_anti")
-          val combined = existing
-            .join(bk, touched(existing), "left_semi")
-            .unionByName(batchAgg)
-            .groupBy(keys.map(col): _*)
-            .agg(sum(col(countAs)).cast("long").as(countAs),
-              sums.map { case (_, al) =>
-                sum(col(al)).cast(existing.schema(al).dataType).as(al)
-              }: _*)
-          untouched.unionByName(combined)
-      }
-      val meta = Map("batchId" -> batchId.toString) ++
-        queryId.map("queryId" -> _)
-      done = latest match {
-        case Some(v) =>
-          Versioned.commitIf(snapshot, table, "overwrite", meta,
-            expectedBase = v).isDefined
-        case None =>
-          try { Versioned.commit(snapshot, table, "create", meta); true }
-          catch { case _: Versioned.CreateConflict => false }
-      }
+        .StreamExecution.QUERY_ID_KEY)).getOrElse("graft-agg")
+    val applied = Versioned.txnVersion(spark, table, appId)
+    if (applied.exists(_ >= batchId)) return // checkpoint replay: folded
+    val meta = Map(Versioned.txnKey(appId) -> batchId.toString)
+    val batchAgg = batch.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as(countAs),
+        sums.map { case (src, al) => sum(col(src)).as(al) }: _*)
+    def foldInto(v: Long): DataFrame = {
+      val existing = Versioned.read(spark, table, Some(v))
+      val bk = batchAgg.select(keys.map(col): _*)
+      def touched(l: DataFrame): org.apache.spark.sql.Column =
+        keys.map(k => l(k) <=> bk(k)).reduce(_ && _)
+      val untouched = existing.join(bk, touched(existing), "left_anti")
+      val combined = existing
+        .join(bk, touched(existing), "left_semi")
+        .unionByName(batchAgg)
+        .groupBy(keys.map(col): _*)
+        .agg(sum(col(countAs)).cast("long").as(countAs),
+          sums.map { case (_, al) =>
+            sum(col(al)).cast(existing.schema(al).dataType).as(al)
+          }: _*)
+      untouched.unionByName(combined)
     }
+    val root = new org.apache.hadoop.fs.Path(table)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      // a ledger entry proves the table exists
+      val created = applied.isEmpty &&
+        Versioned.versions(spark, table).isEmpty && (
+        try { Versioned.commit(batchAgg, table, "create", meta); true }
+        catch { case _: Versioned.CreateConflict => false })
+      if (!created)
+        Versioned.raceLoop(fs, root, table, s"fold of batch $batchId " +
+          s"into $table")(v => Versioned.commitIf(foldInto(v), table,
+            "overwrite", meta, expectedBase = v))
+    } catch { case _: Versioned.ReplayedBatch => () } // folded meanwhile
   }
 }

@@ -14,14 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * index grows at chunk cost.
   *
   * Exactly-once across restarts WITHOUT trusting Spark's checkpoint
-  * (the NearDedup discipline): each append carries `annbatch=<id>` in
-  * its manifest meta — committed atomically WITH the rows — and a
-  * replayed batch (checkpoint lost after the sink ran) finds its id
-  * recorded and skips, where a snapshot append replayed blindly would
-  * DUPLICATE the batch's vectors — the same ledger st17 already
-  * proved. A root-level `_annbatch` mirror
-  * backstops the manifest against vacuum erasure, exactly like
-  * NearDedup's (see [[BatchMirror]]).
+  * (the NearDedup discipline): each append carries `txn.anningest=<id>`
+  * ([[Versioned.TxnPrefix]], appId [[AppId]]) in its manifest meta —
+  * committed atomically WITH the rows — and every later commit to the
+  * index (retrains, rebuilds, compactions, foreign appends) carries it
+  * forward, so VACUUM cannot erase it. A replayed batch (checkpoint
+  * lost after the sink ran) finds its id recorded with one header read
+  * and skips, where a snapshot append replayed blindly would DUPLICATE
+  * the batch's vectors; a second delivery racing the first is refused
+  * inside the commit lock ([[Versioned.ReplayedBatch]]). Lost
+  * checkpoint: batch ids restart at 0, and every id up to the old
+  * maximum is skipped as a replay.
   *
   * Retrain handoff is BY CONSTRUCTION: batches assign under the
   * codebook resolved from the index's own latest commit, and the
@@ -68,29 +71,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object AnnIngest extends org.apache.spark.internal.Logging {
 
-  /** Manifest meta key carrying the last applied foreachBatch id. */
-  val BatchKey = "annbatch"
-
-  private def mirrorFile(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_annbatch")
-
-  /** Highest batch id recorded in the index's commit ledger (manifest
-    * meta, newest-first — foreign commits without the key are skipped
-    * over) or its vacuum-proof mirror, whichever is higher. None when
-    * the stream has never committed. */
-  def lastAppliedBatch(spark: SparkSession, path: String): Option[Long] = {
-    val fromMeta = Versioned.latestMeta(spark, path)(
-      _.get(BatchKey).flatMap(s => scala.util.Try(s.toLong).toOption))
-      .map(_._2)
-    val fromFile = BatchMirror.read(spark, mirrorFile(path), path)
-    (fromMeta ++ fromFile).maxOption
-  }
+  /** The sink's ledger name in the index's commits. */
+  val AppId = "anningest"
 
   /** Refuse a plain-dir layout before the first commit lands — a
     * snapshot committed over it would shadow every vector in it with
-    * no write-time error. Runs per micro-batch (one exists +
-    * listing); it short-circuits on the commit log's presence, so the
-    * listing only happens while the dir is still uncommitted. */
+    * no write-time error. Runs per micro-batch until the sink's first
+    * ledgered commit (two exists); it short-circuits on the commit
+    * log's presence, so the listing only happens while the dir is
+    * still uncommitted. */
   private def requireSnapshotOrEmpty(spark: SparkSession,
       path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -215,7 +204,12 @@ object AnnIngest extends org.apache.spark.internal.Logging {
         None): BatchOutcome = {
     val spark = batch.sparkSession
     requirePolicies(autoRetrain, pqId, autoRebuild, productBooks)
-    requireSnapshotOrEmpty(spark, path)
+    val replayed = BatchOutcome(batchId, -1, 0.0,
+      retrainRecommended = false, replayed = true)
+    val applied = Versioned.txnVersion(spark, path, AppId)
+    if (applied.exists(_ >= batchId)) return replayed
+    // a ledger entry proves the path is a snapshot table
+    if (applied.isEmpty) requireSnapshotOrEmpty(spark, path)
     // ONE descriptor resolution serves the append AND the post-append
     // policies (nlist default, AutoRebuild's books shape): a raced
     // rebuild keeps the scheme and the append re-pins internally, so
@@ -226,22 +220,12 @@ object AnnIngest extends org.apache.spark.internal.Logging {
         pqId, productBooks)
       Similarity.requireIvfState(spark, path, "append")
     }
-    val applied = lastAppliedBatch(spark, path)
-    if (applied.exists(_ >= batchId)) {
-      // re-converge a lagging mirror on the skip path too (a crash
-      // between the commit and the mirror write) — monotone rewrite
-      applied.foreach(a => BatchMirror.write(spark, mirrorFile(path),
-        path, a))
-      return BatchOutcome(batchId, -1, 0.0, retrainRecommended = false,
-        replayed = true)
-    }
     // the append follows the INDEX's resolved code (not the seed
     // arguments): the committed descriptor is the single source of
     // layout truth
-    val app = Similarity.appendStreamed(batch, embedding, pqId, path, state,
-      Map(BatchKey -> batchId.toString))
-    // after the commit: the vacuum-proof mirror (see lastAppliedBatch)
-    BatchMirror.write(spark, mirrorFile(path), path, batchId)
+    val app = try Similarity.appendStreamed(batch, embedding, pqId, path,
+      state, Map(Versioned.txnKey(AppId) -> batchId.toString))
+    catch { case _: Versioned.ReplayedBatch => return replayed }
     // the drift response: each policy only chooses the rebuild call;
     // nlist = 0 keeps the current cell count
     def nlistOf(declared: Int): Int =
@@ -293,8 +277,8 @@ object AnnIngest extends org.apache.spark.internal.Logging {
     }
     // segment hygiene LAST: a retrain just rewrote everything (nothing
     // small left), and the fold must see this batch's segments. A
-    // compaction here is a foreign commit to the ledger/descriptor
-    // scans — see [[AutoCompact]] for why that composes.
+    // compaction here is a foreign commit: it carries the ledger and
+    // the descriptor scan skips it — see [[AutoCompact]].
     val compacted = !retrained &&
       autoCompact.exists(_.maybeCompact(spark, path).isDefined)
     BatchOutcome(batchId, app.appended, app.meanSim,

@@ -18,11 +18,11 @@ import org.apache.spark.sql.SparkSession
   * bytes, never the index.
   *
   * The compaction commit is FOREIGN to the sinks' protocols by
-  * design and safe by construction: the replay ledger
-  * (`annbatch`/`neardedup_batch`) and the index descriptors (IVF
-  * codebook/fingerprint/baseline, LSH plane family, band layout) are
-  * resolved by newest-first meta scans that skip commits without
-  * their key, and `compactSmall` re-buckets under the DECLARED spec,
+  * design and safe by construction: it carries the replay ledger
+  * (`txn.*`, see [[Versioned.TxnPrefix]]) forward like every commit,
+  * the index descriptors (IVF codebook/fingerprint/baseline, LSH plane
+  * family) are resolved by newest-first meta scans that skip commits
+  * without their key, and `compactSmall` re-buckets under the DECLARED spec,
   * so probes bucket-prune across the folded segments exactly as
   * before (spec-pinned by the r16 maintenance-composition case; the
   * policy only automates the trigger). Racing appenders are handled

@@ -21,25 +21,24 @@ import org.apache.spark.sql.streaming.OutputMode
   *     .start()
   * }}}
   *
-  * Exactly-once without an idempotent payload: the committed manifest
-  * carries the (queryId, batchId) PAIR as metadata — one rename
-  * commits data and marker atomically (the AggSink discipline), so a
-  * replayed batch after a crash sees `batchId <=` this query's latest
-  * marker and skips, and a batch that crashed pre-rename left only an
-  * invisible segment dir for vacuum to sweep. The marker lookup walks
-  * the version history backward PAST commits that aren't this query's
-  * (batch appends, DML, another query's batches) to the newest marker
-  * carrying the same queryId — the same txnAppId/txnVersion discipline
-  * Delta's sink uses, and what makes the guarantee survive interleaved
-  * writers. Dedup on the pair rather than a bare batchId matters
-  * twice over: a FRESH query (new checkpoint) restarting at batchId 0
-  * against a table with old markers must not silently skip its first
-  * batches, and an interleaved non-sink commit must not erase the
-  * marker and let a replay commit twice. queryId is the streaming
-  * query's checkpoint-stable id (read from the spark-local property
-  * the stream execution sets), so the guarantee spans restarts.
-  * Downstream consumers see exactly one version per folded batch, in
-  * order, with the offset provenance readable via `DESCRIBE HISTORY`.
+  * Exactly-once without an idempotent payload: each commit carries the
+  * ledger entry `txn.<appId>=<batchId>` ([[Versioned.TxnPrefix]]),
+  * committed in the same manifest rename as the batch's rows. The
+  * appId is the streaming query's checkpoint-stable id (read from the
+  * spark-local property the stream execution sets), or the fixed name
+  * `graft-lake` when `addBatch` is driven outside a stream. Every
+  * commit to the table carries the ledger forward, so one header read
+  * of the latest version answers "did this query commit this batch?"
+  * however many other writers interleaved, and VACUUM cannot erase
+  * the answer. A replayed batch is skipped by that read; a second
+  * delivery racing the first is refused inside the commit lock
+  * ([[Versioned.ReplayedBatch]]) and its staged segment deleted, so a
+  * batch lands once. Downstream consumers see exactly one version per
+  * batch, in order, with the ledger readable via `DESCRIBE HISTORY`.
+  *
+  * Lost checkpoint: a restart without the checkpoint is a NEW query
+  * (new queryId, batch ids from 0) and commits its batches as fresh —
+  * the old query's ledger entry never swallows them.
   */
 class LakeSinkProvider extends StreamSinkProvider with DataSourceRegister {
 
@@ -76,32 +75,6 @@ class LakeSinkProvider extends StreamSinkProvider with DataSourceRegister {
   }
 }
 
-object LakeSink {
-  /** Newest committed batchId for `queryId` (−1 if none), plus the
-    * number of manifests the backward walk actually opened. The walk
-    * stops at the FIRST marker belonging to this query, so in
-    * steady-state (this sink is the only writer) it opens exactly one
-    * manifest per batch; interleaved non-sink commits bound it by the
-    * interleave depth since this query's last commit, never by table
-    * history — except a fresh query's very first batch on a table with
-    * no marker of its own, which must prove the negative once.
-    * Exposed for the bounded-scan assertion in ChangeFeedSourceSpec. */
-  private[streaming] def lastCommitted(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      queryId: Option[String]): (Long, Int) = {
-    var scanned = 0
-    val last = Versioned.versions(spark, table).reverseIterator
-      .map { v => scanned += 1; Versioned.readMeta(spark, table, v) }
-      .collectFirst {
-        // newest marker of THIS query, skipping interleaved non-sink
-        // commits and other queries' markers
-        case m if m.contains("batchId") && m.get("queryId") == queryId =>
-          m("batchId").toLong
-      }.getOrElse(-1L)
-    (last, scanned)
-  }
-}
-
 class LakeSink(table: String, mode: String,
     bucket: Option[(String, Int)] = None) extends Sink with Logging {
 
@@ -109,31 +82,23 @@ class LakeSink(table: String, mode: String,
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val spark = data.sparkSession
-    // checkpoint-stable query identity; set by MicroBatchExecution on
-    // the thread running addBatch. Absent only when addBatch is driven
-    // outside a streaming query (tests) — then dedup keys on the
-    // marker-bearing history alone, preserving the old behavior.
-    val queryId = Option(spark.sparkContext.getLocalProperty(
+    val appId = Option(spark.sparkContext.getLocalProperty(
       org.apache.spark.sql.execution.streaming.runtime
-        .StreamExecution.QUERY_ID_KEY))
-    val (lastCommitted, _) =
-      LakeSink.lastCommitted(spark, table, queryId)
-    if (batchId <= lastCommitted) {
-      logInfo(s"skipping replayed batch $batchId for $table " +
-        s"(queryId=$queryId latest committed batchId=$lastCommitted)")
-      return
-    }
+        .StreamExecution.QUERY_ID_KEY)).getOrElse("graft-lake")
+    def skip(): Unit =
+      logInfo(s"skipping replayed batch $batchId for $table ($appId)")
+    if (Versioned.txnVersion(spark, table, appId).exists(_ >= batchId))
+      return skip()
     // the DataFrame handed to a v1 sink rides the micro-batch's
     // IncrementalExecution — new actions on it (like a parquet write)
     // must go through a re-wrapped batch frame over the same rows
     val batch = org.apache.spark.sql.GraftShims.unstream(data)
-    val meta = Map("batchId" -> batchId.toString) ++
-      queryId.map("queryId" -> _)
-    bucket match {
+    val meta = Map(Versioned.txnKey(appId) -> batchId.toString)
+    try bucket match {
       case Some((c, n)) =>
         Versioned.commitBucketed(batch, table, c, n, mode, meta)
       case None => Versioned.commit(batch, table, mode, meta)
-    }
+    } catch { case _: Versioned.ReplayedBatch => skip() }
     ()
   }
 }

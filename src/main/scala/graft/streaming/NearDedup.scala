@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.{Dedup, Versioned}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Streaming NEAR-dedup against the persisted MinHash band index —
@@ -32,16 +32,21 @@ import org.apache.spark.sql.functions._
   *
   * Exactly-once across restarts WITHOUT relying on Spark committing
   * the checkpoint before side effects land: the index commit itself is
-  * the ledger. Each append carries `neardedup_batch=<id>` in its
-  * manifest meta; a replayed batch (checkpoint lost after the sink ran)
-  * finds its id already recorded and skips — re-running the probe
-  * after the batch's own bands were appended would otherwise flag the
-  * whole batch as `dup_of_corpus` and overwrite the survivor dir with
-  * an empty one. Side-effect ORDER makes the ledger sufficient:
-  * flags/survivors (overwrite, idempotent) land BEFORE the index
-  * append, so a crash in between replays the whole batch (same probe
-  * result — the index is unchanged), and a crash after the append
-  * skips everything (the outputs are already complete).
+  * the ledger. Each append carries `txn.neardedup=<id>`
+  * ([[Versioned.TxnPrefix]], appId [[AppId]]) in its manifest meta,
+  * and every later commit to the index — chunk appends, rebuckets,
+  * OPTIMIZE — carries it forward, so VACUUM cannot erase it. A
+  * replayed batch (checkpoint lost after the sink ran) finds its id
+  * already recorded with one header read and skips — re-running the
+  * probe after the batch's own bands were appended would otherwise
+  * flag the whole batch as `dup_of_corpus` and overwrite the survivor
+  * dir with an empty one; a second delivery racing the first is
+  * refused inside the commit lock ([[Versioned.ReplayedBatch]]).
+  * Side-effect ORDER makes the ledger sufficient: flags/survivors
+  * (overwrite, idempotent) land BEFORE the index append, so a crash in
+  * between replays the whole batch (same probe result — the index is
+  * unchanged), and a crash after the append skips everything (the
+  * outputs are already complete).
   *
   * Concurrency: the append rides `commitBucketed`'s CAS, so batch
   * writers and OTHER chunk appenders interleave safely; a rebucket
@@ -49,17 +54,18 @@ import org.apache.spark.sql.functions._
   * failing the batch — the restart re-probes under the landed layout
   * and retries the append with the inherited (new) bucket count.
   *
-  * The ledger binds to ONE checkpoint's batch numbering: deleting the
-  * checkpoint and restarting against the same index resets batch ids
-  * to 0, which the ledger reads as replays — correct for the docs the
-  * old stream already processed (they ARE in the index), but a
-  * genuinely new pipeline over an old index should start from a fresh
-  * index path (or rebucket-migrate the old one into it).
+  * Lost checkpoint: the ledger binds to ONE checkpoint's batch
+  * numbering, so deleting the checkpoint and restarting against the
+  * same index resets batch ids to 0, and the ledger skips every id up
+  * to the old maximum as a replay — correct for the docs the old
+  * stream already processed (they ARE in the index), but a genuinely
+  * new pipeline over an old index should start from a fresh index path
+  * (or rebucket-migrate the old one into it).
   */
 object NearDedup extends org.apache.spark.internal.Logging {
 
-  /** Manifest meta key carrying the last applied foreachBatch id. */
-  val BatchKey = "neardedup_batch"
+  /** The sink's ledger name in the index's commits. */
+  val AppId = "neardedup"
 
   /** What one micro-batch did. `indexVersion` is the index manifest
     * version the batch's append committed (-1 when replayed: nothing
@@ -69,48 +75,6 @@ object NearDedup extends org.apache.spark.internal.Logging {
       dupOfCorpus: Long, dupInChunk: Long, survivors: Long,
       indexVersion: Long, replayed: Boolean,
       compacted: Boolean = false)
-
-  /** Highest batch id recorded in the index's commit ledger, scanning
-    * versions newest-first until one carries [[BatchKey]] — normally
-    * ONE manifest-header read (the latest version is this stream's own
-    * last append); interleaved foreign commits (chunk appends, a
-    * rebucket overwrite, OPTIMIZE) are skipped over, never mistaken
-    * for stream progress. None when the stream has never committed.
-    *
-    * Because `Versioned.vacuum` on the SHARED index can drop the old
-    * manifests that carry the stream's last [[BatchKey]] (foreign
-    * commits land on top, retention sweeps below), the batch id is
-    * ALSO mirrored to `<outPath>/_neardedup_batch` after every append
-    * — a file retention never touches, read here as a second source.
-    * The manifest stays primary (it commits atomically WITH the
-    * bands); the mirror only has to be ≥ any id vacuum could erase,
-    * which holds because it is written after the commit and a crash
-    * between the two leaves the manifest — not yet vacuumable past
-    * foreign commits within one batch turnaround — to answer. */
-  def lastAppliedBatch(spark: SparkSession, indexPath: String,
-      outPath: String): Option[Long] = {
-    val fromMeta = Versioned.latestMeta(spark, indexPath)(
-      _.get(BatchKey).flatMap(s => scala.util.Try(s.toLong).toOption))
-      .map(_._2)
-    // the mirror is SCOPED to its index: a stale mirror left in a
-    // reused out dir must not mark a NEW stream's (fresh-index)
-    // batches as replays — a mirror recording a different index path
-    // is ignored. Paths are compared NORMALIZED (qualified URI), so
-    // the same index spelled with a trailing slash or scheme-qualified
-    // across restarts cannot silently disable the vacuum-erasure
-    // protection (r15 verdict). (An unparseable mirror is also
-    // ignored — the manifest is primary; the mirror only exists for
-    // the vacuum-erased-manifest case.)
-    val fromFile = BatchMirror.read(spark,
-      new org.apache.hadoop.fs.Path(outPath, "_neardedup_batch"), indexPath)
-    (fromMeta ++ fromFile).maxOption
-  }
-
-  private def mirrorBatch(spark: SparkSession, outPath: String,
-      indexPath: String, batchId: Long): Unit =
-    BatchMirror.write(spark,
-      new org.apache.hadoop.fs.Path(outPath, "_neardedup_batch"),
-      indexPath, batchId)
 
   /** Seed an EMPTY index at the minimum layout iff none exists, so the
     * first micro-batch probes against nothing instead of failing.
@@ -169,18 +133,12 @@ object NearDedup extends org.apache.spark.internal.Logging {
       autoCompact: Option[AutoCompact] = None)
       : BatchOutcome = {
     val spark = batch.sparkSession
-    ensureIndex(batch, text, id, indexPath, shingleSize, numHashes, bands)
-    val applied = lastAppliedBatch(spark, indexPath, outPath)
-    if (applied.exists(_ >= batchId)) {
-      // re-converge the mirror on the replay-skip path too: a crash
-      // between commitBands and mirrorBatch followed by a replay-skip
-      // would otherwise leave the mirror permanently behind the
-      // manifest, and a later vacuum could erase the only record of
-      // that batch id (r15 ADVICE). `applied` is the max of both
-      // sources, so rewriting it is monotone.
-      applied.foreach(a => mirrorBatch(spark, outPath, indexPath, a))
-      return BatchOutcome(batchId, -1, -1, -1, -1, -1, replayed = true)
-    }
+    val replayed = BatchOutcome(batchId, -1, -1, -1, -1, -1, replayed = true)
+    val applied = Versioned.txnVersion(spark, indexPath, AppId)
+    if (applied.exists(_ >= batchId)) return replayed
+    // a ledger entry proves the index exists
+    if (applied.isEmpty)
+      ensureIndex(batch, text, id, indexPath, shingleSize, numHashes, bands)
     // one materialization of the (gated) batch: it feeds the probe,
     // the survivor join and the index append — the upstream micro-batch
     // scan + gate would otherwise re-run per consumer
@@ -219,16 +177,15 @@ object NearDedup extends org.apache.spark.internal.Logging {
       Seq(id), "left_semi")
     survivors.write.mode("overwrite")
       .parquet(s"$outPath/survivors/batch=$batchId")
-    val w = Dedup.commitBands(cband, indexPath, bands, buckets = 0,
-      mode = "append", meta = Map(BatchKey -> batchId.toString),
+    val w = try Dedup.commitBands(cband, indexPath, bands, buckets = 0,
+      mode = "append", meta = Map(Versioned.txnKey(AppId) -> batchId.toString),
       sizingRows = 0L) // append inherits the declared layout; the
       // lazy sizing thunk is never forced (ensureIndex guarantees a
       // declared base exists)
-    // after the commit: the vacuum-proof mirror (see lastAppliedBatch)
-    mirrorBatch(spark, outPath, indexPath, batchId)
+    catch { case _: Versioned.ReplayedBatch => return replayed }
     // segment hygiene: fold a backlog of small streamed band segments
-    // once the threshold crosses — a foreign commit the ledger and
-    // band-layout scans skip over by construction (see [[AutoCompact]])
+    // once the threshold crosses — a foreign commit that carries the
+    // ledger forward like any other (see [[AutoCompact]])
     val compacted =
       autoCompact.exists(_.maybeCompact(spark, indexPath).isDefined)
     val m = obs.get

@@ -328,14 +328,14 @@ object AnnRehearsal {
     }
 
     // ---- chunk-size amortization: the OTHER axis of the append
-    // claim. The commit machinery (stage + CAS + manifest + ledger +
-    // mirror) is a FIXED cost per batch — proven decade-invariant vs
+    // claim. The commit machinery (stage + CAS + manifest + ledger)
+    // is a FIXED cost per batch — proven decade-invariant vs
     // INDEX size in the r16 three-decade run — so at production chunk
     // sizes it must amortize: seconds/row from a 1k-row batch to a
     // 100k-row batch should drop ~100x, bottoming out at the marginal
     // per-row assignment+write cost. Measured through the REAL st18
-    // batch path (AnnIngest.processBatch: assignment, ledgered commit,
-    // vacuum-proof mirror), not a stripped-down append. Cohorts are
+    // batch path (AnnIngest.processBatch: assignment, ledgered
+    // commit), not a stripped-down append. Cohorts are
     // id-shifted copies of corpus vectors (in-distribution by
     // construction, localCheckpointed so generation IO is excluded).
     val amortIndex = s"$workDir/ivf_amort"

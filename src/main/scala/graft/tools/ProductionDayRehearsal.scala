@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *   5. maintenance: rebucket/retrain (the indexes' OPTIMIZE) +
   *      VACUUM on both shared indexes — then the checks a 100 TB
   *      operator cares about: a replayed batch still skips (the
-  *      vacuum-proof mirrors), a fresh probe is still correct, and
+  *      carried txn ledger), a fresh probe is still correct, and
   *      the ANN full probe still equals brute force.
   *
   * Prints one JSON line per stage: wall, shuffle bytes where a probe
@@ -292,7 +292,8 @@ object ProductionDayRehearsal {
 
     // ---- the operator's post-maintenance checks
     // (a) a replayed st17 batch still skips: vacuum erased the
-    // manifests that carried the ledger, the outPath mirror answers
+    // manifests that first carried its ledger entry, and the latest
+    // version carries it forward
     val replay = graft.streaming.NearDedup.processBatch(batch1, 1L,
       $"text", "doc_id", bandIndex, out)
     require(replay.replayed,
@@ -305,7 +306,7 @@ object ProductionDayRehearsal {
       $"text", "doc_id", bandIndex, out)
     require(post.admitted == post.dupOfCorpus && post.survivors == 0,
       s"post-maintenance probe missed known copies: $post")
-    // (c) a replayed st18 batch still skips (the _annbatch mirror)
+    // (c) a replayed st18 batch still skips (the carried txn ledger)
     require(graft.streaming.AnnIngest.processBatch(half1, 1L,
       "embedding", cb, ivfIndex).replayed,
       "post-vacuum ANN replay was re-applied")

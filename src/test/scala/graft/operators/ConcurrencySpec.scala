@@ -817,8 +817,8 @@ class ConcurrencySpec extends SparkSpec {
     val vs = Versioned.versions(spark, t)
     assert(vs == (vs.head to vs.last),
       s"surviving versions must be contiguous: $vs")
-    // the ledger scans PAST the foreign compaction commits
-    assert(AnnIngest.lastAppliedBatch(spark, t)
+    // the foreign compaction commits carry the ledger forward
+    assert(Versioned.txnVersion(spark, t, AnnIngest.AppId)
       .contains(streamBatches - 1L))
     // ...and so does the descriptor: the full probe resolves the
     // committed codebook and equals brute force over everything

@@ -21,7 +21,7 @@ class SidecarsSpec extends SparkSpec {
     val dir = tmpDir("sidecar-race")
     val p = new Path(dir, "_ivf_codebook-deadbeef.txt")
     val content = "0:" + (0 until 32).map(_ => "1.0").mkString(",")
-    Sidecars.write(spark, p, content, contentAddressed = true)
+    Sidecars.write(spark, p, content)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val mtime0 = fs.getFileStatus(p).getModificationTime
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
@@ -36,7 +36,7 @@ class SidecarsSpec extends SparkSpec {
         Future {
           var n = 0
           while (!stop.get() && n < 2000) {
-            Sidecars.write(spark, p, content, contentAddressed = true)
+            Sidecars.write(spark, p, content)
             n += 1
           }
         }
@@ -92,8 +92,7 @@ class SidecarsSpec extends SparkSpec {
           seen
         }
         val writers = (0 until 4).map { _ =>
-          Future { Sidecars.write(spark, p, content,
-            contentAddressed = true) }
+          Future { Sidecars.write(spark, p, content) }
         }
         Await.result(Future.sequence(writers), 60.seconds)
         stop.set(true)

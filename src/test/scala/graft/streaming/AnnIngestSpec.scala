@@ -6,8 +6,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The streaming ANN ingest (graft.streaming.AnnIngest) on the r16
-  * snapshot layout: replay idempotence via the `annbatch` commit-meta
-  * ledger (+ vacuum-proof mirror), drift detection against the
+  * snapshot layout: replay idempotence via the carried `txn.anningest`
+  * commit-meta ledger, drift detection against the
   * commit-meta baseline, retrain handoff by construction (batches
   * assign under the COMMITTED codebook), legacy-layout refusal, and
   * checkpoint-restart convergence through a real stop/start. */
@@ -25,6 +25,9 @@ class AnnIngestSpec extends SparkSpec {
 
   private def baselineOf(path: String): Similarity.IvfStats =
     Similarity.loadPersistedIvf(spark, path).get.baseline
+
+  private def applied(path: String): Option[Long] =
+    Versioned.txnVersion(spark, path, AnnIngest.AppId)
 
   test("replay skips via the commit ledger: same batch id twice leaves " +
     "the index, the version chain and the baseline unchanged — a " +
@@ -48,7 +51,7 @@ class AnnIngestSpec extends SparkSpec {
       .select($"vec_id", $"list_id").as[(Long, Long)].collect().toSet
       == rows, "replay changed the index contents")
     assert(baselineOf(path) == base, "replay changed the drift baseline")
-    assert(AnnIngest.lastAppliedBatch(spark, path).contains(0L))
+    assert(applied(path).contains(0L))
   }
 
   test("drift: the first non-empty batch seeds the baseline (an EMPTY " +
@@ -349,23 +352,26 @@ class AnnIngestSpec extends SparkSpec {
     }.getMessage.contains("retrainPersistedIvf"))
   }
 
-  test("vacuum on the index cannot erase the replay ledger (the mirror " +
-    "answers); a legacy plain-dir layout refuses up front") {
+  test("vacuum on the index cannot erase the replay ledger (every " +
+    "commit carries it forward); a legacy plain-dir layout refuses up " +
+    "front") {
     val path = tmpDir("annvacuum") + "/ivf"
     val b0 = vecs((1L to 8L).map(i => (i, (i % 8).toInt)): _*)
     val cb = Similarity.buildCodebook(b0, "embedding", "vec_id", nlist = 8)
     AnnIngest.processBatch(b0, 0L, "embedding", cb, path)
     AnnIngest.processBatch(vecs(100L -> 1), 1L, "embedding", cb, path)
-    // a foreign batch append lands on top (no annbatch key), then
-    // retention sweeps every version below it
+    // a foreign batch append lands on top, then retention sweeps every
+    // version below it — every manifest the stream committed
     Similarity.appendToPersistedIvf(vecs(200L -> 2), "embedding",
       Similarity.loadPersistedIvf(spark, path).get.codebook, path)
     Versioned.vacuum(spark, path, keepLast = 1)
-    assert(Versioned.versions(spark, path).flatMap(v =>
-      Versioned.readMeta(spark, path, v).get(AnnIngest.BatchKey)).isEmpty,
-      "precondition: vacuum erased every manifest ledger entry")
-    assert(AnnIngest.lastAppliedBatch(spark, path).contains(1L),
-      "mirror lost the ledger to vacuum")
+    val survivor = Versioned.versions(spark, path)
+    assert(survivor.size == 1,
+      "precondition: vacuum erased every manifest the stream committed")
+    assert(Versioned.readMeta(spark, path, survivor.head)
+      .get(Versioned.txnKey(AnnIngest.AppId)).contains("1"),
+      "the foreign append did not carry the ledger")
+    assert(applied(path).contains(1L))
     assert(AnnIngest.processBatch(vecs(100L -> 1), 1L, "embedding", cb,
       path).replayed, "post-vacuum replay double-applied")
     // a NEW batch still proceeds
@@ -411,13 +417,13 @@ class AnnIngestSpec extends SparkSpec {
     assert(res.isDefined, "nothing compacted")
     assert(Versioned.versionFiles(spark, path).size < before,
       s"file count did not drop from $before")
-    // the compaction commit carries NO ivf descriptor or annbatch key:
-    // both reads must skip over it to the newest carrying commit
+    // the compaction commit carries NO ivf descriptor (the descriptor
+    // read skips over it) but does carry the ledger forward
     val st = Similarity.loadPersistedIvf(spark, path).get
     assert(st.fingerprint == fpBefore && st.buckets ==
       Similarity.ivfBuckets(8),
       s"descriptor lost to the foreign compaction commit: $st")
-    assert(AnnIngest.lastAppliedBatch(spark, path).contains(3L),
+    assert(applied(path).contains(3L),
       "replay ledger lost to the foreign compaction commit")
     assert(AnnIngest.processBatch(vecs(999L -> 1), 3L, "embedding", cb,
       path).replayed, "post-compaction replay was re-applied")
@@ -435,7 +441,7 @@ class AnnIngestSpec extends SparkSpec {
     // the compaction version under the carried bucket declaration
     assert(!AnnIngest.processBatch(vecs(500L -> 2), 4L, "embedding", cb,
       path).replayed)
-    assert(AnnIngest.lastAppliedBatch(spark, path).contains(4L))
+    assert(applied(path).contains(4L))
   }
 
   test("auto-retrain through a REAL stream: a drifted commit arrives on " +

@@ -191,12 +191,13 @@ class ChangeFeedSourceSpec extends SparkSpec {
     pump()
     assert(Versioned.versions(spark, b) == vB)
     // a new commit to A lands as exactly one more version of B,
-    // carrying its batchId in the manifest meta
+    // carrying the query's ledger entry in the manifest meta
     Versioned.commit(Seq((3, "c"), (4, "dd")).toDF("k", "v"), a, "append")
     pump()
     val vB2 = Versioned.versions(spark, b)
     assert(vB2.size == vB.size + 1, vB2.toString)
-    assert(Versioned.readMeta(spark, b, vB2.last).contains("batchId"))
+    assert(Versioned.readMeta(spark, b, vB2.last).keys
+      .exists(_.startsWith(Versioned.TxnPrefix)))
     assert(Versioned.read(spark, b).as[(Int, String)].collect().toSet ==
       Set((1, "a"), (3, "c")))
   }
@@ -309,19 +310,18 @@ class ChangeFeedSourceSpec extends SparkSpec {
     finally sc.setLocalProperty(StreamExecution.QUERY_ID_KEY, null)
     assert(Versioned.versions(spark, t).size == 8)
     // 8 batches of history, but the next batch's dedup probe reads ONE
-    // manifest: the newest version IS this query's marker
-    val (last1, scanned1) = LakeSink.lastCommitted(spark, t, Some("q1"))
-    assert(last1 == 7 && scanned1 == 1, s"($last1, $scanned1)")
-    // interleaved non-sink commits push the walk back by exactly the
-    // interleave depth — still independent of the 8-deep history
+    // manifest header: the latest version carries the whole ledger
+    def probe(qid: String): (Option[Long], Long) = {
+      Versioned.clearManifestCache()
+      val before = Versioned.manifestReads.get()
+      val last = Versioned.txnVersion(spark, t, qid)
+      (last, Versioned.manifestReads.get() - before)
+    }
+    assert(probe("q1") == ((Some(7L), 1L)))
+    // interleaved non-sink commits carry the entry: still one read
     Versioned.commit(Seq((100, "x")).toDF("k", "v"), t, "append")
     Versioned.commit(Seq((101, "y")).toDF("k", "v"), t, "append")
-    val (last2, scanned2) = LakeSink.lastCommitted(spark, t, Some("q1"))
-    assert(last2 == 7 && scanned2 == 3, s"($last2, $scanned2)")
-    // only a fresh query's FIRST batch pays a full-history walk — it
-    // must prove no marker of its own exists, once
-    val (last3, scanned3) = LakeSink.lastCommitted(spark, t, Some("q_new"))
-    assert(last3 == -1L && scanned3 == Versioned.versions(spark, t).size)
+    assert(probe("q1") == ((Some(7L), 1L)))
   }
 
   test("readChangeFeed: micro-batches deliver row-level change rows — " +

@@ -266,12 +266,24 @@ class EventStreamSpec extends SparkSpec {
 
     val schema = StructType(Seq(StructField("grp", StringType),
       StructField("v", DecimalType(20, 2))))
-    def run(): Unit = {
+    // returns the query's checkpoint-stable id: the fold's ledger name
+    def run(): String = {
       val src = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(stage.toString)
       val q = AggSink.start(src, table, Seq("grp"), "n",
         Seq("v" -> "sum_v"), ckpt)
       try q.processAllAvailable() finally q.stop()
+      q.id.toString
+    }
+    // a replay the way the restarted query delivers it: under its id
+    def replay(qid: String, batch: String, batchId: Long): Unit = {
+      val key = org.apache.spark.sql.execution.streaming.runtime
+        .StreamExecution.QUERY_ID_KEY
+      spark.sparkContext.setLocalProperty(key, qid)
+      try AggSink.foldBatch(
+        spark.read.parquet(stage.resolve(batch).toString),
+        table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId)
+      finally spark.sparkContext.setLocalProperty(key, null)
     }
     def state(): Map[String, (Long, BigDecimal)] =
       Versioned.read(spark, table)
@@ -279,86 +291,40 @@ class EventStreamSpec extends SparkSpec {
         .as[(String, Long, BigDecimal)].collect()
         .map(t => t._1 -> ((t._2, t._3))).toMap
 
-    run()
+    val qid = run()
     val s1 = state()
     assert(s1("a") == ((2L, BigDecimal(3))) &&
       s1("b") == ((2L, BigDecimal(15))) && s1("c") == ((1L, BigDecimal(7))))
-    // the latest manifest carries the folded batchId atomically
-    // (plus the checkpoint-stable queryId pairing the replay walk
-    // keys on)
+    // the latest manifest carries the folded batch's ledger entry,
+    // keyed by the checkpoint-stable query id, atomically
     val v1 = Versioned.versions(spark, table).last
-    assert(Versioned.readMeta(spark, table, v1).get("batchId")
+    assert(Versioned.readMeta(spark, table, v1).get(Versioned.txnKey(qid))
       .contains("1"))
 
     // simulated crash replay: re-folding an already-committed batch
     // must be a no-op (no double counting, no new version)
-    AggSink.foldBatch(
-      spark.read.parquet(stage.resolve("batch1.parquet").toString),
-      table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId = 1L)
+    replay(qid, "batch1.parquet", 1L)
     assert(Versioned.versions(spark, table).last == v1)
     assert(state() == s1)
 
     // restart with the same checkpoint: only the new batch folds
     writeBatch(2, Seq(("a", 100L)))
-    run()
+    assert(run() == qid)
     val s2 = state()
     assert(s2("a") == ((3L, BigDecimal(103))))
     assert(s2("b") == s1("b") && s2("c") == s1("c"))
 
     // an interleaved NON-FOLD commit (an OPTIMIZE-style rewrite with
-    // no batchId meta) must not hide the marker from the replay walk:
-    // a replayed batch stays a no-op, never a double-count
+    // no ledger entry of its own) carries the ledger forward: a
+    // replayed batch stays a no-op, never a double-count
     graft.operators.Versioned.commit(
       graft.operators.Versioned.read(spark, table), table, "overwrite",
       meta = Map("operation" -> "optimize"))
     val vOpt = Versioned.versions(spark, table).last
-    AggSink.foldBatch(
-      spark.read.parquet(stage.resolve("batch2.parquet").toString),
-      table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId = 2L)
+    replay(qid, "batch2.parquet", 2L)
     assert(Versioned.versions(spark, table).last == vOpt,
-      "the replay must skip via the marker WALK, not re-fold because " +
-        "the latest version's meta lacks a batchId")
+      "the replay must skip via the carried ledger, not re-fold")
     assert(state() == s2)
-  }
-
-  test("AggSink replay walk accepts LEGACY markers (batchId but no " +
-    "queryId key): a checkpoint replay with a live queryId onto a " +
-    "pre-upgrade table must not re-fold the committed batch") {
-    import graft.operators.Versioned
-    val table = tmpDir("aggsink_legacy") + "/rollup"
-    // batch 0 folded OUTSIDE a streaming query: queryId = None, so the
-    // marker carries batchId only — exactly a pre-stamp build's marker
-    AggSink.foldBatch(Seq(("a", 2L), ("b", 5L)).toDF("grp", "v"),
-      table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId = 0L)
-    val v0 = Versioned.versions(spark, table).last
-    val m0 = Versioned.readMeta(spark, table, v0)
-    assert(m0.contains("batchId") && !m0.contains("queryId"),
-      s"precondition: legacy marker shape, got $m0")
-    val s0 = Versioned.read(spark, table)
-      .select($"grp", $"n").as[(String, Long)].collect().toMap
-    // replay the SAME batch under a live queryId (post-upgrade restart
-    // from the old checkpoint): the legacy marker must match
-    val key = org.apache.spark.sql.execution.streaming.runtime
-      .StreamExecution.QUERY_ID_KEY
-    spark.sparkContext.setLocalProperty(key, "11111111-replay-query")
-    try {
-      AggSink.foldBatch(Seq(("a", 2L), ("b", 5L)).toDF("grp", "v"),
-        table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId = 0L)
-      assert(Versioned.versions(spark, table).last == v0,
-        "a legacy (queryId-less) marker must satisfy a live-queryId " +
-          "replay walk — re-folding double-counts")
-      // a genuinely NEW batch under the live queryId still folds,
-      // and its marker now carries the queryId stamp
-      AggSink.foldBatch(Seq(("a", 100L)).toDF("grp", "v"),
-        table, Seq("grp"), "n", Seq("v" -> "sum_v"), batchId = 1L)
-      val v1 = Versioned.versions(spark, table).last
-      assert(v1 != v0)
-      assert(Versioned.readMeta(spark, table, v1).get("queryId")
-        .contains("11111111-replay-query"))
-      val s1 = Versioned.read(spark, table)
-        .select($"grp", $"n").as[(String, Long)].collect().toMap
-      assert(s1("a") == s0("a") + 1 && s1("b") == s0("b"))
-    } finally spark.sparkContext.setLocalProperty(key, null)
   }
 
   test("AggSink merges NULL-keyed groups null-safely: one row per " +

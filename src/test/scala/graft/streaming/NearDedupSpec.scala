@@ -23,11 +23,19 @@ class NearDedupSpec extends SparkSpec {
   private def docs(rows: (Long, Int)*): DataFrame =
     rows.map { case (id, k) => (id, text(k)) }.toDF("doc_id", "text")
 
-  private def batchKeys(index: String): Seq[(Long, Long)] =
-    Versioned.versions(spark, index).sorted.flatMap { v =>
-      Versioned.readMeta(spark, index, v).get(NearDedup.BatchKey)
-        .map(b => (v, b.toLong))
+  /** (version, batch id) for each version that ADVANCED the sink's
+    * ledger entry — later commits carry the entry forward unchanged. */
+  private def batchKeys(index: String): Seq[(Long, Long)] = {
+    val vs = Versioned.versions(spark, index).sorted
+    val ids = vs.map(v => Versioned.readMeta(spark, index, v)
+      .get(Versioned.txnKey(NearDedup.AppId)).map(_.toLong))
+    vs.zip(ids).zip(None +: ids).collect {
+      case ((v, Some(b)), prev) if !prev.contains(b) => (v, b)
     }
+  }
+
+  private def applied(index: String): Option[Long] =
+    Versioned.txnVersion(spark, index, NearDedup.AppId)
 
   test("streaming near-dedup: cross-batch copies die via the index, " +
     "in-batch copies via keep-first, across a checkpoint restart") {
@@ -84,8 +92,7 @@ class NearDedupSpec extends SparkSpec {
       s"batch ids not strictly increasing: $keys")
     assert(keys.size == vs.size - 1,
       s"expected one ledgered append per batch over a seed: $vs vs $keys")
-    assert(NearDedup.lastAppliedBatch(spark, index, out)
-      .contains(keys.map(_._2).max))
+    assert(applied(index).contains(keys.map(_._2).max))
 
     // ---- replay idempotence, driven directly (the schedule Spark
     // takes when the sink ran but the checkpoint commit was lost):
@@ -146,16 +153,17 @@ class NearDedupSpec extends SparkSpec {
     } finally Versioned.commitTestHook = () => ()
     // the failed batch must leave NO ledger entry — a half-applied
     // batch that recorded itself would be skipped forever on restart
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(0L))
+    assert(applied(index).contains(0L))
     // the restart's replay proceeds (not ledgered), probes the
     // MIGRATED index — doc 11 still collides with doc 1 because the
     // rebucket re-laid out every row — and appends under 32 buckets
     val r = NearDedup.processBatch(b1, 1L, $"text", "doc_id", index, out)
     assert(!r.replayed && r.dupOfCorpus == 1 && r.survivors == 1, s"$r")
     assert(Versioned.bucketSpec(spark, index).exists(_._2 == 32))
-    // the ledger survives the migration: batch 1's entry sits past the
-    // rebucket's (key-less) overwrite and a duplicate delivery skips
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(1L))
+    // the ledger survives the migration: the rebucket's overwrite
+    // carried batch 0's entry, batch 1's append advanced it, and a
+    // duplicate delivery skips
+    assert(applied(index).contains(1L))
     assert(NearDedup.processBatch(b1, 1L, $"text", "doc_id", index, out)
       .replayed)
     assert(spark.read.parquet(s"$out/survivors")
@@ -163,8 +171,8 @@ class NearDedupSpec extends SparkSpec {
   }
 
   test("vacuum on the shared index cannot erase the replay ledger " +
-    "(the outPath mirror answers), and a legacy plain-parquet index " +
-    "refuses instead of being silently shadowed") {
+    "(every commit carries it forward), and a legacy plain-parquet " +
+    "index refuses instead of being silently shadowed") {
     val base = tmpDir("neardedup_vacuum")
     val index = s"$base/index"
     val out = s"$base/out"
@@ -172,17 +180,19 @@ class NearDedupSpec extends SparkSpec {
       index, out)
     NearDedup.processBatch(docs(10L -> 10), 1L, $"text", "doc_id",
       index, out)
-    // a foreign chunk append lands on top (no BatchKey), then routine
-    // retention sweeps every version below it — including both
-    // manifests that carried the stream's ledger entries
+    // a foreign chunk append lands on top, then routine retention
+    // sweeps every version below it — including both manifests that
+    // first recorded the stream's batches
     Dedup.writeBandIndex(docs(100L -> 100), $"text", "doc_id", index,
       mode = "append")
     Versioned.vacuum(spark, index, keepLast = 1)
-    assert(Versioned.versions(spark, index).flatMap(v =>
-      Versioned.readMeta(spark, index, v).get(NearDedup.BatchKey)).isEmpty,
-      "precondition: vacuum erased every manifest ledger entry")
-    // the mirror still answers: the replay is detected, not re-applied
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(1L))
+    val survivor = Versioned.versions(spark, index)
+    assert(survivor.size == 1,
+      "precondition: vacuum erased every manifest the stream committed")
+    // the foreign append carried the entry: the replay is detected
+    assert(Versioned.readMeta(spark, index, survivor.head)
+      .get(Versioned.txnKey(NearDedup.AppId)).contains("1"))
+    assert(applied(index).contains(1L))
     assert(NearDedup.processBatch(docs(10L -> 10), 1L, $"text", "doc_id",
       index, out).replayed,
       "post-vacuum replay double-applied — batch would self-flag")
@@ -191,13 +201,13 @@ class NearDedupSpec extends SparkSpec {
       "doc_id", index, out)
     assert(!next.replayed && next.dupOfCorpus == 1)
 
-    // a STALE mirror in a reused out dir must not mark a NEW stream's
-    // (fresh-index) batches as replays: the mirror is index-scoped
+    // the ledger lives in the index: a fresh index behind a reused out
+    // dir starts its own ledger
     val index2 = s"$base/index2"
     val fresh = NearDedup.processBatch(docs(1L -> 1), 0L, $"text",
       "doc_id", index2, out)
     assert(!fresh.replayed,
-      "stale mirror from the old index replay-skipped a fresh stream")
+      "the old index's ledger replay-skipped a fresh stream")
 
     // legacy plain-parquet band index (loose .parquet files, no commit
     // log): seeding a snapshot over it would shadow every legacy band
@@ -219,56 +229,6 @@ class NearDedupSpec extends SparkSpec {
     fs.mkdirs(new org.apache.hadoop.fs.Path(orphaned, Versioned.LogDir))
     assert(!NearDedup.processBatch(docs(3L -> 3), 0L, $"text", "doc_id",
       orphaned, s"$base/out3").replayed)
-  }
-
-  test("mirror protocol: slash-variant index spellings share one scope, " +
-    "replay-skip re-converges a lagging mirror, unencodable paths refuse") {
-    val base = tmpDir("neardedup_mirror")
-    val index = s"$base/index"
-    val out = s"$base/out"
-    NearDedup.processBatch(docs(1L -> 1), 0L, $"text", "doc_id", index, out)
-    NearDedup.processBatch(docs(2L -> 2), 1L, $"text", "doc_id", index, out)
-    // replay-skip re-converges a LAGGING mirror (crash between
-    // commitBands and mirrorBatch): wind the mirror back to batch 0
-    // while the MANIFEST still records batch 1 — the skip must rewrite
-    // the mirror to the highest applied id, not leave it behind
-    val mirrorP = new org.apache.hadoop.fs.Path(out, "_neardedup_batch")
-    val mirrorIndex = graft.operators.Sidecars.parseFlatJson(
-      graft.operators.Sidecars.read(spark, mirrorP).get, mirrorP)("index")
-    graft.operators.Sidecars.write(spark, mirrorP,
-      s"""{"batch":0,"index":"$mirrorIndex"}""")
-    assert(NearDedup.processBatch(docs(2L -> 2), 1L, $"text", "doc_id",
-      index, out).replayed) // manifest still has batch 1: skip + heal
-    // now vacuum erases every manifest ledger entry: ONLY the healed
-    // mirror knows batch 1
-    Dedup.writeBandIndex(docs(100L -> 100), $"text", "doc_id", index,
-      mode = "append")
-    Versioned.vacuum(spark, index, keepLast = 1)
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(1L),
-      "replay-skip left the mirror lagging — vacuum erased batch 1")
-    // the SAME index spelled with a trailing slash must still see that
-    // mirror (normalized comparison), so the replay is detected
-    assert(NearDedup.lastAppliedBatch(spark, s"$index/", out).contains(1L),
-      "slash-variant index path silently ignored the mirror")
-    assert(NearDedup.processBatch(docs(2L -> 2), 1L, $"text", "doc_id",
-      s"$index/", out).replayed)
-    // a PRE-NORMALIZATION mirror recorded the RAW index path (no
-    // scheme qualification): it must still be accepted — reading it as
-    // foreign-scoped would silently drop exactly the vacuum-erasure
-    // protection it carries for streams upgraded in place
-    graft.operators.Sidecars.write(spark, mirrorP,
-      s"""{"batch":1,"index":"$index"}""")
-    assert(!index.startsWith("file:") && mirrorIndex.startsWith("file:"),
-      s"precondition: raw $index vs normalized $mirrorIndex")
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(1L),
-      "legacy raw-path mirror read as foreign-scoped")
-    // a comma in the index path cannot round-trip through the mirror's
-    // flat-JSON format: refused loudly at the first batch
-    val weird = s"$base/weird,index"
-    assert(intercept[IllegalArgumentException] {
-      NearDedup.processBatch(docs(3L -> 3), 0L, $"text", "doc_id",
-        weird, s"$base/out2")
-    }.getMessage.contains("unencodable"))
   }
 
   test("property: with ids monotone across batches, streaming survivors " +
@@ -337,10 +297,10 @@ class NearDedupSpec extends SparkSpec {
       assert(!r.replayed && r.admitted == 2)
       val vs = Versioned.versions(spark, index).sorted
       assert(vs == (vs.min to vs.max), s"non-contiguous versions: $vs")
-      // exactly one ledgered batch; the foreign append carries no key,
-      // and lastAppliedBatch skips over it even when it landed LAST
+      // exactly one ledgered batch; the foreign append carries the
+      // entry forward even when it landed LAST
       assert(batchKeys(index).map(_._2) == Seq(0L))
-      assert(NearDedup.lastAppliedBatch(spark, index, out).contains(0L))
+      assert(applied(index).contains(0L))
       // no append was lost: both writers' band rows are in the index
       val ids = Versioned.read(spark, index).select($"doc_id")
         .as[Long].collect().toSet
@@ -370,8 +330,8 @@ class NearDedupSpec extends SparkSpec {
     assert(Versioned.fileStats(spark, index).size <
       Dedup.MinIndexBuckets + 6,
       s"backlog did not fold: ${Versioned.fileStats(spark, index).size}")
-    // the ledger scans past the optimize commits...
-    assert(NearDedup.lastAppliedBatch(spark, index, out).contains(4L))
+    // the optimize commits carry the ledger...
+    assert(applied(index).contains(4L))
     assert(NearDedup.processBatch(docs(999L -> 999), 4L, $"text",
       "doc_id", index, out, autoCompact = policy).replayed)
     // ...and a post-fold batch still classifies against EVERY folded
