@@ -467,12 +467,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * the CHUNK: the chunk is signatured and shuffled; the corpus
     * contributes only the index join — its documents are never read.
     *
-    * Scale split, measured over three index decades (ProbeRehearsal,
-    * 18k/1.8M/18M index rows, same 1× chunk): the probe's SHUFFLE is
-    * byte-identical at every decade (231,319 bytes — the chunk bands
-    * moving once into the index's bucket layout; the index side moves
-    * ZERO bytes), while the probe's index-side columnar SCAN grows
-    * with the index (wall 1.0 → 1.0 → 2.3 s single-box). That split
+    * Scale split, measured over three index decades (18k/1.8M/18M
+    * index rows, same 1× chunk; PERFORMANCE.md, "dd10 probe across
+    * THREE decades"): the probe's SHUFFLE is byte-identical at every
+    * decade (231,319 bytes — the chunk bands moving once into the
+    * index's bucket layout; the index side moves ZERO bytes), while
+    * the probe's index-side columnar SCAN grows with the index (wall
+    * 1.0 → 1.0 → 2.3 s single-box). That split
     * is the design: band hashes are uniform, so no static layout can
     * skip index row groups for an arbitrary chunk — the scan term is
     * irreducible but embarrassingly parallel (scales with executors,

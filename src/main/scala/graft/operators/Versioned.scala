@@ -303,12 +303,14 @@ object Versioned extends org.apache.spark.internal.Logging {
     // Read at EXACTLY baseV: reading "latest" separately would leave
     // a window where a just-landed rename's mapping is overwritten by
     // the pre-rename one — and the commit loop's contract merge keys
-    // its inherited-vs-explicit decision on baseV's values.
+    // its inherited-vs-explicit decision on baseV's values. With no
+    // base there is nothing to inherit (`None` would mean "latest").
     val mapping =
       if (meta.contains(ColumnMapping.ColMapKey) ||
           meta.contains(ColumnMapping.ColDropKey))
         ColumnMapping.fromMeta(meta)
-      else if (mode == "append") columnMapping(spark, table, baseV)
+      else if (mode == "append" && baseV.isDefined)
+        columnMapping(spark, table, baseV)
       else ColumnMapping.empty
     // the bucket column is translated to its physical name (the
     // declared layout is keyed in the physical space — rename of a
@@ -2485,17 +2487,14 @@ object Versioned extends org.apache.spark.internal.Logging {
   private def manifestPath(root: Path, v: Long): Path =
     new Path(root, s"$LogDir/$v.manifest")
 
+  /** A missing pointer is the open's FileNotFoundException, caught
+    * with every other failure: no `exists` probe first. */
   private def readLatestPointer(fs: FileSystem, root: Path): Option[Long] =
     try {
-      val p = new Path(root, s"$LogDir/$LatestPointer")
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim
-        finally in.close()
-        scala.util.Try(s.toLong).toOption.filter(_ >= 0)
-      }
+      val in = fs.open(new Path(root, s"$LogDir/$LatestPointer"))
+      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+      finally in.close()
+      scala.util.Try(s.toLong).toOption.filter(_ >= 0)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Overwrite-rename the pointer to `v`. Best-effort by contract:

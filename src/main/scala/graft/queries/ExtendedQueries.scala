@@ -689,10 +689,10 @@ object ExtendedQueries {
         // branch only, and the r19 form's branches therefore hashed
         // differently — the runtime plan re-scanned lineitem after
         // all (plans/r20/q15_top_supplier_executed_before.txt; the
-        // r19 reuse claim was wrong). Semantics unchanged: a
-        // null-suppkey group could never survive the supplier
-        // equi-join, and the oracle's original scalar-subquery SQL
-        // re-proves the hashes.
+        // r19 reuse claim was wrong). A null-suppkey group never
+        // survives the supplier equi-join but could hold the max, so
+        // the oracle's `rev` carries the same predicate: the two forms
+        // agree on nullable data too (TPC-H's l_suppkey has no nulls).
         val rev = t(s, dir, "lineitem")
           .where($"l_shipdate" >= lit("1996-01-01").cast("timestamp") &&
             $"l_shipdate" < lit("1996-04-01").cast("timestamp") &&
@@ -714,6 +714,7 @@ object ExtendedQueries {
           FROM lineitem
           WHERE l_shipdate >= CAST('1996-01-01' AS TIMESTAMP)
             AND l_shipdate < CAST('1996-04-01' AS TIMESTAMP)
+            AND l_suppkey IS NOT NULL
           GROUP BY l_suppkey)
         SELECT s_suppkey, s_name,
           CAST(rev_e4 AS DOUBLE) / 10000.0 AS total_rev

@@ -215,7 +215,7 @@ private[sources] final class BucketKeyedPartition(bucket: Int,
 /** Bytes a graft DSv2 scan PLANNED to read, summed from its input
   * partitions' file lengths — the v2 counterpart of the v1 scan's
   * `filesSize` metric (which the ParquetScan delegate does not
-  * surface), so the rehearsal tools can attribute bucket pruning in
+  * surface), so `PlanMetrics.bytesRead` can attribute bucket pruning in
   * bytes on snapshot-table probes. */
 private[graft] object ScanBytes {
   def plannedBytes(p: org.apache.spark.sql.execution.SparkPlan)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Analytic-join decade rehearsal: run the six multi-join analytic
   * queries (q3/q5/q8/q9/q18/q21) against a testdata directory —
   * typically the 1× sf0.1 tables and their ScaleData 10×/100×
@@ -41,15 +39,7 @@ object JoinRehearsal {
   def main(args: Array[String]): Unit = {
     require(args.length == 2, "usage: JoinRehearsal <dir> <label>")
     val Array(dir, label) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-join-rehearsal")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val defs = graft.QueryRegistry.all.toMap
     Queries.foreach { name =>

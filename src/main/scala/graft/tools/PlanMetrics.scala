@@ -5,12 +5,15 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
-/** Executed-plan metric attribution shared by the rehearsal tools
-  * (ProbeRehearsal / AnnRehearsal / NearDedupRehearsal) — the same
-  * numbers the Spark UI shows, read off the plan after an action, no
-  * listener race. One implementation: a future fix (a new AQE wrapper
-  * node, reused-exchange dedup) lands in every rehearsal at once
-  * instead of silently skewing whichever tool was missed. */
+/** Executed-plan metric attribution shared by JoinRehearsal and the
+  * plan specs — the same numbers the Spark UI shows, read off the plan
+  * after an action, no listener race. One implementation: a future fix
+  * (a new AQE wrapper node, reused-exchange dedup) lands in every
+  * caller at once instead of silently skewing whichever was missed.
+  * The probe, ANN and near-dedup decade numbers it was first written
+  * for are in PERFORMANCE.md ("dd10 probe across THREE decades",
+  * "scan-vs-shuffle attribution, measured", "r16 ANN three-decade
+  * rehearsal"). */
 private[graft] object PlanMetrics {
 
   private def resolve(p: SparkPlan): SparkPlan = p match {
@@ -31,13 +34,6 @@ private[graft] object PlanMetrics {
       .flatMap(_.metrics.collect {
         case (k, m) if k == "shuffleBytesWritten" => m.value
       }).sum
-
-  /** Rows emitted by every SCAN (leaf) in the executed plan —
-    * separates a probe's parallelizable scan term from its shuffle. */
-  def scanRows(df: DataFrame): Long =
-    subtree(df.queryExecution.executedPlan)
-      .collect { case s if s.children.isEmpty => s }
-      .flatMap(_.metrics.get("numOutputRows").map(_.value)).sum
 
   /** Bytes each scan actually selected ("size of files read") —
     * directory/bucket pruning shows up here, not in row counts. V1

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-job wall-clock attribution for ONE declared query — the local
   * stand-in for the Spark UI's Jobs page (guide §1.1/§7.1; the bench
@@ -13,43 +12,40 @@ import org.apache.spark.sql.SparkSession
   * Args: <sfDir> <queryName> [repeats]
   */
 object ProfileQuery {
+  private val FenceKey = "graft.profilequery.fence"
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: ProfileQuery <sfDir> <queryName> [repeats]")
     val sfDir = args(0)
     val name = args(1)
     val repeats = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.shuffle.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     // same JVM warmup as the bench
     spark.range(1000000).selectExpr("sum(id)").collect()
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
     val done = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
+    val fenceJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new java.util.concurrent.Semaphore(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        // the last stage's name is the action's call site — the most
-        // precise "which line of ours caused this job" signal available
-        val desc = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .filter(_.nonEmpty)
-          .orElse(js.stageInfos.lastOption.map(_.name))
-          .getOrElse("")
-        jobs.put(js.jobId, (desc, js.time))
+        val props = Option(js.properties)
+        if (props.exists(_.getProperty(FenceKey) != null))
+          fenceJobs.add(js.jobId)
+        else {
+          // the last stage's name is the action's call site — the most
+          // precise "which line of ours caused this job" signal available
+          val desc = props
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .filter(_.nonEmpty)
+            .orElse(js.stageInfos.lastOption.map(_.name))
+            .getOrElse("")
+          jobs.put(js.jobId, (desc, js.time))
+        }
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit = {
-        Option(jobs.remove(je.jobId)).foreach { case (desc, t0) =>
+        if (fenceJobs.remove(je.jobId)) fenced.release()
+        else Option(jobs.remove(je.jobId)).foreach { case (desc, t0) =>
           done.add((je.jobId, desc, je.time - t0))
         }
       }
@@ -92,19 +88,17 @@ object ProfileQuery {
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      // drain the async listener bus: every started job has ended once
-      // count() returned, so poll until the in-flight map empties (the
-      // fixed 800 ms sleep could attribute slow job-end events to the
-      // next repeat or drop them — r19 ADVICE); bounded for safety
-      val deadline = System.nanoTime() + 5000000000L
-      while (!jobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
-      // then until `done` stops growing for a quiet 50 ms: a job-end can
-      // still be on its way from the in-flight map to `done`
-      var seen = -1
-      while (done.size != seen && System.nanoTime() < deadline) {
-        seen = done.size
-        Thread.sleep(50)
-      }
+      // fence the async listener bus: one tagged one-task job, posted
+      // after every job of the count(). The shared queue delivers events
+      // in posting order, so once the fence's end is seen every earlier
+      // job's start and end have been handled. It stays out of `done`.
+      val sc = spark.sparkContext
+      sc.setLocalProperty(FenceKey, "true")
+      try sc.parallelize(Seq(0), 1).count()
+      finally sc.setLocalProperty(FenceKey, null)
+      if (!fenced.tryAcquire(10, java.util.concurrent.TimeUnit.SECONDS))
+        System.err.println("WARN: listener fence not seen within 10 s; " +
+          "this run's job breakdown may be incomplete")
       println(f"== run $r: $name rows=$n wall=$sec%.3f s")
       val items = done.toArray(Array.empty[(Int, String, Long)]).sortBy(_._1)
       val total = items.map(_._3).sum

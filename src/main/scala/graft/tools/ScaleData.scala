@@ -30,61 +30,36 @@ import org.apache.spark.sql.functions._
   * isometry: within-copy cosine structure exact, cross-copy cosines
   * decorrelate to ~0).
   *
-  * With `documents` instead, ONLY the documents corpus is derived
-  * (same permuted-copy recipe) — the relational tables are skipped
-  * entirely, which is what the dd10/st16 rehearsals read and the only
-  * mode where factors past 100 are sane (1000× lineitem would be
-  * 600M rows of data nothing in the rehearsal touches). At 1000
-  * copies over the 9! = 362,880 letter permutations ~1–2 coincident
-  * copy PAIRS are expected (birthday bound) — a few thousand extra
-  * cross-copy near-dup rows in a 5M-doc corpus, noted because it
-  * slightly ENLARGES the index's duplicate structure, i.e. it can
-  * only overstate, never flatter, probe-side cost.
+  * The corpus-only derivations past 100× (PERFORMANCE.md, "Round 14
+  * (cont.): the THIRD decade — 1000× rehearsals" and "r15 ANN
+  * third-decade rehearsal") went with the rehearsal mains that read
+  * them.
   *
-  * With `embeddings`, ONLY the embedding corpus is derived (same
-  * sign-flip isometry recipe, copy 0 = identity) — the AnnRehearsal
-  * counterpart of `documents`, and like it sane past 100×.
-  *
-  * Usage: ScaleData <srcDir> <dstDir> <factor> [corpus|documents|embeddings]
+  * Usage: ScaleData <srcDir> <dstDir> <factor> [corpus]
   */
 object ScaleData {
   def main(args: Array[String]): Unit = {
     require(args.length == 3 || args.length == 4,
-      "usage: ScaleData <srcDir> <dstDir> <factor> " +
-        "[corpus|documents|embeddings]")
+      "usage: ScaleData <srcDir> <dstDir> <factor> [corpus]")
     val Array(src, dst, fs) = args.take(3)
     val mode = if (args.length == 4) args(3) else ""
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[32]"))
-      .appName("graft-scale-data")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession()
     derive(spark, src, dst, fs.toInt, mode)
     spark.stop()
   }
 
-  /** The derivation itself, on a CALLER-OWNED session (specs and
-    * composed rehearsals call this; `main` wraps it with its own
-    * session and stop). */
+  /** The derivation itself, on a CALLER-OWNED session (specs call
+    * this; `main` wraps it with its own session and stop). */
   def derive(spark: SparkSession, src: String, dst: String,
       factor: Int, mode: String = ""): Unit = {
-    require(mode.isEmpty || mode == "corpus" || mode == "documents" ||
-      mode == "embeddings", s"unknown mode: $mode")
+    require(mode.isEmpty || mode == "corpus", s"unknown mode: $mode")
     val scaleCorpus = mode == "corpus"
-    val documentsOnly = mode == "documents"
-    val embeddingsOnly = mode == "embeddings"
-    val maxFactor = if (documentsOnly || embeddingsOnly) 1000 else 100
-    require(factor >= 1 && factor <= maxFactor,
-      s"factor out of range (max $maxFactor for mode '$mode'): $factor")
+    require(factor >= 1 && factor <= 100, s"factor out of range: $factor")
     require(!src.contains("/root/testdata") || dst.startsWith("/tmp"),
       "derived data must land under /tmp")
-    spark.sparkContext.setLogLevel("WARN")
 
     val copyVerbatim =
-      if (documentsOnly || embeddingsOnly) Nil
-      else Seq("region", "nation", "customer", "supplier", "part") ++
+      Seq("region", "nation", "customer", "supplier", "part") ++
         (if (scaleCorpus) Nil else Seq("documents", "embeddings"))
     copyVerbatim.foreach { t =>
       spark.read.parquet(s"$src/$t.parquet")
@@ -99,35 +74,25 @@ object ScaleData {
     def scaled(t: String)(shift: (org.apache.spark.sql.DataFrame, Int)
         => org.apache.spark.sql.DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$t.parquet")
-      // batches of <=100 copies per write keep the union plan bounded
-      // when factors reach 1000 (a single 1000-child Union is all
-      // analyzer/codegen overhead for zero execution win)
-      (0 until factor).grouped(100).zipWithIndex.foreach {
-        case (batch, bi) =>
-          batch.map(i => shift(base, i))
-            .reduce(_.unionByName(_))
-            .write
-            .mode(if (bi == 0) SaveMode.Overwrite else SaveMode.Append)
-            .parquet(s"$dst/$t.parquet")
-      }
+      (0 until factor).map(i => shift(base, i))
+        .reduce(_.unionByName(_))
+        .write.mode(SaveMode.Overwrite).parquet(s"$dst/$t.parquet")
       println(s"scaled $t x$factor -> " +
         spark.read.parquet(s"$dst/$t.parquet").count())
     }
 
-    if (!documentsOnly && !embeddingsOnly) {
-      scaled("orders") { (df, i) =>
-        df.withColumn("o_orderkey", col("o_orderkey") + lit(i * OrderShift))
-      }
-      scaled("lineitem") { (df, i) =>
-        df.withColumn("l_orderkey", col("l_orderkey") + lit(i * OrderShift))
-      }
-      scaled("events") { (df, i) =>
-        df.withColumn("event_id", col("event_id") + lit(i * EventShift))
-          .withColumn("user_id", col("user_id") + lit(i * UserShift))
-      }
+    scaled("orders") { (df, i) =>
+      df.withColumn("o_orderkey", col("o_orderkey") + lit(i * OrderShift))
+    }
+    scaled("lineitem") { (df, i) =>
+      df.withColumn("l_orderkey", col("l_orderkey") + lit(i * OrderShift))
+    }
+    scaled("events") { (df, i) =>
+      df.withColumn("event_id", col("event_id") + lit(i * EventShift))
+        .withColumn("user_id", col("user_id") + lit(i * UserShift))
     }
 
-    if (scaleCorpus || documentsOnly || embeddingsOnly) {
+    if (scaleCorpus) {
       val DocShift = 10000000L
       // copy i's letter permutation (copy 0 = identity), derived by a
       // fixed LCG Fisher-Yates so the mapping is stable across JVMs
@@ -148,13 +113,13 @@ object ScaleData {
         }
         new String(a)
       }
-      if (!embeddingsOnly) scaled("documents") { (df, i) =>
+      scaled("documents") { (df, i) =>
         df.withColumn("doc_id", col("doc_id") + lit(i * DocShift))
           .withColumn("text",
             translate(col("text"), letters + letters.toUpperCase,
               permOf(i) + permOf(i).toUpperCase))
       }
-      if (!documentsOnly) scaled("embeddings") { (df, i) =>
+      scaled("embeddings") { (df, i) =>
         // per-(copy, dimension) sign flips: an isometry of the copy;
         // copy 0 stays the identity so 1x comparisons hold
         val shifted = df.withColumn("vec_id",

@@ -128,8 +128,20 @@ class PlanSpec extends SparkSpec {
   private def lineitemScans(p: String): Int =
     "lineitem\\.parquet".r.findAllIn(p).length
 
+  /** The executed adaptive plan after AQE's runtime rewrites: collect
+    * THIS QueryExecution (a count() would build a different one), then
+    * keep the part above `== Initial Plan ==`. */
+  private def finalPlanOf(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    val finalPlan = p.split("== Initial Plan ==").head
+    assert(finalPlan.contains("isFinalPlan=true"), p)
+    finalPlan
+  }
+
   test("q21's EXISTS/NOT-EXISTS correlation planned without nested loops") {
-    val p = planOf("q21_waiting_supplier")
+    val p = finalPlanOf("q21_waiting_supplier")
     assert(!p.contains("NestedLoop"),
       "correlation fell back to a nested-loop join:\n" + p)
     // the per-order counts ride a WINDOW over the single l_orderkey
@@ -143,7 +155,7 @@ class PlanSpec extends SparkSpec {
 
   test("q17's per-part average threshold is a window, not a second " +
     "scan+aggregate of lineitem joined back (optimization r19)") {
-    val p = planOf("q17_small_quantity")
+    val p = finalPlanOf("q17_small_quantity")
     assert(p.contains("Window"), p)
     assert(!p.contains("NestedLoop"), p)
     assert(lineitemScans(p) == 1,
@@ -154,11 +166,7 @@ class PlanSpec extends SparkSpec {
     "runtime (AQE ReusedExchange in the executed plan — optimization " +
     "r20; needs the explicit isNotNull that makes the subtrees " +
     "canonically identical)") {
-    val df = SparkEntry.queries("q15_top_supplier")(spark, sfDir)
-    df.collect() // finalize THIS QueryExecution's adaptive plan
-    val p = df.queryExecution.executedPlan.toString
-    val finalPlan = p.split("== Initial Plan ==").head
-    assert(finalPlan.contains("isFinalPlan=true"), p)
+    val finalPlan = finalPlanOf("q15_top_supplier")
     assert(finalPlan.contains("ReusedExchange"),
       "the max-of-rev branch re-scanned lineitem instead of reusing " +
         "the groupBy shuffle:\n" + finalPlan)
